@@ -189,9 +189,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed to Int up front: a non-numeric value must fail HERE with a
-    // clear error, not reach the JSON line and corrupt the record
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
+    val cpus = Engine.cpus
     // optional subset filter (comma-separated query names) for
     // cross-round A/B runs: restricting a fresh JVM to exactly an older
     // record's query set separates suite-growth JVM pressure (GC /
@@ -210,22 +208,7 @@ object Bench {
     // burst-throttled environments: external interference only ever adds
     // time, so the minimum is the best estimator of the code's true cost.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
-    val spark = Engine.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      // streaming state partitions sized to the replay's state volume
-      // (the statePinnedSession sizing rule, applied at this SF): the
-      // sf0.1 stream-stream joins hold ~40k rows of state — 2 shards
-      // carry that comfortably, and the per-batch commit cost is per
-      // shard per store. Measured min-of-3 at sf0.1, same host window:
-      // 8 shards → 3.46/3.35/4.11 s (left/right/full), 2 → 2.68/2.50/
-      // 3.07, 1 → no further gain (2.60/2.57/3.16) — the knee is 2. A
-      // real deployment raises this with state volume, not CPU count.
-      .config("spark.graft.stream.statePartitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench")
     // untimed warmup: JIT + codegen + parquet footer caches
     try SparkEntry
       .queries("q_agg_pricing_summary")(spark, sfDir)
@@ -304,10 +287,10 @@ object Bench {
     val calRatio = calibration.map(_ / CalibrationRefSec)
     val mins = timed.map(n => n -> samples(n).min)
     val qs = mins
-      .map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
+      .map { case (k, v) => Json.str(k) + f":$v%.3f" }
       .mkString("{", ",", "}")
     val meds = timed
-      .map(n => "\"" + n + f"""\":${median(samples(n))}%.3f""")
+      .map(n => Json.str(n) + f":${median(samples(n))}%.3f")
       .mkString("{", ",", "}")
     // environment-suspect flags, in the record itself: a median that
     // sits >1.5x above the same JVM's min means at least half the
@@ -320,8 +303,8 @@ object Bench {
     // cross-round comparisons must use its min with that caveat
     val suspect = timed
       .filter(n => samples(n).min > 0 && median(samples(n)) / samples(n).min > 1.5)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val retimedJson = retimed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      .map(Json.str).mkString("[", ",", "]")
+    val retimedJson = retimed.map(Json.str).mkString("[", ",", "]")
     val total = mins.map(_._2).sum
     val calS = calibration.map(c => f"$c%.3f").getOrElse("null")
     val calR = calRatio.map(r => f"$r%.2f").getOrElse("null")
@@ -329,18 +312,19 @@ object Bench {
     // {} on a clean record — a non-empty map is a red flag the driver
     // and the next round's comparison must see in the JSON itself
     val failedJson = failures.toSeq.sorted
-      .map { case (k, v) => "\"" + k + s"""\":$v""" }
+      .map { case (k, v) => Json.str(k) + s":$v" }
       .mkString("{", ",", "}")
     // queries_timed vs queries_selected makes an all-failed dropout
     // visible from the total line alone: total_of_mins silently shrinks
     // its query set when a query fails every repeat, so cross-round
     // total comparisons are only valid when the two counts match.
-    // extra_conf (r21 ADVICE): true when SPARK_GRAFT_CONF overrides were
-    // applied to this session — a record made under an override must be
-    // distinguishable from one at published defaults (additive key; the
-    // driver's parser ignores unknown keys)
+    // extra_conf: the literal SPARK_GRAFT_CONF override string applied
+    // to this session, or null at published defaults — a record made
+    // under an override must describe itself
+    val extraConf = sys.env.get("SPARK_GRAFT_CONF").fold("null")(Json.str)
+    val sf = Json.str(sfDir)
     val line =
-      f"""{"metric":"total_of_mins","value":$total%.3f,"unit":"sec","repeats":$repeats,"cpus":$cpus,"extra_conf":${Engine.extraConfSet},"queries_timed":${timed.size},"queries_selected":${selected.size},"calibration_s":$calS,"calibration_ref_s":$CalibrationRefSec%.3f,"calibration_ref_cpus":$CalibrationRefCpus,"calibration_ratio":$calR,"suspect":$suspect,"retimed":$retimedJson,"failed":$failedJson,"queries":$qs,"medians":$meds,"sf":"$sfDir"}"""
+      f"""{"metric":"total_of_mins","value":$total%.3f,"unit":"sec","repeats":$repeats,"cpus":$cpus,"extra_conf":$extraConf,"queries_timed":${timed.size},"queries_selected":${selected.size},"calibration_s":$calS,"calibration_ref_s":$CalibrationRefSec%.3f,"calibration_ref_cpus":$CalibrationRefCpus,"calibration_ratio":$calR,"suspect":$suspect,"retimed":$retimedJson,"failed":$failedJson,"queries":$qs,"medians":$meds,"sf":$sf}"""
     println(line)
     // the driver tail-parses stdout and sbt appends its own "[success]"
     // trailer after this line, so the stdout copy can be missed — also
@@ -360,6 +344,6 @@ object Bench {
     // line can land after it): the tail always keeps a short last line
     // intact. Full per-query maps live in the big line and the file.
     println(
-      f"""{"metric":"total_of_mins","value":$total%.3f,"unit":"sec","summary":true,"queries_timed":${timed.size},"queries_selected":${selected.size},"calibration_ratio":$calR,"suspect":$suspect,"retimed":$retimedJson,"failed":$failedJson,"sf":"$sfDir","detail":"$outPath"}""")
+      f"""{"metric":"total_of_mins","value":$total%.3f,"unit":"sec","summary":true,"queries_timed":${timed.size},"queries_selected":${selected.size},"calibration_ratio":$calR,"suspect":$suspect,"retimed":$retimedJson,"failed":$failedJson,"sf":$sf,"detail":${Json.str(outPath)}}""")
   }
 }

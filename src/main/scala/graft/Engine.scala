@@ -17,41 +17,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Build a session tuned for this engine. On a real cluster the
-    * master/memory come from spark-submit; these configs still apply.
+  /** Local core count, which is also the shuffle partition count:
+    * `SPARK_GRAFT_CPUS`, else 32. Parsed up front, so a non-numeric
+    * value fails here with a clear error.
     */
-  def session(
-      appName: String = "graft",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"
-  ): SparkSession = {
-    val b = SparkSession
-      .builder()
-      .appName(appName)
-      .master(master)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    configure(b).getOrCreate()
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.trim.toInt)
+
+  /** Build a session tuned for this engine: every main goes through
+    * here. On a real cluster the master/memory come from spark-submit;
+    * these configs still apply. `master` is for callers that pin the
+    * core count (the test session); the partition count stays `cpus`.
+    */
+  def session(appName: String = "graft", master: String = s"local[$cpus]"): SparkSession = {
+    val spark = configure(SparkSession.builder().appName(appName).master(master)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
-  /** Catalyst extensions: the native as-of join rule + strategy. */
-  def extensions: SparkSession.Builder => SparkSession.Builder =
-    _.withExtensions(new graft.plans.AsOfJoinNative.GraftExtensions)
-
-  /** Apply engine configs to any builder (used by Verify/Bench too). */
-  def configure(b0: SparkSession.Builder): SparkSession.Builder = {
-    val b = extensions(b0)
-    val b2 = b
+  /** Apply engine configs to any builder (the benchmark's own session
+    * builds through this too).
+    */
+  def configure(b: SparkSession.Builder): SparkSession.Builder = {
+    val tuned = b
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
     // Adaptive execution: runtime re-planning is our analog of the
     // reference's runtime skew mitigation loop.
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // Local runs: 32 threads, so 200 default shuffle partitions would
-    // just add scheduling overhead. AQE coalesces further as needed.
-    .config(
-      "spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    )
+    // one partition per local core: 200 default shuffle partitions
+    // would just add scheduling overhead. AQE coalesces further as
+    // needed.
+    .config("spark.sql.shuffle.partitions", cpus.toString)
     // events.ts is parquet TIMESTAMP(NANOS) which Spark cannot read
     // natively; read the raw int64 nanos and convert in Tables.events.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -70,7 +68,7 @@ object Engine {
     // prefs) without a rebuild. Unset in the driver's bench/verify
     // environments — the defaults above stay the published
     // configuration.
-    extraConf.foldLeft(b2) { case (bb, (k, v)) => bb.config(k, v) }
+    extraConf.foldLeft(tuned) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
   private def extraConf: Seq[(String, String)] =
@@ -85,12 +83,6 @@ object Engine {
           None
       }
     }
-
-  /** True when SPARK_GRAFT_CONF overrides are in effect. Bench embeds
-    * this in its JSON record (r21 ADVICE): a record produced under an
-    * override must be distinguishable from one at published defaults.
-    */
-  def extraConfSet: Boolean = extraConf.nonEmpty
 
   /** Lazy handles to the driver-generated test tables in `dir`.
     * Each is a plain parquet scan — Catalyst pushes filters/projections

@@ -47,7 +47,6 @@ object ScaleUp {
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = Engine.session("graft-scaleup")
-    spark.sparkContext.setLogLevel("WARN")
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit = {

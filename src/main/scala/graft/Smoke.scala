@@ -4,7 +4,6 @@ package graft
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = Engine.session("graft-smoke")
-    spark.sparkContext.setLogLevel("WARN")
     val t = Engine.Tables(spark, args.headOption.getOrElse("/root/testdata/sf0.001"))
     Seq(
       "region" -> t.region, "nation" -> t.nation, "customer" -> t.customer,

@@ -44,17 +44,13 @@ object VerifySf1 {
     else
       println(s"[verify-sf1] reusing existing probe at $sf1")
     val rc = if (flags("--gates-only")) 0 else {
-      Verify.run(sf1, out, only = Set.empty,
-        cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+      Verify.run(sf1, out, only = Set.empty)
       new ProcessBuilder(
         "python3", "tools/check.py", sf1, out, "--json", json)
         .inheritIO().start().waitFor()
     }
 
-    val spark = Engine.session(
-      "graft-sf1-gates",
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-sf1-gates")
     val gates =
       try Sf1Gates.run(spark, sf1, only = onlyGates)
       finally spark.stop()

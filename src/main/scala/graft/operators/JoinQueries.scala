@@ -667,143 +667,19 @@ object JoinQueries extends QueryModule {
     // As-of (temporal) join — reference StreamExecTemporalJoin /
     // TemporalRowTimeJoinOperator. Spark lacks this operator; see
     // graft.plans.AsOfJoin for the single-shuffle union+window design.
-    QueryDef(
-      "q_join_asof",
-      (s, dir) => {
-        val t = tables(s, dir)
-        val purchases = t.events
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        val signups = t.events
-          .filter(col("event_type") === "signup")
-          .select(col("user_id"), col("ts"), col("value").as("signup_value"))
-        AsOfJoin
-          .join(purchases, signups, "user_id", "ts", Seq("signup_value"))
-          .select(
-            col("event_id"),
-            col("value").as("p_value"),
-            col("signup_value")
-          )
-      },
-      Some("""
-        SELECT p.event_id AS event_id, p.value AS p_value,
-               s.value AS signup_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-          ON p.user_id = s.user_id AND p.ts >= s.ts
-      """)
-    ),
+    asOfQuery("q_join_asof", "signup_value"),
     // Forward as-of: each purchase matched to the EARLIEST signup at
     // or after it — the other temporal direction, same single-shuffle
     // window mechanism.
-    QueryDef(
-      "q_join_asof_forward",
-      (s, dir) => {
-        val t = tables(s, dir)
-        val purchases = t.events
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        val signups = t.events
-          .filter(col("event_type") === "signup")
-          .select(col("user_id"), col("ts"), col("value").as("next_signup_value"))
-        AsOfJoin
-          .joinForward(purchases, signups, "user_id", "ts", Seq("next_signup_value"))
-          .select(
-            col("event_id"),
-            col("value").as("p_value"),
-            col("next_signup_value")
-          )
-      },
-      Some("""
-        SELECT p.event_id AS event_id, p.value AS p_value,
-               s.value AS next_signup_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-          ON p.user_id = s.user_id AND p.ts <= s.ts
-      """)
-    ),
-    // Same as-of semantics through the NATIVE custom operator
-    // (LogicalPlan + Rule + Strategy + sort-merge SparkPlan injected
-    // via SparkSessionExtensions — graft.plans.AsOfJoinNative).
-    QueryDef(
-      "q_join_asof_native",
-      (s, dir) => {
-        val t = tables(s, dir)
-        val purchases = t.events
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        val signups = t.events
-          .filter(col("event_type") === "signup")
-          .select(
-            col("user_id").as("s_user"),
-            col("ts").as("s_ts"),
-            col("value").as("signup_value")
-          )
-        graft.plans.AsOfJoinNative
-          .asof(
-            purchases,
-            signups,
-            col("user_id"),
-            col("s_user"),
-            col("ts"),
-            col("s_ts")
-          )
-          .select(
-            col("event_id"),
-            col("value").as("p_value"),
-            col("signup_value")
-          )
-      },
-      Some("""
-        SELECT p.event_id AS event_id, p.value AS p_value,
-               s.value AS signup_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-          ON p.user_id = s.user_id AND p.ts >= s.ts
-      """)
-    ),
-    // LEFT OUTER as-of through the native operator: purchases with no
-    // signup at-or-before keep the left row with a null signup_value —
-    // the reference's isLeftOuterJoin temporal-join mode
-    // (TemporalRowTimeJoinOperator.java:88,134). DuckDB: ASOF LEFT JOIN.
-    QueryDef(
-      "q_join_asof_outer",
-      (s, dir) => {
-        val t = tables(s, dir)
-        val purchases = t.events
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        val signups = t.events
-          .filter(col("event_type") === "signup")
-          .select(
-            col("user_id").as("s_user"),
-            col("ts").as("s_ts"),
-            col("value").as("signup_value")
-          )
-        graft.plans.AsOfJoinNative
-          .asof(
-            purchases,
-            signups,
-            col("user_id"),
-            col("s_user"),
-            col("ts"),
-            col("s_ts"),
-            joinType = "left_outer"
-          )
-          .select(
-            col("event_id"),
-            col("value").as("p_value"),
-            col("signup_value")
-          )
-      },
-      Some("""
-        SELECT p.event_id AS event_id, p.value AS p_value,
-               s.value AS signup_value
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-          ON p.user_id = s.user_id AND p.ts >= s.ts
-      """)
-    ),
+    asOfQuery("q_join_asof_forward", "next_signup_value", forward = true),
+    // The same backward as-of as q_join_asof, kept registered and
+    // oracle-checked under its own name.
+    asOfQuery("q_join_asof_native", "signup_value"),
+    // LEFT OUTER as-of: purchases with no signup at-or-before keep the
+    // left row with a null signup_value — the reference's
+    // isLeftOuterJoin temporal-join mode
+    // (TemporalRowTimeJoinOperator.java:88,134).
+    asOfQuery("q_join_asof_outer", "signup_value", leftOuter = true),
     // Bucketed co-located join (§2.10 partitioning primitives): both
     // sides written bucketed+sorted on the join key, so the sort-merge
     // join reads bucket-aligned files with NO exchange — the plan a
@@ -854,4 +730,38 @@ object JoinQueries extends QueryModule {
       """)
     )
   )
+
+  /** Each purchase as-of joined to the latest signup of the same user
+    * at or before it (or, `forward`, the earliest at or after it);
+    * `leftOuter` keeps purchases with no such signup. The oracle is
+    * DuckDB's `ASOF [LEFT] JOIN`.
+    */
+  private def asOfQuery(
+      name: String,
+      valueCol: String,
+      forward: Boolean = false,
+      leftOuter: Boolean = false
+  ) =
+    QueryDef(
+      name,
+      (s, dir) => {
+        val t = tables(s, dir)
+        val purchases = t.events
+          .filter(col("event_type") === "purchase")
+          .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+        val signups = t.events
+          .filter(col("event_type") === "signup")
+          .select(col("user_id"), col("ts"), col("value").as(valueCol))
+        val asOf = if (forward) AsOfJoin.joinForward _ else AsOfJoin.join _
+        asOf(purchases, signups, "user_id", "ts", Seq(valueCol), leftOuter)
+          .select(col("event_id"), col("value").as("p_value"), col(valueCol))
+      },
+      Some(s"""
+        SELECT p.event_id AS event_id, p.value AS p_value,
+               s.value AS $valueCol
+        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        ASOF ${if (leftOuter) "LEFT " else ""}JOIN (SELECT * FROM events WHERE event_type = 'signup') s
+          ON p.user_id = s.user_id AND p.ts ${if (forward) "<=" else ">="} s.ts
+      """)
+    )
 }

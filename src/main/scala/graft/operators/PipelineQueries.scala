@@ -475,23 +475,17 @@ object PipelineQueries extends QueryModule {
         val sources = e.filter(col("event_type") =!= "purchase")
           .select(col("user_id"), col("us"),
             col("event_type").as("src_type"), col("us").as("src_us"))
+        // left outer: a purchase with NO preceding source has a null
+        // src_us, so both conditions below are null and it is organic
         val joined = graft.plans.AsOfJoin.join(
           purchases, sources, key = "user_id", time = "us",
-          rightCols = Seq("src_type", "src_us"))
+          rightCols = Seq("src_type", "src_us"), leftOuter = true)
         val lookbackUs = 24L * 3600 * 1000000
-        val attributed = joined.select(col("event_id"), col("user_id"),
+        joined.select(col("event_id"), col("user_id"),
           when(col("us") - col("src_us") <= lookbackUs, col("src_type"))
             .otherwise(lit("organic")).as("attributed_to"),
           when(col("us") - col("src_us") <= lookbackUs,
             expr("(us - src_us) DIV 1000000")).as("age_s"))
-        // purchases with NO preceding source at all are dropped by the
-        // inner as-of — restore them as organic
-        purchases.join(attributed.select(col("event_id")), Seq("event_id"),
-            "left_anti")
-          .select(col("event_id"), col("user_id"),
-            lit("organic").as("attributed_to"),
-            lit(null).cast("long").as("age_s"))
-          .unionByName(attributed)
       },
       Some("""
         WITH e AS (

@@ -29,6 +29,12 @@ object Iterations {
     * wrapped: its loop joins ride the AQE-sized prep checkpoints'
     * partitioning, and the same conf A/B measured global-off at 1.08x
     * there — see OPTIMIZATION_r22.md.
+    *
+    * Assumes a single-threaded session: the setting is session-global
+    * for the body's duration, so a query running concurrently on the
+    * same session would also plan without AQE. Callers that share a
+    * session across threads need a cloned session instead (as
+    * `StreamingOps.statePinnedSession` does).
     */
   private def withoutAqe[T](
       spark: org.apache.spark.sql.SparkSession)(body: => T): T = {

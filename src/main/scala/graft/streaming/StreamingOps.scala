@@ -43,10 +43,15 @@ object StreamingOps {
     * count is baked into the checkpoint at first start, so it is a
     * per-query deployment knob, NOT the job-wide CPU default: size it
     * to state volume the way the reference sizes a stateful operator's
-    * parallelism independently of the job parallelism. Default 8
-    * (measured on the sf0.1 replay: 32 partitions → 11–17 s, 8 → ~3.5 s,
-    * identical results); raise `spark.graft.stream.statePartitions`
-    * with state volume on a real deployment.
+    * parallelism independently of the job parallelism. Default 2: the
+    * sf0.1 stream-stream joins hold ~40k rows of state, which 2 shards
+    * carry comfortably. Measured on the sf0.1 replay, identical results
+    * at every count: 32 shards → 11–17 s, 8 → ~3.5 s; then min-of-3 of
+    * the left/right/full joins in one host window: 8 → 3.46/3.35/4.11 s,
+    * 2 → 2.68/2.50/3.07 s, 1 → no further gain (2.60/2.57/3.16 s) — the
+    * knee is 2. A real deployment raises
+    * `spark.graft.stream.statePartitions` with state volume, not with
+    * CPU count.
     *
     * NOTE: `newSession()` starts from the SparkContext conf, not the
     * parent's runtime mutations (e.g. the RocksDB provider pinned by
@@ -126,9 +131,7 @@ object StreamingOps {
         }
       }
       pinned.conf.set("spark.sql.shuffle.partitions",
-        s.conf.getOption("spark.graft.stream.statePartitions")
-          .orElse(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
-          .getOrElse("8"))
+        s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2"))
       pinned
     }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import java.sql.Timestamp
 
 /** Event-time temporal (as-of) join for streams — the streaming
-  * counterpart of plans/AsOfJoinNative. Each probe row (key, ptime)
+  * counterpart of plans/AsOfJoin. Each probe row (key, ptime)
   * joins the LATEST version row (key, vtime) with vtime <= ptime.
   *
   * Reference semantics: flink-table-runtime-blink

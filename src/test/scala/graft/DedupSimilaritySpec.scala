@@ -287,9 +287,5 @@ class DedupSimilaritySpec extends AnyFunSuite {
   * the same JVM; getOrCreate dedupes).
   */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = Engine.session("graft-test", "local[4]")
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val get: SparkSession = Engine.session("graft-test", "local[4]")
 }

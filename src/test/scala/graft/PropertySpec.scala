@@ -1,15 +1,16 @@
 package graft
 
 import graft.functions.{MGSummary, MisraGriesAgg}
-import graft.plans.AsOfJoinNative
+import graft.plans.AsOfJoin
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
 /** Seeded randomized properties for the operators whose correctness
-  * rests on an argument rather than an oracle: the native as-of join
-  * against an independent in-memory reference, Misra–Gries bounds on
+  * rests on an argument rather than an oracle: the as-of join (both
+  * directions, inner and left outer, nullable right values) against an
+  * independent in-memory reference, Misra–Gries bounds on
   * adversarial Zipf streams, and prefix-filter completeness against
   * brute force on random token sets. Seeds are fixed — failures
   * reproduce exactly.
@@ -17,38 +18,45 @@ import scala.util.Random
 class PropertySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
-  test("native as-of join equals an independent reference on random series") {
+  test("as-of join equals an independent reference on random series") {
     import spark.implicits._
-    for (seed <- Seq(7, 23, 99)) {
+    for (seed <- Seq(7, 23, 99); forward <- Seq(false, true); leftOuter <- Seq(false, true)) {
       val rnd = new Random(seed)
       val probes = (1 to 400).map { i =>
         (rnd.nextInt(20).toLong, rnd.nextInt(10000).toLong, i.toDouble)
       }
+      // every third version has a null value: the match is still that
+      // whole row, never an older row's value and never a dropped probe
       val versions = (1 to 150).map { i =>
-        (rnd.nextInt(20).toLong, rnd.nextInt(10000).toLong, s"v$i")
+        (rnd.nextInt(20).toLong, rnd.nextInt(10000).toLong,
+          if (i % 3 == 0) None else Some(s"v$i"))
       }
-      // reference: latest version with vtime <= ptime per (key, probe);
-      // ties on vtime resolved like the operator (any of the maximal
-      // rows — make vtime unique per key to avoid ambiguity)
+      // reference: latest version with vtime <= ptime per (key, probe)
+      // (earliest with vtime >= ptime forward); ties on vtime resolved
+      // like the operator (any of the extreme rows — make vtime unique
+      // per key to avoid ambiguity)
       val vClean = versions.groupBy(v => (v._1, v._2)).map(_._2.head).toSeq
       val expected = probes.flatMap { case (k, pt, pv) =>
-        val vs = vClean.filter(v => v._1 == k && v._2 <= pt)
-        if (vs.isEmpty) None
+        val vs = vClean.filter(v => v._1 == k && (if (forward) v._2 >= pt else v._2 <= pt))
+        if (vs.isEmpty) Option.when(leftOuter)((k, pt, pv, None, None))
         else {
-          val best = vs.maxBy(_._2)
-          Some((k, pt, pv, best._2, best._3))
+          val best = if (forward) vs.minBy(_._2) else vs.maxBy(_._2)
+          Some((k, pt, pv, Some(best._2), best._3))
         }
       }.toSet
-      val got = AsOfJoinNative.asof(
-          probes.toDF("key", "ptime", "pval"),
-          vClean.toDF("vkey", "vtime", "vval"),
-          col("key"), col("vkey"), col("ptime"), col("vtime"))
+      // the right side shares the key and time names; vtime is a copy
+      // of its time column carried as a right value
+      val right = vClean.toDF("key", "ptime", "vval").withColumn("vtime", col("ptime"))
+      val asOf = if (forward) AsOfJoin.joinForward _ else AsOfJoin.join _
+      val got = asOf(probes.toDF("key", "ptime", "pval"), right, "key", "ptime",
+          Seq("vtime", "vval"), leftOuter)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getLong(4), r.getString(5)))
+          Option(r.getAs[java.lang.Long](3)).map(_.longValue), Option(r.getString(4))))
         .toSet
       assert(got == expected,
-        s"seed=$seed: ${ (expected -- got).take(3) } missing, ${ (got -- expected).take(3) } extra")
+        s"seed=$seed forward=$forward leftOuter=$leftOuter: " +
+          s"${ (expected -- got).take(3) } missing, ${ (got -- expected).take(3) } extra")
     }
   }
 

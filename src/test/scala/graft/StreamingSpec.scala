@@ -118,8 +118,8 @@ class StreamingSpec extends AnyFunSuite {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
     val pinned = StreamingOps.statePinnedSession(spark)
-    assert(pinned.conf.get(key) == "8",
-      s"default state partition count must be 8, got ${pinned.conf.get(key)}")
+    assert(pinned.conf.get(key) == "2",
+      s"default state partition count must be 2, got ${pinned.conf.get(key)}")
     assert(spark.conf.get(key) == before,
       "parent session conf must be untouched (isolation by construction)")
     // runtime conf mutations on the parent (e.g. the RocksDB provider

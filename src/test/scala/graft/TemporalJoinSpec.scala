@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.AsOfJoinNative
+import graft.plans.AsOfJoin
 import graft.streaming.TemporalJoin
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
 
-/** Streaming temporal (as-of) join == the batch native as-of operator
-  * on the same rows — the reference pairs TemporalRowTimeJoinOperator
-  * with its batch temporal join the same way. Fed across multiple
+/** Streaming temporal (as-of) join == the batch as-of join
+  * (`plans.AsOfJoin`) on the same rows — the reference pairs
+  * TemporalRowTimeJoinOperator with its batch temporal join the same way. Fed across multiple
   * batches with out-of-order rows inside the watermark horizon.
   */
 object TemporalJoinSpec {
@@ -21,6 +21,14 @@ object TemporalJoinSpec {
 class TemporalJoinSpec extends AnyFunSuite {
   import TemporalJoinSpec.{P, V}
   private lazy val spark = SparkTestSession.get
+
+  /** Versions as the batch as-of join's right side: key and time
+    * under the probe's column names, vtime kept as a right value.
+    */
+  private def asOfRight(vs: Seq[V]) = {
+    import spark.implicits._
+    vs.toDF().withColumn("ptime", col("vtime"))
+  }
 
   private def ts(minutes: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${minutes / 60}%02d:${minutes % 60}%02d:00")
@@ -39,14 +47,9 @@ class TemporalJoinSpec extends AnyFunSuite {
       P(1, ts(40), 4.0), P(2, ts(3), 5.0), P(2, ts(50), 6.0),
       P(3, ts(20), 7.0))
 
-    // batch truth via the native as-of operator (right columns must
-    // not collide with left's)
-    val vRenamed = versions.toDF().withColumnRenamed("key", "vkey")
-    val expected = AsOfJoinNative
-      .asof(
-        probes.toDF(), vRenamed,
-        col("key"), col("vkey"),
-        col("ptime"), col("vtime"))
+    // batch truth via the batch as-of join
+    val expected = AsOfJoin
+      .join(probes.toDF(), asOfRight(versions), "key", "ptime", Seq("vtime", "vval"))
       .select(col("ptime"), col("pval"), col("vtime"), col("vval"))
       .collect()
       .map(r => (r.getTimestamp(0), r.getDouble(1), r.getTimestamp(2), r.getString(3)))
@@ -111,12 +114,11 @@ class TemporalJoinSpec extends AnyFunSuite {
     val got = spark.sql(
       "SELECT pval, vval FROM tj_outer WHERE key < 90 ORDER BY pval")
       .collect().map(r => (r.getDouble(0), Option(r.getString(1))))
-    // batch truth: the native operator's LEFT OUTER mode on same rows
-    val vRenamed = Seq(V(1, ts(20), "a")).toDF().withColumnRenamed("key", "vkey")
-    val expected = AsOfJoinNative.asof(
+    // batch truth: the batch as-of join's LEFT OUTER mode on same rows
+    val expected = AsOfJoin.join(
         Seq(P(1, ts(5), 1.0), P(1, ts(30), 2.0), P(2, ts(10), 3.0)).toDF(),
-        vRenamed, col("key"), col("vkey"), col("ptime"), col("vtime"),
-        joinType = "left_outer")
+        asOfRight(Seq(V(1, ts(20), "a"))), "key", "ptime", Seq("vtime", "vval"),
+        leftOuter = true)
       .orderBy(col("pval"))
       .collect().map(r => (r.getDouble(2), Option(r.getAs[String]("vval"))))
     assert(got.toSeq == expected.toSeq,
