@@ -117,10 +117,11 @@ object Bench {
     // dual-fact ratio join (two fact aggs co-partitioned on partkey)
     "q_flagship_ds_union_profit",
     "q_flagship_ds_returns_ratio",
-    // round-18 addition: the fork's namesake path — the closed-loop
-    // adaptive salted join (measure skew, pick a salt factor, replicate
-    // the small side) — so regressions in the Reshape layer show up as
-    // numbers in the bench chain, not only as correctness rows
+    // round-18 addition: the fork's namesake path — the salted join at
+    // a fixed salt of 8 (replicate the small side, salt the hot key) —
+    // so regressions in the Reshape layer show up as numbers in the
+    // bench chain, not only as correctness rows; the closed loop is
+    // timed by the benchmark's skew_stream workload
     "q_skew_salted_join",
     // round-19 additions: the two most expensive round-18 plan shapes,
     // previously correctness-only — the dual-snapshot fact-fact join

@@ -45,21 +45,16 @@ class MisraGriesAgg(capacity: Int)
   override def zero: MGSummary = MGSummary(0L, Map.empty)
 
   override def reduce(b: MGSummary, item: String): MGSummary = {
-    val m = mutable.Map.empty[String, Long]
-    m ++= b.counts
-    if (m.contains(item)) m(item) += 1L
-    else if (m.size < capacity) m(item) = 1L
-    else {
+    val counts = b.counts.get(item) match {
+      case Some(c) => b.counts.updated(item, c + 1L)
+      case None if b.counts.size < capacity => b.counts.updated(item, 1L)
       // decrement-all step: every tracked counter pays one unit for the
-      // untracked arrival; zeroed counters free their slot
-      val dead = mutable.ArrayBuffer.empty[String]
-      m.keysIterator.foreach { k =>
-        val v = m(k) - 1L
-        if (v <= 0L) dead += k else m(k) = v
-      }
-      dead.foreach(m.remove)
+      // untracked arrival; zeroed counters free their slot. It removes
+      // `capacity` units and each row adds at most one, so the rebuild
+      // is amortized O(1) per row.
+      case None => b.counts.collect { case (k, v) if v > 1L => k -> (v - 1L) }
     }
-    MGSummary(b.total + 1L, m.toMap)
+    MGSummary(b.total + 1L, counts)
   }
 
   override def merge(a: MGSummary, b: MGSummary): MGSummary = {
@@ -81,6 +76,13 @@ class MisraGriesAgg(capacity: Int)
   }
 
   override def finish(r: MGSummary): MGSummary = r
-  override def bufferEncoder: Encoder[MGSummary] = Encoders.product[MGSummary]
-  override def outputEncoder: Encoder[MGSummary] = Encoders.product[MGSummary]
+  override def bufferEncoder: Encoder[MGSummary] = MisraGriesAgg.summaryEncoder
+  override def outputEncoder: Encoder[MGSummary] = MisraGriesAgg.summaryEncoder
+}
+
+object MisraGriesAgg {
+  /** Derived once: each derivation reflects over the case class, which
+    * every plan that uses the sketch would otherwise pay for.
+    */
+  private val summaryEncoder: Encoder[MGSummary] = Encoders.product[MGSummary]
 }

@@ -1,12 +1,15 @@
 package graft.skew
 
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.MisraGriesAgg
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.concurrent.TrieMap
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
 
 /** Reshape-style adaptive skew handling, re-expressed for Spark.
   *
@@ -30,39 +33,34 @@ import scala.collection.concurrent.TrieMap
   *  - aggregations: salted two-stage aggregation (SaltedAggregation) —
   *    the salt fans a hot key across `saltFactor` reducers (the
   *    "helpers") and the second stage is the result-aware merge;
-  *  - the control loop: SkewMonitor, a SparkListener aggregating
-  *    per-task metrics on the driver (the JobMaster analog), which
-  *    classifies partitions with the reference's hi/lo thresholds and
-  *    recommends the salt factor for the next run/micro-batch.
+  *  - the control loop: AdaptiveSalter, one tick per micro-batch,
+  *    deciding from a key sketch observed on the previous batch's own
+  *    input (the controller reading its own job's per-channel input
+  *    counts). SkewMonitor, a listener over task metrics, only reports.
   */
 object ReshapeConfig {
   /** Config keys mirror the reference's system properties
     * (README.md:14-22); read from Spark conf with the same defaults.
     */
-  val EnableKey = "spark.graft.reshape.enabled"
   val HiThresholdKey = "spark.graft.reshape.hiThreshold"
   val LoThresholdKey = "spark.graft.reshape.loThreshold"
-  val FreqKey = "spark.graft.reshape.freqMs"
   val FirstPhaseKey = "spark.graft.reshape.firstPhaseNum"
 
   final case class Settings(
-      enabled: Boolean,
       hiThreshold: Double,
       loThreshold: Double,
-      freqMs: Long,
       firstPhaseNum: Int
   )
 
   def from(spark: SparkSession): Settings = Settings(
-    enabled = spark.conf.get(EnableKey, "false").toBoolean,
     hiThreshold = spark.conf.get(HiThresholdKey, "0.8").toDouble,
     loThreshold = spark.conf.get(LoThresholdKey, "0.2").toDouble,
-    freqMs = spark.conf.get(FreqKey, "10000").toLong,
     firstPhaseNum = spark.conf.get(FirstPhaseKey, "6").toInt
   )
 }
 
-/** Driver-side load monitor — the ControllerSimulator analog.
+/** Driver-side load report — an observability listener, not the
+  * controller's input.
   *
   * Collects per-task (duration, records) per stage; on stage
   * completion classifies tasks against the busy/free thresholds
@@ -73,35 +71,14 @@ object ReshapeConfig {
   * number of helpers the hottest partition needs so that
   * max/mean ≈ 1, which is what the reference's phase-2 proportional
   * ratio `(in(skew)-in(helper))*100/in(skew)` converges to.
+  *
+  * The reports cover every job in the session and see AQE's coalesced
+  * tasks, not keys, so `AdaptiveSalter` does not read them.
   */
 final class SkewMonitor(settings: ReshapeConfig.Settings) extends SparkListener {
 
   final case class TaskStat(durationMs: Long, records: Long, bytes: Long)
 
-  /** When set, only stages belonging to this job group count as
-    * evidence. A SparkListener is session-wide, so without a scope the
-    * monitor would read *foreign* load — an oracle query, another
-    * stream, even the result collect of the job it feeds — as skew in
-    * the monitored pipeline (the reference's controller only ever sees
-    * its own job's subtasks, ControllerSimulator.scala:95-155).
-    */
-  @volatile private var jobGroup: Option[String] = None
-  private val stageGroups = new TrieMap[Int, String]()
-
-  def scopeTo(group: String): Unit = { jobGroup = Some(group) }
-
-  /** Scope evidence to the calling thread's job group — inside a
-    * foreachBatch body that is the owning streaming query's execution
-    * group (StreamExecution sets it to the run id). No-op when the
-    * caller has no group (direct batch invocation stays unscoped).
-    */
-  def scopeToCallingGroup(sc: SparkContext): Unit =
-    Option(sc.getLocalProperty("spark.jobGroup.id")).foreach(scopeTo)
-
-  override def onJobStart(j: SparkListenerJobStart): Unit = {
-    val g = Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-    g.foreach(gr => j.stageIds.foreach(sid => stageGroups.put(sid, gr)))
-  }
   final case class SkewReport(
       stageId: Int,
       numTasks: Int,
@@ -130,11 +107,9 @@ final class SkewMonitor(settings: ReshapeConfig.Settings) extends SparkListener 
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     val stageId = sc.stageInfo.stageId
-    val group = stageGroups.remove(stageId)
     perStage.remove(stageId).foreach { stats =>
-      val inScope = jobGroup.forall(g => group.contains(g))
       val durations = stats.values.map(_.durationMs).toSeq.sorted
-      if (inScope && durations.size >= 2 && durations.last > 0) {
+      if (durations.size >= 2 && durations.last > 0) {
         val median = durations(durations.size / 2)
         // Load signal, in preference order: shuffle-read BYTES — the
         // per-channel input volume the reference's controller reads
@@ -194,97 +169,118 @@ final class SkewMonitor(settings: ReshapeConfig.Settings) extends SparkListener 
   * one timer tick.
   *
   * Policy, mirroring the reference:
-  *  - a tick acts only on *fresh* evidence (stages completed since the
-  *    last tick), like the controller re-reading current metrics;
-  *  - evidence is actionable only when a busy task coexists with a free
-  *    one (busy > hiThreshold while another < loThreshold) — the
-  *    reference pairs skewed-with-helper, never acts on uniform load;
-  *  - the first `firstPhaseNum` skew-positive ticks use the aggressive
-  *    salt (the 90/100 phase-1 reroute ratio analog), later ticks use
-  *    the proportional recommendation (phase 2's
-  *    `(in(skew)-in(helper))*100/in(skew)`);
+  *  - evidence is in-band: `tick` observes a Misra–Gries sketch of the
+  *    batch's keys on its input, delivered by the action the batch
+  *    already runs (no extra job, no other job's load). Tick N+1 reads
+  *    batch N's sketch once; a failed batch, or a sketch not delivered
+  *    within a few seconds, is no evidence and the salt holds;
+  *  - the proportional salt is `min(aggressiveSalt, ceil(maxShare × P))`,
+  *    the reducers the largest key alone fills at the session's shuffle
+  *    partition count P. A tick is actionable when it is > 1: no
+  *    thresholds, no dependence on AQE coalescing or task counts, and
+  *    always 1 at P = 1, where no reducer can help;
+  *  - the first `firstPhaseNum` actionable ticks use the aggressive
+  *    salt (the 90/100 phase-1 reroute ratio analog), later ticks the
+  *    proportional one (phase 2's `(in(skew)-in(helper))*100/in(skew)`);
   *  - the salt is sticky: once raised it stays for the loop's lifetime,
   *    because a balanced post-mitigation stage means the salting is
   *    working, not that the underlying key skew vanished — the analog
   *    of the reference's routing tables persisting in the workers
   *    (WorkerSimulator.assignRouting).
+  *
+  * `monitor` is unused; it stays so existing callers keep compiling.
   */
 final class AdaptiveSalter(
-    val monitor: SkewMonitor,
+    monitor: SkewMonitor,
     settings: ReshapeConfig.Settings,
     aggressiveSalt: Int = 32
 ) {
-  @volatile private var lastStageSeen: Int = -1
-  @volatile private var salt: Int = 1
-  private var ticked: Boolean = false
+  private var salt: Int = 1
   private var skewTicks: Int = 0
+  /** The last completed batch's key sketch and shuffle partition count. */
+  private var evidence: Option[(Observation, Int)] = None
   private val history = scala.collection.mutable.ArrayBuffer.empty[Int]
-
-  def currentSalt: Int = salt
 
   /** Salt decisions made so far, one per `nextSalt()` call. */
   def saltHistory: Seq[Int] = synchronized(history.toSeq)
 
-  /** Decide the salt for the next batch. `awaitEvidenceMs > 0` polls
-    * briefly for listener events from the previous batch to land
-    * (SparkListener delivery is async); leave 0 when an extra decision
-    * latency of one batch is acceptable.
+  /** Decide the salt for the next batch from the previous batch's
+    * evidence, if any.
     */
-  def nextSalt(awaitEvidenceMs: Long = 0L): Int = synchronized {
-    // first tick: no monitored batch has run yet, so no evidence can
-    // ever land — polling would only burn the full awaitEvidenceMs
-    // as dead decision latency on every query start
-    val wait = if (ticked) awaitEvidenceMs else 0L
-    ticked = true
-    val deadline = System.currentTimeMillis() + wait
-    var fresh = monitor.stageReports.filter(_._1 > lastStageSeen)
-    while (fresh.isEmpty && System.currentTimeMillis() < deadline) {
-      Thread.sleep(25)
-      fresh = monitor.stageReports.filter(_._1 > lastStageSeen)
-    }
-    if (fresh.nonEmpty) {
-      lastStageSeen = fresh.keys.max
-      val actionable = fresh.values.filter(r =>
-        r.skewedTasks.nonEmpty && r.freeTasks.nonEmpty && r.recommendedSalt > 1)
-      if (actionable.nonEmpty) {
+  def nextSalt(): Int = synchronized {
+    for ((obs, partitions) <- evidence; share <- AdaptiveSalter.maxShare(obs)) {
+      val proportional = math.min(aggressiveSalt, math.ceil(share * partitions).toInt)
+      if (proportional > 1) {
         skewTicks += 1
-        val proportional = actionable.map(_.recommendedSalt).max
-        val next =
-          if (skewTicks <= settings.firstPhaseNum) math.max(proportional, aggressiveSalt)
-          else proportional
+        val next = if (skewTicks <= settings.firstPhaseNum) aggressiveSalt else proportional
         salt = math.max(salt, next)
       }
     }
+    evidence = None
     history += salt
     salt
   }
+
+  /** One tick for one micro-batch: decide its salt, then run `act` on
+    * the batch with the batch's key sketch attached. The sketch becomes
+    * the next tick's evidence only if `act` returns; `act` must run an
+    * action on the plan it is given, or the next tick waits out the
+    * delivery timeout.
+    */
+  private[skew] def tick(batch: DataFrame, key: Seq[String])(act: (DataFrame, Int) => Unit): Unit = {
+    val decided = nextSalt()
+    val obs = Observation()
+    act(batch.observe(obs, AdaptiveSalter.keySketch(key)), decided)
+    val partitions = batch.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    synchronized { evidence = Some((obs, partitions)) }
+  }
+}
+
+object AdaptiveSalter {
+  /** The sketch undercounts by at most n/64, well below 1/32 of n. */
+  private val SketchCapacity = 64
+  /** The batch's action has finished; only the delivery is async. */
+  private val EvidenceWait = 5.seconds
+  /** Built once: `udaf` derives the input encoder by reflection. */
+  private val Sketch = udaf(new MisraGriesAgg(SketchCapacity))
+
+  /** A Misra–Gries sketch of the key, as one non-null string column. */
+  private def keySketch(key: Seq[String]): Column = Sketch(
+    concat_ws("\u0001", key.map(k => coalesce(col(k).cast("string"), lit("\u0000"))): _*)
+  ).as("keys")
+
+  /** The largest key's share of the batch; None for an empty batch or
+    * when the sketch does not arrive in time.
+    */
+  private def maxShare(obs: Observation): Option[Double] = Try {
+    val sketch = Await.result(obs.future, EvidenceWait).getStruct(0)
+    val (total, counts) = (sketch.getLong(0), sketch.getMap[String, Long](1))
+    Option.when(total > 0 && counts.nonEmpty)(counts.values.max.toDouble / total)
+  }.toOption.flatten
 }
 
 /** The closed loop: a Structured Streaming aggregation whose salt
-  * factor is re-read from the monitor every micro-batch — observe
-  * (SkewMonitor) → decide (AdaptiveSalter) → act (SaltedAggregation),
-  * the full Reshape control cycle across batches.
+  * factor is re-decided every micro-batch — observe (the batch's key
+  * sketch) → decide (AdaptiveSalter) → act (SaltedAggregation), the
+  * full Reshape control cycle across batches.
   */
 object AdaptiveReshape {
 
   /** A foreachBatch body that re-salts each micro-batch with the
     * controller's current decision. `onResult` receives the *merged*
     * (post-second-stage) aggregate for the batch plus the salt used,
-    * and owns delivery (upsert sink, memory table, …).
+    * and owns delivery (upsert sink, memory table, …); it must run an
+    * action on the aggregate, which also delivers the key sketch.
     */
   def foreachBatchBody(
       key: Seq[String],
       spec: SaltedAggregation.Spec,
-      salter: AdaptiveSalter,
-      awaitEvidenceMs: Long = 0L
+      salter: AdaptiveSalter
   )(onResult: (DataFrame, Long, Int) => Unit): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      // the body runs on the owning query's execution thread: scope the
-      // monitor to that query's job group so concurrent foreign jobs
-      // (oracle reads, other streams) never count as skew evidence
-      salter.monitor.scopeToCallingGroup(batch.sparkSession.sparkContext)
-      val salt = salter.nextSalt(awaitEvidenceMs)
-      onResult(SaltedAggregation.aggregate(batch, key, spec, salt), batchId, salt)
+      salter.tick(batch, key) { (in, salt) =>
+        onResult(SaltedAggregation.aggregate(in, key, spec, salt), batchId, salt)
+      }
   }
 
   /** The same closed loop for the join path: each micro-batch of the
@@ -296,13 +292,12 @@ object AdaptiveReshape {
   def foreachBatchJoinBody(
       dim: DataFrame,
       key: Seq[String],
-      salter: AdaptiveSalter,
-      awaitEvidenceMs: Long = 0L
+      salter: AdaptiveSalter
   )(onResult: (DataFrame, Long, Int) => Unit): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      salter.monitor.scopeToCallingGroup(batch.sparkSession.sparkContext)
-      val salt = salter.nextSalt(awaitEvidenceMs)
-      onResult(SaltedJoin.join(batch, dim, key, salt), batchId, salt)
+      salter.tick(batch, key) { (in, salt) =>
+        onResult(SaltedJoin.join(in, dim, key, salt), batchId, salt)
+      }
   }
 }
 
@@ -322,6 +317,14 @@ object AdaptiveReshape {
   */
 object SaltedJoin {
 
+  /** A deterministic per-row salt in [0, n): the row hash's bucket among
+    * 1024, mod n. The salts are array literals, which generated code holds
+    * by reference, so a new factor reuses the stages compiled for the last
+    * one; an inlined `lit(n)` would compile every stage of the plan again.
+    */
+  private[skew] def salt(df: DataFrame, n: Int): Column = element_at(
+    typedLit(Array.tabulate(1024)(_ % n)), pmod(hash(df.columns.map(col).toSeq: _*), lit(1024)) + 1)
+
   def join(
       fact: DataFrame,
       dim: DataFrame,
@@ -329,13 +332,8 @@ object SaltedJoin {
       saltFactor: Int
   ): DataFrame = {
     require(saltFactor >= 1)
-    val saltExpr: Column =
-      pmod(hash(fact.columns.map(col).toSeq: _*), lit(saltFactor))
-    val saltedFact = fact.withColumn("__salt", saltExpr)
-    val replicatedDim = dim.withColumn(
-      "__salt",
-      explode(array((0 until saltFactor).map(lit): _*))
-    )
+    val saltedFact = fact.withColumn("__salt", salt(fact, saltFactor))
+    val replicatedDim = dim.withColumn("__salt", explode(typedLit(Array.range(0, saltFactor))))
     saltedFact
       .join(replicatedDim, key :+ "__salt")
       .drop("__salt")
@@ -353,7 +351,7 @@ object SaltedJoin {
   *
   * The salt column must be deterministic per row (not rand()) so
   * retried tasks re-produce identical partials — here a hash of the
-  * whole row modulo the factor.
+  * whole row (`SaltedJoin.salt`).
   */
 object SaltedAggregation {
 
@@ -379,8 +377,6 @@ object SaltedAggregation {
       saltFactor: Int
   ): DataFrame = {
     require(saltFactor >= 1)
-    val saltExpr: Column =
-      pmod(hash(df.columns.map(col).toSeq: _*), lit(saltFactor))
     val partialAggs =
       spec.sums.map(c => sum(col(c)).as(s"__sum_$c")) ++
         (if (spec.counts) Seq(count(lit(1)).as("__cnt")) else Nil) ++
@@ -388,7 +384,7 @@ object SaltedAggregation {
         spec.maxs.map(c => max(col(c)).as(s"__max_$c")) ++
         spec.collects.map(c => collect_list(col(c)).as(s"__col_$c"))
     val partial = df
-      .withColumn("__salt", saltExpr)
+      .withColumn("__salt", SaltedJoin.salt(df, saltFactor))
       .groupBy((key.map(col) :+ col("__salt")): _*)
       .agg(partialAggs.head, partialAggs.tail: _*)
     val finalAggs =

@@ -4,22 +4,29 @@ import graft.skew.{AdaptiveReshape, AdaptiveSalter, ReshapeConfig, SaltedAggrega
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimitedTests}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Minutes, Span}
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The closed Reshape control loop across micro-batches: observe
-  * (SkewMonitor on task metrics) → decide (AdaptiveSalter per batch
-  * tick) → act (SaltedAggregation with the decided salt), mirroring
-  * the reference's controller timer loop feeding worker routing
-  * tables (reference: ControllerSimulator.scala:52-87 →
-  * WorkerSimulator.assignRouting). The invariant under test is the
-  * reference's: mitigation adapts the *plan* (salt factor) between
-  * batches while the *results* stay identical to the unmitigated
-  * aggregation.
+/** The closed Reshape control loop across micro-batches: observe (a
+  * key sketch on each batch's own input, delivered with the batch's
+  * action) → decide (AdaptiveSalter at the next batch's tick) → act
+  * (SaltedAggregation with the decided salt), mirroring the reference's
+  * controller timer loop feeding worker routing tables (reference:
+  * ControllerSimulator.scala:52-87 → WorkerSimulator.assignRouting).
+  * The loop runs under the engine's own AQE settings. The invariant
+  * under test is the reference's: mitigation adapts the *plan* (salt
+  * factor) between batches while the *results* stay identical to the
+  * unmitigated aggregation.
   */
-class AdaptiveSkewSpec extends AnyFunSuite {
+class AdaptiveSkewSpec extends AnyFunSuite with TimeLimitedTests {
   private lazy val spark = SparkTestSession.get
+
+  // a stuck controller wait fails the test instead of hanging the suite
+  override val timeLimit: Span = Span(3, Minutes)
+  override val defaultTestSignaler: Signaler = ThreadSignaler
 
   private val nKeys = 3200L
 
@@ -60,91 +67,64 @@ class AdaptiveSkewSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val settings = ReshapeConfig.from(spark)
-    val monitor = new SkewMonitor(settings)
-    spark.sparkContext.addSparkListener(monitor)
-    // At test scale AQE coalesces the whole reduce side into ONE task
-    // (everything fits one 64MB target partition), which erases the
-    // per-task load spread the monitor reads. Real deployments keep
-    // multi-task reduce stages; pin that shape for the test.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevCoalesce = spark.conf.get(coalesceKey, "true")
-    spark.conf.set(coalesceKey, "false")
-    try {
-      val salter = new AdaptiveSalter(monitor, settings, aggressiveSalt = 32)
-      val results = ArrayBuffer.empty[Array[Row]]
-      // collect aggregates so the hot key's partial keeps its size
-      // through the shuffle (algebraic partials collapse map-side and
-      // would hide the skew from the byte signal)
-      val spec = SaltedAggregation.Spec(sums = Seq("v"), counts = true, collects = Seq("v"))
-      val body = AdaptiveReshape.foreachBatchBody(Seq("k"), spec, salter,
-        awaitEvidenceMs = 4000L) { (agg, _, _) => results += agg.collect() }
-
-      val in = MemoryStream[(Long, Double)]
-      val q = in.toDF().toDF("k", "v").writeStream.foreachBatch(body).start()
-      try {
-        // batch 0: uniform — no evidence yet, salt must stay 1
-        val b0 = uniformRows(6400).collect().map(r => (r.getLong(0), r.getDouble(1)))
-        in.addData(b0.toIndexedSeq); q.processAllAvailable()
-        // a concurrent FOREIGN job with genuinely skewed shuffle load:
-        // the monitor is scoped to the streaming query's job group, so
-        // this must never count as evidence (pre-scoping it would have
-        // raised the salt at the batch-1 tick)
-        spark.sparkContext.setJobGroup("foreign-skew", "foreign skewed job")
-        try skewedRows(20000).groupBy("k").agg(collect_list(col("v"))).collect()
-        finally spark.sparkContext.clearJobGroup()
-        Thread.sleep(500) // let async listener delivery land before the next tick
-        val foreignStages = spark.sparkContext.statusTracker
-          .getJobIdsForGroup("foreign-skew")
-          .flatMap(id => spark.sparkContext.statusTracker.getJobInfo(id))
-          .flatMap(_.stageIds()).toSet
-        assert(foreignStages.nonEmpty, "foreign job must have run stages")
-
-        // batch 1: skew arrives — but the only in-scope evidence is
-        // batch 0's uniform load, so the controller must still not act
-        val b1 = skewedRows(20000).collect().map(r => (r.getLong(0), r.getDouble(1)))
-        in.addData(b1.toIndexedSeq); q.processAllAvailable()
-        assert(
-          monitor.stageReports.keySet.intersect(foreignStages).isEmpty,
-          "foreign-group stages must be excluded from scoped evidence")
-        // batch 2: batch 1's skewed stages are now visible — salt rises
-        val b2 = skewedRows(4000).collect().map(r => (r.getLong(0), r.getDouble(1)))
-        in.addData(b2.toIndexedSeq); q.processAllAvailable()
-
-        val history = salter.saltHistory
-        assert(history.size == 3, s"expected 3 batch ticks, got $history")
-        assert(history(0) == 1, s"batch 0 must run unsalted (no evidence): $history")
-        assert(history(1) == 1, s"uniform evidence must not trigger salting: $history")
-        assert(history(2) > 1, s"skew evidence must raise the salt: $history")
-
-        // result-identity per batch vs the unmitigated aggregation
-        val inputs = Seq(b0, b1, b2)
-        for ((batchRows, i) <- inputs.zipWithIndex) {
-          val df = spark.createDataFrame(
-            spark.sparkContext.parallelize(batchRows.toIndexedSeq.map(t => Row(t._1, t._2))),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("k",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("v",
-                org.apache.spark.sql.types.DoubleType, nullable = false)
-            ))
-          )
-          val expected = plainAgg(df)
-          val got = saltedToMap(results(i))
-          assert(got.size == expected.size, s"batch $i row count")
-          for ((k, (sv, n)) <- expected) {
-            val (gsv, gn) = got(k)
-            assert(gn == n, s"batch $i key $k count")
-            assert(math.abs(gsv - sv) < 1e-6, s"batch $i key $k sum: $gsv vs $sv")
-          }
-          // the collect-merge path: hot key's merged list holds every value
-          val hot = results(i).find(_.getAs[Long]("k") == 0L).get
-          assert(hot.getSeq[Double](hot.fieldIndex("collect_v")).size == expected(0L)._2)
-        }
-      } finally q.stop()
-    } finally {
-      spark.conf.set(coalesceKey, prevCoalesce)
-      spark.sparkContext.removeSparkListener(monitor)
+    val salter = new AdaptiveSalter(new SkewMonitor(settings), settings, aggressiveSalt = 32)
+    val results = ArrayBuffer.empty[Array[Row]]
+    val spec = SaltedAggregation.Spec(sums = Seq("v"), counts = true, collects = Seq("v"))
+    val body = AdaptiveReshape.foreachBatchBody(Seq("k"), spec, salter) {
+      (agg, _, _) => results += agg.collect()
     }
+
+    val in = MemoryStream[(Long, Double)]
+    val q = in.toDF().toDF("k", "v").writeStream.foreachBatch(body).start()
+    try {
+      // batch 0: uniform — no evidence yet, salt must stay 1
+      val b0 = uniformRows(6400).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      in.addData(b0.toIndexedSeq); q.processAllAvailable()
+      // a concurrent FOREIGN job with genuinely skewed load: evidence is
+      // the loop's own batch input, so this must never raise the salt
+      spark.sparkContext.setJobGroup("foreign-skew", "foreign skewed job")
+      try skewedRows(20000).groupBy("k").agg(collect_list(col("v"))).collect()
+      finally spark.sparkContext.clearJobGroup()
+
+      // batch 1: skew arrives — but its tick reads batch 0's uniform
+      // sketch, so the controller must still not act
+      val b1 = skewedRows(20000).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      in.addData(b1.toIndexedSeq); q.processAllAvailable()
+      // batch 2: its tick reads batch 1's skewed sketch — salt rises
+      val b2 = skewedRows(4000).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      in.addData(b2.toIndexedSeq); q.processAllAvailable()
+
+      val history = salter.saltHistory
+      assert(history.size == 3, s"expected 3 batch ticks, got $history")
+      assert(history(0) == 1, s"batch 0 must run unsalted (no evidence): $history")
+      assert(history(1) == 1, s"uniform evidence must not trigger salting: $history")
+      assert(history(2) > 1, s"skew evidence must raise the salt: $history")
+
+      // result-identity per batch vs the unmitigated aggregation
+      val inputs = Seq(b0, b1, b2)
+      for ((batchRows, i) <- inputs.zipWithIndex) {
+        val df = spark.createDataFrame(
+          spark.sparkContext.parallelize(batchRows.toIndexedSeq.map(t => Row(t._1, t._2))),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("k",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("v",
+              org.apache.spark.sql.types.DoubleType, nullable = false)
+          ))
+        )
+        val expected = plainAgg(df)
+        val got = saltedToMap(results(i))
+        assert(got.size == expected.size, s"batch $i row count")
+        for ((k, (sv, n)) <- expected) {
+          val (gsv, gn) = got(k)
+          assert(gn == n, s"batch $i key $k count")
+          assert(math.abs(gsv - sv) < 1e-6, s"batch $i key $k sum: $gsv vs $sv")
+        }
+        // the collect-merge path: hot key's merged list holds every value
+        val hot = results(i).find(_.getAs[Long]("k") == 0L).get
+        assert(hot.getSeq[Double](hot.fieldIndex("collect_v")).size == expected(0L)._2)
+      }
+    } finally q.stop()
   }
 
   test("adaptive salted join body re-salts per batch with identical results") {
@@ -176,12 +156,19 @@ class AdaptiveSkewSpec extends AnyFunSuite {
     val settings = ReshapeConfig.from(spark)
     val monitor = new SkewMonitor(settings)
     val salter = new AdaptiveSalter(monitor, settings, aggressiveSalt = 16)
-    // no listener attached: simulate ticks with no fresh evidence after
-    // a manual raise — the salt must not decay (routing tables persist
-    // in the reference's workers)
+    // ticks with no evidence (no batch has run) hold salt 1
     assert(salter.nextSalt() == 1)
     assert(salter.nextSalt() == 1)
     assert(salter.saltHistory == Seq(1, 1))
+    // once skew raised it, uniform evidence must not lower the salt
+    // (routing tables persist in the reference's workers)
+    val body = AdaptiveReshape.foreachBatchBody(Seq("k"), SaltedAggregation.Spec(), salter) {
+      (agg, _, _) => agg.collect()
+    }
+    body(skewedRows(4000), 0L)
+    body(uniformRows(6400), 1L)
+    body(uniformRows(6400), 2L)
+    assert(salter.saltHistory == Seq(1, 1, 1, 16, 16))
   }
 
   test("salted aggregation merges collect_list partials losslessly") {
