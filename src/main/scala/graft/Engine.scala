@@ -51,7 +51,7 @@ object Engine {
     // needed.
     .config("spark.sql.shuffle.partitions", cpus.toString)
     // events.ts is parquet TIMESTAMP(NANOS) which Spark cannot read
-    // natively; read the raw int64 nanos and convert in Tables.events.
+    // natively; read the raw int64 nanos and convert in eventTime.
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The driver writes timestamps with isAdjustedToUTC=false; Spark 4
     // would infer TIMESTAMP_NTZ for those, which collects as
@@ -84,6 +84,24 @@ object Engine {
       }
     }
 
+  /** events.ts as a microsecond TimestampType column, for a batch read
+    * or a stream of the events table. The driver's events.parquet
+    * carries TIMESTAMP(NANOS), surfaced as int64 nanos by the
+    * nanosAsLong config; an events table from any other producer
+    * (including our own scaled-up copies) is already a micros
+    * TimestampType and passes through. Floor division keeps truncation
+    * identical to what an ns-native engine gets after any ≥1µs
+    * date_trunc/epoch bucketing (all ts are positive).
+    */
+  def eventTime(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    events.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        events.withColumn("ts", timestamp_micros((col("ts") / lit(1000L)).cast("long")))
+      case _ => events
+    }
+  }
+
   /** Lazy handles to the driver-generated test tables in `dir`.
     * Each is a plain parquet scan — Catalyst pushes filters/projections
     * into it, so callers should NOT cache or materialize here.
@@ -107,27 +125,7 @@ object Engine {
     def orders: DataFrame = t("orders")
     def lineitem: DataFrame = t("lineitem")
 
-    /** events.ts arrives as int64 nanos (see nanosAsLong config);
-      * expose it as a microsecond TimestampType column. Floor division
-      * keeps truncation identical to what an ns-native engine gets
-      * after any ≥1µs date_trunc/epoch bucketing (all ts are positive).
-      */
-    def events: DataFrame = {
-      import org.apache.spark.sql.functions._
-      val raw = t("events")
-      // the driver's events.parquet carries TIMESTAMP(NANOS), surfaced
-      // as int64 nanos by the nanosAsLong config; an events table from
-      // any other producer (including our own scaled-up copies) is a
-      // regular micros TimestampType and needs no conversion
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn(
-            "ts",
-            timestamp_micros((col("ts") / lit(1000L)).cast("long"))
-          )
-        case _ => raw
-      }
-    }
+    def events: DataFrame = eventTime(t("events"))
     def documents: DataFrame = t("documents")
     def embeddings: DataFrame = t("embeddings")
   }

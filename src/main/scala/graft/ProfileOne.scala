@@ -73,11 +73,9 @@ object ProfileOne {
             .write.mode("overwrite").format("noop").save()
         }
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener bus is async; give it a beat before reading. On a
-        // loaded host 300 ms can still undercount stages (r21 ADVICE) —
-        // acceptable for this diagnostic-only report; cross-check
-        // repeats if a stage seems missing.
-        Thread.sleep(300)
+        // the listener bus is async: drain it so every job and stage of
+        // this run is counted before reading
+        org.apache.spark.GraftAccess.drainListeners(spark.sparkContext)
         println(f"[profile] === $name repeat $i wall=$wall%.3f s ===")
         col.report()
       }

@@ -970,15 +970,11 @@ object DedupQueries extends QueryModule {
         import s.implicits._
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val k = SpanWords
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        // state-pinned cloned session: state-volume-sized shuffle
-        // partitions for the stateful query, parent conf untouched; the
-        // clone is created INSIDE withRocksDb so it inherits the
-        // provider pin (StreamingOps.statePinnedSession copies the
-        // parent's runtime conf)
-        val ps = graft.streaming.StreamingOps.statePinnedSession(s)
-        val src = ps.readStream.schema(raw.schema)
-          .parquet(StateQueries.asStreamDir(s"$dir/documents.parquet"))
+        val path = s"$dir/documents.parquet"
+        // the state-pinned clone is created INSIDE withRocksDb so it
+        // inherits the provider pin
+        val src = graft.streaming.StreamingOps
+          .replaySource(s, path, s.read.parquet(path).schema)
         val spans = src
           .select(col("doc_id"), split(col("text"), " ").as("w"))
           .select(
@@ -999,30 +995,12 @@ object DedupQueries extends QueryModule {
             new graft.streaming.Tws.SpanMinProcessor,
             TimeMode.None(),
             OutputMode.Update())
-        val ckpt = graft.TempPaths
-          .dir("graft_online_ckpt").toString
-        val sink =
-          s"dedup_online_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val q = verdicts.toDF().writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(sink)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        // materialize off the memory sink, then drop the sink table —
-        // no per-invocation registry litter in long-lived sessions.
-        // Memory-sink temp views are session-scoped: read via ps, the
-        // session the query ran on.
-        val res = ps.table(sink)
-          .groupBy(col("doc_id"))
-          .agg(min(col("span_min")).as("first_ref"))
-          .select(col("doc_id"), col("first_ref"),
-            (col("first_ref") < col("doc_id")).as("is_dup"))
-          .localCheckpoint()
-        ps.catalog.dropTempView(sink)
-        res
+        graft.streaming.StreamingOps.replayToMemory(verdicts.toDF(), "dedup_online") {
+          _.groupBy(col("doc_id"))
+            .agg(min(col("span_min")).as("first_ref"))
+            .select(col("doc_id"), col("first_ref"),
+              (col("first_ref") < col("doc_id")).as("is_dup"))
+        }
       },
       Some(s"""
         WITH words AS (

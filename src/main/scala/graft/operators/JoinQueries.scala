@@ -1,7 +1,9 @@
 package graft.operators
 
-import graft.{QueryDef, QueryModule}
+import graft.{Engine, QueryDef, QueryModule, TempPaths}
 import graft.plans.AsOfJoin
+import graft.streaming.StreamingOps
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §2.3 joins: inner/outer/semi/anti/cross, multiway, broadcast dim,
@@ -268,54 +270,12 @@ object JoinQueries extends QueryModule {
     // StreamingSpec's job; this entry pins streaming==batch==oracle.
     QueryDef(
       "q_join_stream_stream",
-      (s, dir) => {
-        val path = s"$dir/events.parquet"
-        val raw = s.read.parquet(path)
-        // the file stream source monitors a DIRECTORY; a single-file
-        // table is exposed through a symlinked temp dir
-        val streamPath = {
-          val f = new java.io.File(path)
-          if (f.isDirectory) path
-          else {
-            val d = graft.TempPaths.dir("graft_ssjoin_src")
-            java.nio.file.Files
-              .createSymbolicLink(d.resolve("events.parquet"), f.toPath)
-            d.toString
-          }
-        }
-        // built on the state-pinned cloned session so the stateful
-        // query plans with state-volume-sized shuffle partitions while
-        // the parent session's conf is never touched
-        // (StreamingOps.statePinnedSession)
-        val ps = graft.streaming.StreamingOps.statePinnedSession(s)
-        val src0 = ps.readStream.schema(raw.schema).parquet(streamPath)
-        val src = raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            src0.withColumn("ts",
-              timestamp_micros((col("ts") / lit(1000L)).cast("long")))
-          case _ => src0
-        }
-        val joined = graft.streaming.StreamingOps.intervalJoin(
-          src.filter(col("event_type") === "signup"),
-          src.filter(col("event_type") === "purchase"))
-        val outDir = graft.TempPaths
-          .dir("graft_ssjoin_out").toString
-        val ckpt = graft.TempPaths
-          .dir("graft_ssjoin_ckpt").toString
-        val q = joined.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").parquet(outDir)
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        s.read.parquet(outDir)
+      (s, dir) =>
+        streamJoinPairs(s, dir, "inner")._2
           .groupBy(col("s_user"))
           .agg(
             count(lit(1)).as("n_pairs"),
-            round(sum(col("p_value")), 4).as("v_sum"))
-      },
+            round(sum(col("p_value")), 4).as("v_sum")),
       Some("""
         SELECT s.user_id AS s_user, count(*) AS n_pairs,
                round(sum(p.value), 4) AS v_sum
@@ -333,62 +293,13 @@ object JoinQueries extends QueryModule {
     // watermark passes the signup's join horizon (s_ts + 30min window
     // + 10min delay). Signups inside that horizon of the stream's end
     // stay in state forever, so BOTH engines are cut at the same
-    // explicit horizon (max(ts) - 41min: join window + watermark + 1min
-    // margin so no row sits exactly on the eviction boundary) and the
-    // comparison is exact. The cutoff bound travels as a broadcast
-    // 1-row aggregate — no driver-side value.
+    // explicit `horizon` and the comparison is exact.
     QueryDef(
       "q_join_stream_stream_left",
       (s, dir) => {
-        val path = s"$dir/events.parquet"
-        val raw = s.read.parquet(path)
-        val streamPath = {
-          val f = new java.io.File(path)
-          if (f.isDirectory) path
-          else {
-            val d = graft.TempPaths.dir("graft_ssjoinl_src")
-            java.nio.file.Files
-              .createSymbolicLink(d.resolve("events.parquet"), f.toPath)
-            d.toString
-          }
-        }
-        // built on the state-pinned cloned session so the stateful
-        // query plans with state-volume-sized shuffle partitions while
-        // the parent session's conf is never touched
-        // (StreamingOps.statePinnedSession)
-        val ps = graft.streaming.StreamingOps.statePinnedSession(s)
-        val src0 = ps.readStream.schema(raw.schema).parquet(streamPath)
-        def fixTs(df: org.apache.spark.sql.DataFrame) =
-          raw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType =>
-              df.withColumn("ts",
-                timestamp_micros((col("ts") / lit(1000L)).cast("long")))
-            case _ => df
-          }
-        val src = fixTs(src0)
-        val joined = graft.streaming.StreamingOps.intervalJoinLeftOuter(
-          src.filter(col("event_type") === "signup"),
-          src.filter(col("event_type") === "purchase"))
-        val outDir = graft.TempPaths.dir("graft_ssjoinl_out").toString
-        val ckpt = graft.TempPaths.dir("graft_ssjoinl_ckpt").toString
-        val q = joined.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").parquet(outDir)
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        // the combined watermark is the MIN across both sides' nodes,
-        // each seeing only its filtered events — so the horizon is
-        // least(max signup ts, max purchase ts), not the global max
-        val horizon = fixTs(raw)
-          .agg((least(
-            max(when(col("event_type") === "signup", col("ts"))),
-            max(when(col("event_type") === "purchase", col("ts"))))
-            - expr("INTERVAL 41 MINUTES")).as("cut"))
-        s.read.parquet(outDir)
-          .crossJoin(broadcast(horizon))
+        val (events, pairs) = streamJoinPairs(s, dir, "leftOuter")
+        pairs
+          .crossJoin(broadcast(horizon(events)))
           .filter(col("s_ts") < col("cut"))
           .groupBy(col("s_user"))
           .agg(
@@ -423,52 +334,9 @@ object JoinQueries extends QueryModule {
     QueryDef(
       "q_join_stream_stream_right",
       (s, dir) => {
-        val path = s"$dir/events.parquet"
-        val raw = s.read.parquet(path)
-        val streamPath = {
-          val f = new java.io.File(path)
-          if (f.isDirectory) path
-          else {
-            val d = graft.TempPaths.dir("graft_ssjoinr_src")
-            java.nio.file.Files
-              .createSymbolicLink(d.resolve("events.parquet"), f.toPath)
-            d.toString
-          }
-        }
-        // built on the state-pinned cloned session so the stateful
-        // query plans with state-volume-sized shuffle partitions while
-        // the parent session's conf is never touched
-        // (StreamingOps.statePinnedSession)
-        val ps = graft.streaming.StreamingOps.statePinnedSession(s)
-        val src0 = ps.readStream.schema(raw.schema).parquet(streamPath)
-        def fixTs(df: org.apache.spark.sql.DataFrame) =
-          raw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType =>
-              df.withColumn("ts",
-                timestamp_micros((col("ts") / lit(1000L)).cast("long")))
-            case _ => df
-          }
-        val src = fixTs(src0)
-        val joined = graft.streaming.StreamingOps.intervalJoinRightOuter(
-          src.filter(col("event_type") === "signup"),
-          src.filter(col("event_type") === "purchase"))
-        val outDir = graft.TempPaths.dir("graft_ssjoinr_out").toString
-        val ckpt = graft.TempPaths.dir("graft_ssjoinr_ckpt").toString
-        val q = joined.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").parquet(outDir)
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        val horizon = fixTs(raw)
-          .agg((least(
-            max(when(col("event_type") === "signup", col("ts"))),
-            max(when(col("event_type") === "purchase", col("ts"))))
-            - expr("INTERVAL 41 MINUTES")).as("cut"))
-        s.read.parquet(outDir)
-          .crossJoin(broadcast(horizon))
+        val (events, pairs) = streamJoinPairs(s, dir, "rightOuter")
+        pairs
+          .crossJoin(broadcast(horizon(events)))
           .filter(col("p_ts") < col("cut"))
           .groupBy(col("p_user"))
           .agg(
@@ -498,9 +366,8 @@ object JoinQueries extends QueryModule {
     // FULL OUTER stream-stream join — the last of the reference's
     // inner/left/right/full family (StreamExecJoin.java:61; right outer
     // is the left-outer with sides swapped, see StreamingOps). Both
-    // sides cut at ONE horizon C = least(max signup ts, max purchase
-    // ts) - 41min (inside both eviction guarantees: signups need
-    // wm > s_ts+30min, purchases wm > p_ts). Matched-ness must be
+    // sides cut at ONE `horizon` C (inside both eviction guarantees:
+    // signups need wm > s_ts+30min, purchases wm > p_ts). Matched-ness must be
     // judged AGAINST THE CUT SIDES, so the dumped rows are classified
     // batch-side: a pair row with an out-of-cut counterpart makes the
     // in-cut row "only"-classified exactly as the batch full join of
@@ -510,51 +377,8 @@ object JoinQueries extends QueryModule {
     QueryDef(
       "q_join_stream_stream_full",
       (s, dir) => {
-        val path = s"$dir/events.parquet"
-        val raw = s.read.parquet(path)
-        val streamPath = {
-          val f = new java.io.File(path)
-          if (f.isDirectory) path
-          else {
-            val d = graft.TempPaths.dir("graft_ssjoinf_src")
-            java.nio.file.Files
-              .createSymbolicLink(d.resolve("events.parquet"), f.toPath)
-            d.toString
-          }
-        }
-        // built on the state-pinned cloned session so the stateful
-        // query plans with state-volume-sized shuffle partitions while
-        // the parent session's conf is never touched
-        // (StreamingOps.statePinnedSession)
-        val ps = graft.streaming.StreamingOps.statePinnedSession(s)
-        val src0 = ps.readStream.schema(raw.schema).parquet(streamPath)
-        def fixTs(df: org.apache.spark.sql.DataFrame) =
-          raw.schema("ts").dataType match {
-            case org.apache.spark.sql.types.LongType =>
-              df.withColumn("ts",
-                timestamp_micros((col("ts") / lit(1000L)).cast("long")))
-            case _ => df
-          }
-        val src = fixTs(src0)
-        val joined = graft.streaming.StreamingOps.intervalJoinFullOuter(
-          src.filter(col("event_type") === "signup"),
-          src.filter(col("event_type") === "purchase"))
-        val outDir = graft.TempPaths.dir("graft_ssjoinf_out").toString
-        val ckpt = graft.TempPaths.dir("graft_ssjoinf_ckpt").toString
-        val q = joined.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").parquet(outDir)
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        val horizon = fixTs(raw)
-          .agg((least(
-            max(when(col("event_type") === "signup", col("ts"))),
-            max(when(col("event_type") === "purchase", col("ts"))))
-            - expr("INTERVAL 41 MINUTES")).as("cut"))
-        val d = s.read.parquet(outDir).crossJoin(broadcast(horizon))
+        val (events, pairs) = streamJoinPairs(s, dir, "fullOuter")
+        val d = pairs.crossJoin(broadcast(horizon(events)))
         // matched = both sides in cut (pair emission is complete)
         val matched = d
           .filter(col("s_ts") < col("cut") && col("p_ts") < col("cut"))
@@ -764,4 +588,45 @@ object JoinQueries extends QueryModule {
           ON p.user_id = s.user_id AND p.ts ${if (forward) "<=" else ">="} s.ts
       """)
     )
+
+  /** The bounded stream-stream replay behind q_join_stream_stream*:
+    * events.parquet replayed through the file source into
+    * StreamingSymmetricHashJoinExec (`StreamingOps.intervalJoin` of
+    * `joinType` on the signup and purchase sides), its pairs landed
+    * distributed via foreachBatch->parquet and read back on the parent
+    * session. Returns the batch events table (for `horizon`) and the
+    * pairs.
+    */
+  private def streamJoinPairs(s: SparkSession, dir: String, joinType: String)
+      : (DataFrame, DataFrame) = {
+    val path = s"$dir/events.parquet"
+    val raw = s.read.parquet(path)
+    val src = Engine.eventTime(StreamingOps.replaySource(s, path, raw.schema))
+    val joined = StreamingOps.intervalJoin(
+      src.filter(col("event_type") === "signup"),
+      src.filter(col("event_type") === "purchase"),
+      joinType)
+    val outDir = TempPaths.dir("graft_ssjoin_out").toString
+    StreamingOps.runToEnd(
+      joined.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(outDir)
+      },
+      "ssjoin")
+    (Engine.eventTime(raw), s.read.parquet(outDir))
+  }
+
+  /** The one cut C both engines apply to an outer replay: every row
+    * before C has passed its eviction horizon in the stream. The
+    * combined watermark is the MIN across both sides' nodes, each
+    * seeing only its filtered events, so C starts from least(max signup
+    * ts, max purchase ts), not the global max, minus 41min: the 30min
+    * join window + the 10min watermark delay + 1min margin so no row
+    * sits exactly on the eviction boundary. A 1-row aggregate, joined
+    * as a broadcast: no driver-side value.
+    */
+  private def horizon(events: DataFrame): DataFrame =
+    events.agg((least(
+      max(when(col("event_type") === "signup", col("ts"))),
+      max(when(col("event_type") === "purchase", col("ts"))))
+      - expr("INTERVAL 41 MINUTES")).as("cut"))
 }

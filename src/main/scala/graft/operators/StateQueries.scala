@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Engine, QueryDef, QueryModule}
+import graft.{QueryDef, QueryModule}
+import graft.streaming.{StreamingOps, Tws}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,47 +29,18 @@ import org.apache.spark.sql.functions._
   */
 object StateQueries extends QueryModule {
 
-  /** File-stream-source path for a single-file parquet table: the
-    * source monitors a directory, so a bare file is exposed through a
-    * symlinked temp dir (same trick as q_join_stream_stream).
-    */
-  private[operators] def asStreamDir(path: String): String = {
-    val f = new java.io.File(path)
-    if (f.isDirectory) path
-    else {
-      val d = graft.TempPaths.dir("graft_state_src")
-      java.nio.file.Files
-        .createSymbolicLink(d.resolve("events.parquet"), f.toPath)
-      d.toString
-    }
-  }
-
   /** Streaming per-user aggregation whose only output is its state
     * store; returns the checkpoint location.
     */
   private def runAggToState(s: SparkSession, dir: String): String = {
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    // state-pinned cloned session: state-volume-sized shuffle partitions
-    // for the stateful query, parent conf untouched
-    // (StreamingOps.statePinnedSession)
-    val ps = graft.streaming.StreamingOps.statePinnedSession(s)
-    val src = ps.readStream.schema(raw.schema)
-      .parquet(asStreamDir(s"$dir/events.parquet"))
-    val agg = src
+    val path = s"$dir/events.parquet"
+    val agg = StreamingOps.replaySource(s, path, s.read.parquet(path).schema)
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value")).as("v_sum"))
-    val ckpt = graft.TempPaths
-      .dir("graft_state_ckpt").toString
-    val q = agg.writeStream
-      .outputMode("update")
-      .format("noop")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    ckpt
+    StreamingOps.runToEnd(
+      agg.writeStream.outputMode("update").format("noop"), "state")
   }
 
   /** Read the aggregation's state store as a table. Key/value struct
@@ -102,49 +74,28 @@ object StateQueries extends QueryModule {
     * aggregation, which is the oracle.
     */
   private def runTwsProfile(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Tws.withRocksDb(s) {
+    Tws.withRocksDb(s) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      // state-pinned clone created INSIDE withRocksDb so it inherits
-      // the provider pin (statePinnedSession copies the runtime conf)
-      val ps = graft.streaming.StreamingOps.statePinnedSession(s)
-      val src = ps.readStream.schema(raw.schema)
-        .parquet(asStreamDir(s"$dir/events.parquet"))
+      val path = s"$dir/events.parquet"
+      // the state-pinned clone is created INSIDE withRocksDb so it
+      // inherits the provider pin
+      val src = StreamingOps.replaySource(s, path, s.read.parquet(path).schema)
         .select(col("user_id"), col("event_type"), col("value"))
-        .as[graft.streaming.Tws.TwsEvent]
+        .as[Tws.TwsEvent]
       val out = src.groupByKey(_.user_id)
         .transformWithState(
-          new graft.streaming.Tws.KeyedProfileProcessor,
+          new Tws.KeyedProfileProcessor,
           TimeMode.None(),
           OutputMode.Update())
-      val ckpt = graft.TempPaths
-        .dir("graft_tws_ckpt").toString
-      val sink = s"tws_profile_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = out.toDF().writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
       // update-mode sink appends one profile per key per microbatch;
-      // n_events grows monotonically, so max(struct) is the final one.
-      // localCheckpoint materializes the aggregation off the memory
-      // sink so the table can be dropped immediately — long-lived
-      // sessions would otherwise accumulate one registered sink table
-      // per invocation
-      // memory-sink temp views are session-scoped: read via ps, the
-      // session the query ran on
-      val res = ps.table(sink)
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n_events"), col("n_types"), col("v_max"))).as("p"))
-        .select(col("user_id"), col("p.n_events").as("n_events"),
-          col("p.n_types").as("n_types"), col("p.v_max").as("v_max"))
-        .localCheckpoint()
-      ps.catalog.dropTempView(sink)
-      res
+      // n_events grows monotonically, so max(struct) is the final one
+      StreamingOps.replayToMemory(out.toDF(), "tws_profile") {
+        _.groupBy(col("user_id"))
+          .agg(max(struct(col("n_events"), col("n_types"), col("v_max"))).as("p"))
+          .select(col("user_id"), col("p.n_events").as("n_events"),
+            col("p.n_types").as("n_types"), col("p.v_max").as("v_max"))
+      }
     }
 
   def defs: Seq[QueryDef] = Seq(

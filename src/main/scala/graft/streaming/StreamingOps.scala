@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 import java.sql.Timestamp
 
@@ -14,7 +15,8 @@ import java.sql.Timestamp
   *    SliceAssigners) → window()/session_window() group-bys
   *  - StreamExecDeduplicate keep-first → dropDuplicates within
   *    watermark
-  *  - StreamExecIntervalJoin → stream-stream join with a watermarked
+  *  - StreamExecIntervalJoin / StreamExecJoin inner/left/right/full →
+  *    `intervalJoin`, a stream-stream join with a watermarked
   *    time-range condition
   *  - StreamExecRank / AppendOnlyTopNFunction (streaming Top-N) and
   *    KeyedProcessFunction + timers → flatMapGroupsWithState
@@ -24,6 +26,11 @@ import java.sql.Timestamp
   * state is keyed state in the state store — nothing driver-side — so
   * a 1000-executor cluster partitions it by key exactly like any
   * shuffle.
+  *
+  * The oracle-checked stateful queries replay a parquet table through
+  * them with one bounded-replay path: `replaySource` (file stream on
+  * the state-pinned session), `runToEnd` (fresh checkpoint, drain,
+  * stop) and, for update-mode results, `replayToMemory`.
   */
 object StreamingOps {
 
@@ -135,6 +142,56 @@ object StreamingOps {
       pinned
     }
 
+  /** Bounded replay, the source: the file stream of one parquet table
+    * at `path`, built on the state-pinned session so the stateful query
+    * plans with state-volume-sized partitions. `schema` is the table's
+    * batch schema: a join replay reads the table once for both the
+    * schema and its batch-side horizon. The file source monitors a
+    * directory, so a single file is exposed through a symlinked temp
+    * dir under its own name. Called inside `Tws.withRocksDb`, the clone
+    * inherits the provider pin.
+    */
+  def replaySource(s: SparkSession, path: String, schema: StructType): DataFrame = {
+    val f = new java.io.File(path)
+    val dir =
+      if (f.isDirectory) path
+      else {
+        val d = graft.TempPaths.dir("graft_replay_src")
+        java.nio.file.Files.createSymbolicLink(d.resolve(f.getName), f.toPath)
+        d.toString
+      }
+    statePinnedSession(s).readStream.schema(schema).parquet(dir)
+  }
+
+  /** Bounded replay, the run: start `writer` on a fresh checkpoint,
+    * drain every available input, stop. Returns the checkpoint dir.
+    * This is the one place a replay's micro-batches and state commits
+    * happen.
+    */
+  def runToEnd(writer: DataStreamWriter[Row], name: String): String = {
+    val ckpt = graft.TempPaths.dir(s"graft_${name}_ckpt").toString
+    val q = writer.option("checkpointLocation", ckpt).start()
+    try q.processAllAvailable()
+    finally q.stop()
+    ckpt
+  }
+
+  /** Bounded replay into an update-mode memory sink: `finish` reads the
+    * sink table, its result is materialized with `localCheckpoint`, and
+    * the table is dropped even when the run or `finish` throws, so a
+    * long-lived session never keeps one sink table per call. The sink
+    * table is session-scoped: it is read through the session `out` runs
+    * on (the state-pinned clone for a `replaySource` stream).
+    */
+  def replayToMemory(out: DataFrame, name: String)(finish: DataFrame => DataFrame): DataFrame = {
+    val ps = out.sparkSession
+    val sink = s"${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    try {
+      runToEnd(out.writeStream.outputMode("update").format("memory").queryName(sink), name)
+      finish(ps.table(sink)).localCheckpoint()
+    } finally ps.catalog.dropTempView(sink)
+  }
+
   final case class Event(
       event_id: Long,
       ts: Timestamp,
@@ -181,52 +238,25 @@ object StreamingOps {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
-  /** Stream-stream interval join: purchases within `windowSpec` after a
-    * signup of the same user (reference TimeIntervalJoin semantics).
-    * Both sides watermarked so join state is evicted.
+  /** Stream-stream interval join (reference TimeIntervalJoin,
+    * StreamExecJoin.java:61): a purchase pairs with a signup of the
+    * same user when it falls within 30 minutes at-or-after it. Both
+    * sides are watermarked, so join state is evicted. `joinType` is
+    * any of Spark's `inner`, `leftOuter`, `rightOuter`, `fullOuter`.
+    * Matched pairs emit eagerly; an unmatched row of a kept side emits
+    * ONCE, null-extended, when the watermark passes its eviction
+    * horizon, the point where no counterpart can still arrive:
+    *  - a signup at wm > s_ts + 30min (the join window);
+    *  - a purchase at wm > p_ts (it only matches signups at-or-before
+    *    it, so there is no window term).
+    * Rows within (horizon + watermark delay) of a bounded stream's end
+    * therefore stay in state unemitted; batch-parity consumers cut
+    * both engines at one horizon (see q_join_stream_stream_left).
     */
   def intervalJoin(
       signups: DataFrame,
       purchases: DataFrame,
-      watermark: String = "10 minutes"
-  ): DataFrame = {
-    val s = signups
-      .withWatermark("ts", watermark)
-      .select(
-        col("user_id").as("s_user"),
-        col("ts").as("s_ts"),
-        col("event_id").as("s_id")
-      )
-    val p = purchases
-      .withWatermark("ts", watermark)
-      .select(
-        col("user_id").as("p_user"),
-        col("ts").as("p_ts"),
-        col("event_id").as("p_id"),
-        col("value").as("p_value")
-      )
-    s.join(
-      p,
-      col("s_user") === col("p_user") &&
-        col("p_ts") >= col("s_ts") &&
-        col("p_ts") <= col("s_ts") + expr("INTERVAL 30 MINUTES")
-    )
-  }
-
-  /** LEFT OUTER stream-stream interval join (reference
-    * StreamExecJoin.java:61 keeps state on both sides for
-    * inner/left/right/full): matched pairs emit eagerly like the inner
-    * join; an unmatched signup emits ONCE with nulls when the
-    * watermark passes s_ts + 30min (its state-eviction time) — i.e.
-    * Spark can finally prove no purchase will ever match it. Signups
-    * within (30min join window + watermark delay) of the stream's end
-    * therefore stay in state unemitted; batch-parity consumers must
-    * cut both engines at the same horizon (see
-    * q_join_stream_stream_left).
-    */
-  def intervalJoinLeftOuter(
-      signups: DataFrame,
-      purchases: DataFrame,
+      joinType: String = "inner",
       watermark: String = "10 minutes"
   ): DataFrame = {
     val s = signups
@@ -249,77 +279,7 @@ object StreamingOps {
       col("s_user") === col("p_user") &&
         col("p_ts") >= col("s_ts") &&
         col("p_ts") <= col("s_ts") + expr("INTERVAL 30 MINUTES"),
-      "leftOuter"
-    )
-  }
-
-  /** RIGHT OUTER stream-stream interval join: every purchase survives,
-    * null-extended once the watermark passes p_ts (a purchase only
-    * matches signups at-or-before it, so its horizon is its own
-    * timestamp — no +30min window term, unlike the left side).
-    */
-  def intervalJoinRightOuter(
-      signups: DataFrame,
-      purchases: DataFrame,
-      watermark: String = "10 minutes"
-  ): DataFrame = {
-    val s = signups
-      .withWatermark("ts", watermark)
-      .select(
-        col("user_id").as("s_user"),
-        col("ts").as("s_ts"),
-        col("event_id").as("s_id")
-      )
-    val p = purchases
-      .withWatermark("ts", watermark)
-      .select(
-        col("user_id").as("p_user"),
-        col("ts").as("p_ts"),
-        col("event_id").as("p_id"),
-        col("value").as("p_value")
-      )
-    s.join(
-      p,
-      col("s_user") === col("p_user") &&
-        col("p_ts") >= col("s_ts") &&
-        col("p_ts") <= col("s_ts") + expr("INTERVAL 30 MINUTES"),
-      "rightOuter"
-    )
-  }
-
-  /** FULL OUTER stream-stream interval join — the last face of the
-    * reference's inner/left/right/full family (StreamExecJoin.java:61).
-    * Matched pairs emit eagerly; each side's unmatched rows null-extend
-    * when the watermark proves no counterpart can arrive (signups at
-    * wm > s_ts + 30min, purchases at wm > p_ts — purchases only match
-    * signups at-or-before them).
-    */
-  def intervalJoinFullOuter(
-      signups: DataFrame,
-      purchases: DataFrame,
-      watermark: String = "10 minutes"
-  ): DataFrame = {
-    val s = signups
-      .withWatermark("ts", watermark)
-      .select(
-        col("user_id").as("s_user"),
-        col("ts").as("s_ts"),
-        col("event_id").as("s_id")
-      )
-    val p = purchases
-      .withWatermark("ts", watermark)
-      .select(
-        col("user_id").as("p_user"),
-        col("ts").as("p_ts"),
-        col("event_id").as("p_id"),
-        col("value").as("p_value")
-      )
-    s.join(
-      p,
-      col("s_user") === col("p_user") &&
-        col("p_ts") >= col("s_ts") &&
-        col("p_ts") <= col("s_ts") + expr("INTERVAL 30 MINUTES"),
-      "fullOuter"
+      joinType
     )
   }
 

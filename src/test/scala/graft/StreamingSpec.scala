@@ -93,7 +93,7 @@ class StreamingSpec extends AnyFunSuite {
       Event(12, ts(20), 3, "purchase", 1.0)   // no signup → no join
     )
     runToMemory(
-      StreamingOps.intervalJoin(sig.toDF(), pur.toDF()), "ij_out")
+      StreamingOps.intervalJoin(sig.toDF(), pur.toDF(), "inner"), "ij_out")
     val rows = spark.sql("SELECT s_user, p_id, p_value FROM ij_out")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(rows.toSeq == Seq((1L, 10L, 9.99)))
@@ -149,7 +149,7 @@ class StreamingSpec extends AnyFunSuite {
       Event(2, ts(0), 2, "signup", 0)  // never matched → null-extended
     )
     pur.addData(Event(10, ts(10), 1, "purchase", 9.99))
-    val out = StreamingOps.intervalJoinLeftOuter(sig.toDF(), pur.toDF())
+    val out = StreamingOps.intervalJoin(sig.toDF(), pur.toDF(), "leftOuter")
     val q = out.writeStream.format("memory").queryName("ijl_out")
       .outputMode("append").start()
     try {
@@ -183,7 +183,7 @@ class StreamingSpec extends AnyFunSuite {
       Event(10, ts(10), 1, "purchase", 9.99), // matches signup 1
       Event(11, ts(5), 3, "purchase", 4.0)    // unmatched → null-extended left side
     )
-    val out = StreamingOps.intervalJoinFullOuter(sig.toDF(), pur.toDF())
+    val out = StreamingOps.intervalJoin(sig.toDF(), pur.toDF(), "fullOuter")
     val q = out.writeStream.format("memory").queryName("ijf_out")
       .outputMode("append").start()
     try {
@@ -211,7 +211,7 @@ class StreamingSpec extends AnyFunSuite {
       Event(10, ts(10), 1, "purchase", 9.99), // matched
       Event(11, ts(5), 3, "purchase", 4.0)    // unmatched -> null-extended
     )
-    val out = StreamingOps.intervalJoinRightOuter(sig.toDF(), pur.toDF())
+    val out = StreamingOps.intervalJoin(sig.toDF(), pur.toDF(), "rightOuter")
     val q = out.writeStream.format("memory").queryName("ijr_out")
       .outputMode("append").start()
     try {

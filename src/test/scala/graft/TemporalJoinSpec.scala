@@ -33,7 +33,7 @@ class TemporalJoinSpec extends AnyFunSuite {
   private def ts(minutes: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${minutes / 60}%02d:${minutes % 60}%02d:00")
 
-  test("streaming as-of join matches batch native as-of across batches") {
+  test("streaming as-of join matches the batch as-of join across batches") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Tws
+import graft.streaming.{StreamingOps, Tws}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 import org.scalatest.funsuite.AnyFunSuite
@@ -142,6 +142,37 @@ class TwsSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
         assert(again.contains((1L, 1L, 4.0, 205000L)))
       } finally q.stop()
+    }
+  }
+
+  test("bounded replay drops its memory-sink table when the finishing step throws") {
+    import spark.implicits._
+    val dir = TempPaths.dir("tws_spec_replay")
+    Seq(Tws.TwsEvent(1, "click", 1.0), Tws.TwsEvent(2, "view", 2.0)).toDF()
+      .coalesce(1).write.parquet(dir.resolve("events").toString)
+    val file = new java.io.File(dir.resolve("events").toString).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    val schema = spark.read.parquet(file).schema
+    Tws.withRocksDb(spark) {
+      val out = StreamingOps.replaySource(spark, file, schema)
+        .as[Tws.TwsEvent]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new Tws.KeyedProfileProcessor, TimeMode.None(), OutputMode.Update())
+      val ps = StreamingOps.statePinnedSession(spark)
+      def sinks = ps.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("tws_leak_probe_"))
+      var seen = Seq.empty[String]
+      val err = intercept[IllegalStateException] {
+        StreamingOps.replayToMemory(out.toDF(), "tws_leak_probe") { t =>
+          seen = sinks.toSeq
+          assert(t.count() == 2L)
+          throw new IllegalStateException("finish failed")
+        }
+      }
+      assert(err.getMessage == "finish failed")
+      assert(seen.size == 1, s"the sink table must exist while finishing: $seen")
+      assert(sinks.isEmpty, s"the sink table must be dropped: ${sinks.toSeq}")
     }
   }
 }
