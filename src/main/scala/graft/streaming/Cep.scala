@@ -192,9 +192,9 @@ object Cep {
   def flush(pattern: SequencePattern, key: Long, st: NfaState): Seq[Match] =
     CepCore.flush(pattern, st).map(toMatch(key, _))
 
-  private def ordered(rows: Iterator[Event]): Seq[Event] =
-    // getNanos carries sub-millisecond precision getTime drops
-    rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
+  // getNanos carries sub-millisecond precision getTime drops
+  private val eventOrder: Ordering[Event] =
+    Ordering.by((e: Event) => (e.ts.getTime, e.ts.getNanos, e.event_id))
 
   /** Batch detection: each key's events processed in event-time order,
     * then pending greedy loops flushed at end-of-input (bounded data
@@ -204,9 +204,8 @@ object Cep {
     * key's FULL event history in one task's memory — a hot key with
     * 10^8 events is an OOM, the skew shape Reshape exists for), the
     * events are secondary-sorted (repartition by key, disk-backed
-    * sortWithinPartitions by key/time) and scanned per partition with
-    * one per-event NFA step. Working memory is the NFA's live partials
-    * (bounded by `within`), never the key's event list.
+    * sortWithinPartitions by key/time) and scanned per partition by
+    * [[CepCore.scanSortedPartition]], one NFA step per event.
     */
   def detectBatch(events: Dataset[Event], pattern: SequencePattern,
       pinParallelism: Boolean = true): Dataset[Match] = {
@@ -231,44 +230,11 @@ object Cep {
       else events.repartition(col("user_id"))
     keyed
       // Timestamp columns order by micros == (getTime, getNanos) here
-      // (Catalyst precision is micros), so this matches ordered()
+      // (Catalyst precision is micros), so this matches eventOrder
       .sortWithinPartitions(col("user_id"), col("ts"), col("event_id"))
       .mapPartitions { rows =>
-        new Iterator[Match] {
-          private var buf: Iterator[Match] = Iterator.empty
-          private var curKey = 0L
-          private var open = false
-          private var st = NfaState(Seq.empty, 0L)
-          private def fill(): Unit = {
-            while (!buf.hasNext && (rows.hasNext || open)) {
-              if (rows.hasNext) {
-                val e = rows.next()
-                if (open && e.user_id == curKey) {
-                  val (m, s) = advance(pattern, curKey, Seq(e), st)
-                  st = s
-                  buf = m.iterator
-                } else {
-                  val tail = if (open) flush(pattern, curKey, st) else Nil
-                  curKey = e.user_id
-                  open = true
-                  val (m, s) =
-                    advance(pattern, curKey, Seq(e), NfaState(Seq.empty, 0L))
-                  st = s
-                  buf = (tail ++ m).iterator
-                }
-              } else {
-                // end of partition: flush the last open key
-                buf = flush(pattern, curKey, st).iterator
-                open = false
-              }
-            }
-          }
-          override def hasNext: Boolean = { fill(); buf.hasNext }
-          override def next(): Match = {
-            if (!hasNext) throw new NoSuchElementException("empty iterator")
-            buf.next()
-          }
-        }
+        CepCore.scanSortedPartition(pattern, rows, (e: Event) => e.user_id,
+          tsMs) { (key, m, _) => Seq(toMatch(key, m)) }
       }
   }
 
@@ -294,7 +260,7 @@ object Cep {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: Long, rows: Iterator[Event], state: GroupState[NfaState]) =>
           val initial = state.getOption.getOrElse(NfaState(Seq.empty, 0L))
-          val (matches, st) = advance(pattern, key, ordered(rows), initial)
+          val (matches, st) = advance(pattern, key, rows.toSeq.sorted(eventOrder), initial)
           // no live partials → drop the key's state entirely; the seq
           // counter may reset, which is safe because skip-strategy
           // comparisons only ever involve live partials. A pattern
@@ -325,39 +291,13 @@ object Cep {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: Long, rows: Iterator[Event], state: GroupState[NfaState]) =>
-          val initial = state.getOption.getOrElse(NfaState(Seq.empty, 0L))
-          val wm = state.getCurrentWatermarkMs()
-          // retire partials the watermark has expired (covers both the
-          // timeout path and stale partials on a data batch)
-          val (expired, alive) =
-            initial.partials.partition(p => wm - p.startTs > pattern.withinMs)
-          val expiredMatches = flush(pattern, key, initial.copy(partials = expired))
-          val (matches, st) =
-            if (state.hasTimedOut) (Seq.empty[Match], initial.copy(partials = alive))
-            else advance(pattern, key, ordered(rows), initial.copy(partials = alive))
-          if (st.partials.isEmpty &&
-            (!pattern.needsPrev || state.hasTimedOut)) {
-            // no live partials and either PREV is unused or the
-            // prev-only cell's idle-retention timer fired: any event
-            // arriving after a full within horizon of silence is late
-            // beyond the watermark anyway — drop the cell so idle keys
-            // cannot pin state forever
-            state.remove()
-          } else {
-            state.update(st)
-            if (st.partials.nonEmpty) {
-              // wake when the earliest partial's within horizon passes
-              val earliest = st.partials.map(_.startTs + pattern.withinMs).min
-              state.setTimeoutTimestamp(math.max(earliest, wm + 1))
-            } else if (pattern.withinMs != Long.MaxValue) {
-              // prev-only cell: retire once the watermark is a within
-              // horizon past the key's last activity (with no within
-              // bound there is no horizon — the cell is retained, as
-              // are partials)
-              state.setTimeoutTimestamp(math.max(wm + pattern.withinMs, wm + 1))
-            }
-          }
-          (expiredMatches ++ matches).iterator
+          // arrival order: every arrival is released, nothing is buffered
+          val step = CepCore.watermarkStep(pattern, Seq.empty, rows,
+            state.getOption.getOrElse(NfaState(Seq.empty, 0L)),
+            state.getCurrentWatermarkMs(), state.hasTimedOut,
+            releaseAll = true, eventOrder, tsMs)
+          step.store(state, step.nfa)
+          step.matches.iterator.map(toMatch(key, _))
       }
   }
 
@@ -394,44 +334,11 @@ object Cep {
         (key: Long, rows: Iterator[Event], state: GroupState[OrderedNfaState]) =>
           val st0 = state.getOption
             .getOrElse(OrderedNfaState(Seq.empty, NfaState(Seq.empty, 0L)))
-          val wm = state.getCurrentWatermarkMs()
-          // merge new arrivals into the sort buffer; release the ripe
-          // prefix (watermark guarantees nothing earlier can arrive)
-          val sorted = (st0.buffer ++ rows)
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          val (ripe, young) = sorted.partition(_.ts.getTime <= wm)
-          // expire partials whose within horizon the watermark passed
-          // (pending greedy loops / trailing negations emit)
-          val (expired, alive) =
-            st0.nfa.partials.partition(p => wm - p.startTs > pattern.withinMs)
-          val expiredMatches = flush(pattern, key, st0.nfa.copy(partials = expired))
-          val (matches, nfa1) =
-            advance(pattern, key, ripe, st0.nfa.copy(partials = alive))
-          if (young.isEmpty && nfa1.partials.isEmpty &&
-            (!pattern.needsPrev || state.hasTimedOut))
-            // nothing buffered, no live partials, and either PREV is
-            // unused or the prev-only cell's idle-retention timer
-            // fired — drop the cell (see detectStreamExpiring)
-            state.remove()
-          else {
-            state.update(OrderedNfaState(young, nfa1))
-            // wake at whichever comes first: the earliest buffered
-            // event ripening, or the earliest partial's within expiry;
-            // a prev-only cell wakes a full within horizon after the
-            // key's last activity to retire itself
-            val wakes =
-              young.headOption.map(_.ts.getTime).toSeq ++
-                (if (nfa1.partials.nonEmpty)
-                   Seq(nfa1.partials.map(_.startTs + pattern.withinMs).min)
-                 else Nil) ++
-                (if (young.isEmpty && nfa1.partials.isEmpty &&
-                   pattern.withinMs != Long.MaxValue)
-                   Seq(wm + pattern.withinMs)
-                 else Nil)
-            if (wakes.nonEmpty)
-              state.setTimeoutTimestamp(math.max(wakes.min, wm + 1))
-          }
-          (expiredMatches ++ matches).iterator
+          val step = CepCore.watermarkStep(pattern, st0.buffer, rows, st0.nfa,
+            state.getCurrentWatermarkMs(), state.hasTimedOut,
+            releaseAll = false, eventOrder, tsMs)
+          step.store(state, OrderedNfaState(step.buffer, step.nfa))
+          step.matches.iterator.map(toMatch(key, _))
       }
   }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.spark.sql.streaming.GroupState
+
 /** Generic CEP NFA — the row-type-agnostic core behind [[Cep]] (the
   * Event-typed Scala API) and [[MatchRecognize]]'s generic-relation
   * front-end. The reference runs MATCH_RECOGNIZE over any input
@@ -12,7 +14,9 @@ package graft.streaming
   *
   * Semantics (quantifiers, contiguity, negation, skip strategies,
   * until, followedByAny, consecutive/allowCombinations) are documented
-  * on [[Cep]]; this file holds the machinery.
+  * on [[Cep]]; this file holds the machinery, including the two loops
+  * every front-end runs the NFA in: [[scanSortedPartition]] (batch)
+  * and [[watermarkStep]] (watermarked streaming).
   *
   * Two capabilities live only here:
   *  - predicates see the PREVIOUS ROW in the partition (`(Option[E],
@@ -365,38 +369,9 @@ object CepCore {
       acc.result()
     }
 
-    def completable(p: PartialMatch[E]): Boolean = {
-      val steps = branches(p.branch)
-      closure(steps, p.stepIdx, p.inLoop).exists(_._1 == steps.size)
-    }
-
-    // a retired greedy loop (expired / strict-broken / flushed) emits
-    // its maximal match now; reluctant loops already emitted per length
-    def retirementEmit(p: PartialMatch[E]): Option[Emit[E]] = {
-      val steps = branches(p.branch)
-      if (p.inLoop && p.stepIdx < steps.size && steps(p.stepIdx).greedy &&
-        completable(p))
-        Some(Emit(p.startSeq, p.lastSeq, p.branch,
-          Match(p.startTs, p.lastTs, p.rows, p.labels), p.rowSeqs))
-      else None
-    }
-
     def negationPending(p: PartialMatch[E]): Boolean = {
       val steps = branches(p.branch)
       p.stepIdx < steps.size && steps(p.stepIdx).negated
-    }
-
-    // a partial waiting at a TRAILING negation (only optional steps
-    // after it) whose within expired without the forbidden event: the
-    // negation resolves positively — the match ends at its last
-    // consumed event
-    def negationExpiryEmit(p: PartialMatch[E]): Option[Emit[E]] = {
-      val steps = branches(p.branch)
-      if (negationPending(p) &&
-        closure(steps, p.stepIdx + 1, false).exists(_._1 == steps.size))
-        Some(Emit(p.startSeq, p.lastSeq, p.branch,
-          Match(p.startTs, p.lastTs, p.rows, p.labels), p.rowSeqs))
-      else None
     }
 
     // Pattern.until: the loop at step i refuses e once the stop
@@ -453,14 +428,14 @@ object CepCore {
               succ += p
             // reluctant loop that can already exit to the accept state
             // emits at this length too
-            if (!steps(i).greedy && closure(steps, i, true).exists(_._1 == n))
+            if (!steps(i).greedy && reachesEnd(steps, i, true))
               emits += Emit(p.startSeq, s, p.branch,
                 Match(p.startTs, ts, ids, labs), sq)
           } else {
             val next =
               p.copy(stepIdx = i + 1, inLoop = false, lastTs = ts, lastSeq = s,
                 rows = ids, labels = labs, rowSeqs = sq)
-            if (closure(steps, i + 1, false).exists(_._1 == n))
+            if (reachesEnd(steps, i + 1, false))
               emits += Emit(p.startSeq, s, p.branch,
                 Match(p.startTs, ts, ids, labs), sq)
             if (i + 1 < n) succ += next
@@ -495,8 +470,7 @@ object CepCore {
       // match
       val (alive, expired) = partials.partition(p => ts - p.startTs <= pattern.withinMs)
       val emitsB = Seq.newBuilder[Emit[E]]
-      expired.foreach(p =>
-        retirementEmit(p).orElse(negationExpiryEmit(p)).foreach(emitsB += _))
+      expired.foreach(p => retireEmit(branches, p).foreach(emitsB += _))
 
       val nextPartials = Seq.newBuilder[PartialMatch[E]]
       alive.foreach { p =>
@@ -514,7 +488,7 @@ object CepCore {
             // a mid-pattern negation hands this same event to the
             // continuation (error notNext(x) next(b): b checks the very
             // event that cleared the notNext).
-            if (closure(steps, i + 1, false).exists(_._1 == n))
+            if (reachesEnd(steps, i + 1, false))
               emitsB += Emit(p.startSeq, p.lastSeq, p.branch,
                 Match(p.startTs, p.lastTs, p.rows, p.labels), p.rowSeqs)
             if (i + 1 < n) {
@@ -544,7 +518,7 @@ object CepCore {
           } else if (pattern.strict) {
             // strict contiguity: the partial dies; a pending greedy loop
             // emits its maximal match first (the run just ended)
-            retirementEmit(p).foreach(emitsB += _)
+            retireEmit(branches, p).foreach(emitsB += _)
           } else {
             // relaxed: keep waiting; an until-hit permanently closes an
             // open loop — as does ANY unconsumed event when the loop is
@@ -553,7 +527,7 @@ object CepCore {
             // continues from the exit position
             if (p.inLoop && p.stepIdx < n && steps(p.stepIdx).oneOrMore
               && (untilHit(steps, p.stepIdx, e) || steps(p.stepIdx).consecutive)) {
-              if (p.stepIdx + 1 == n) retirementEmit(p).foreach(emitsB += _)
+              if (p.stepIdx + 1 == n) retireEmit(branches, p).foreach(emitsB += _)
               else nextPartials += p.copy(stepIdx = p.stepIdx + 1, inLoop = false)
             } else nextPartials += p
           }
@@ -640,37 +614,11 @@ object CepCore {
   }
 
   /** End-of-input flush: retire every pending partial, emitting
-    * completable greedy loops under the pattern's skip strategy.
+    * completable greedy loops and trailing negations (see
+    * [[retireEmit]]) under the pattern's skip strategy.
     */
   def flush[E](pattern: SequencePattern[E], st: NfaState[E]): Seq[Match[E]] = {
-    val branches = pattern.branches
-    def completableFrom(steps: Seq[Step[E]], idx: Int, inLoop: Boolean): Boolean = {
-      val n = steps.size
-      var i = idx
-      var loop = inLoop
-      var go = true
-      while (go && i < n) {
-        if (loop) { i += 1; loop = false }
-        else if (steps(i).optional) i += 1
-        else go = false
-      }
-      i == n
-    }
-    // pending greedy loops emit their maximal run; partials waiting at
-    // a trailing negation resolve positively — bounded input ended
-    // without the forbidden event (matches the within-expiry path in
-    // advance())
-    val emits = st.partials
-      .filter { p =>
-        val steps = branches(p.branch)
-        val n = steps.size
-        (p.inLoop && p.stepIdx < n && steps(p.stepIdx).greedy
-          && completableFrom(steps, p.stepIdx, p.inLoop)) ||
-        (p.stepIdx < n && steps(p.stepIdx).negated
-          && completableFrom(steps, p.stepIdx + 1, false))
-      }
-      .map(p => Emit(p.startSeq, p.lastSeq, p.branch,
-        Match(p.startTs, p.lastTs, p.rows, p.labels), p.rowSeqs))
+    val emits = st.partials.flatMap(retireEmit(pattern.branches, _))
       .sortBy(em => (em.startSeq, em.lastSeq, em.branch))
     pattern.skip match {
       case NoSkip => emits.map(_.m)
@@ -691,6 +639,38 @@ object CepCore {
       case sk: SkipToLast =>
         skipToVarFlush(emits, sk.variable, sk.memberSet, first = false)
     }
+  }
+
+  /** A partial retired without consuming (strict break, closed loop,
+    * within expiry, end of input) emits only if it is a greedy loop
+    * that can exit — its maximal run; reluctant loops already emitted
+    * per length — or waits at a trailing negation, which resolves
+    * positively: no forbidden row came, and the match ends at its last
+    * consumed row.
+    */
+  private def retireEmit[E](branches: Seq[Seq[Step[E]]],
+      p: PartialMatch[E]): Option[Emit[E]] = {
+    val steps = branches(p.branch)
+    val emits = p.stepIdx < steps.size && (
+      (p.inLoop && steps(p.stepIdx).greedy && reachesEnd(steps, p.stepIdx, true)) ||
+        (steps(p.stepIdx).negated && reachesEnd(steps, p.stepIdx + 1, false)))
+    if (emits) Some(Emit(p.startSeq, p.lastSeq, p.branch,
+      Match(p.startTs, p.lastTs, p.rows, p.labels), p.rowSeqs))
+    else None
+  }
+
+  /** Step `idx` reaches the accept state by epsilon moves alone. */
+  private def reachesEnd[E](steps: Seq[Step[E]], idx: Int, inLoop: Boolean): Boolean = {
+    val n = steps.size
+    var i = idx
+    var loop = inLoop
+    var go = true
+    while (go && i < n) {
+      if (loop) { i += 1; loop = false }
+      else if (steps(i).optional) i += 1
+      else go = false
+    }
+    i == n
   }
 
   private def skipToVarFlush[E](emits: Seq[Emit[E]], v: String,
@@ -725,5 +705,133 @@ object CepCore {
       s"$what points at the match's own start row — matching cannot " +
         "advance past it")
     b
+  }
+
+  /** The batch loop every front-end runs per partition: `rows` arrive
+    * sorted by key, then event time. Each key's rows advance one NFA; a
+    * new key, or the end of the partition, flushes the previous key.
+    * `emit` turns a completed match into output rows, given its key and
+    * its 1-based ordinal within the key. Working memory is the live
+    * partials (bounded by `within`), never a key's row list, so a hot
+    * key cannot exhaust a task.
+    */
+  private[streaming] def scanSortedPartition[E, K, O](
+      pattern: SequencePattern[E],
+      rows: Iterator[E],
+      keyOf: E => K,
+      tsMs: E => Long
+  )(emit: (K, Match[E], Long) => Seq[O]): Iterator[O] =
+    new Iterator[O] {
+      private var buf: Iterator[O] = Iterator.empty
+      private var curKey: K = _
+      private var open = false
+      private var st = NfaState[E](Seq.empty, 0L)
+      private var ordinal = 0L
+      // strict, so ordinals are numbered before the next key resets them
+      private def emitAll(ms: Seq[Match[E]]): Seq[O] =
+        ms.flatMap { m => ordinal += 1; emit(curKey, m, ordinal) }
+      private def fill(): Unit =
+        while (!buf.hasNext && (rows.hasNext || open)) {
+          if (rows.hasNext) {
+            val e = rows.next()
+            val k = keyOf(e)
+            val tail =
+              if (open && k == curKey) Seq.empty
+              else {
+                val t = if (open) emitAll(flush(pattern, st)) else Seq.empty
+                curKey = k
+                open = true
+                ordinal = 0L
+                st = NfaState[E](Seq.empty, 0L)
+                t
+              }
+            val (ms, s) = advance(pattern, Seq(e), st, tsMs)
+            st = s
+            buf = (tail ++ emitAll(ms)).iterator
+          } else {
+            buf = emitAll(flush(pattern, st)).iterator
+            open = false
+          }
+        }
+      override def hasNext: Boolean = { fill(); buf.hasNext }
+      override def next(): O = {
+        if (!hasNext) throw new NoSuchElementException("empty iterator")
+        buf.next()
+      }
+    }
+
+  /** What one [[watermarkStep]] leaves for a key: the matches to emit
+    * (within-expired retirements first), the NFA over the released
+    * rows, the rows the watermark has not passed yet, and whether the
+    * state cell goes or stays with a wake-up timer.
+    */
+  private[streaming] final case class WatermarkStep[E](
+      matches: Seq[Match[E]],
+      nfa: NfaState[E],
+      buffer: Seq[E],
+      remove: Boolean,
+      wakeAt: Option[Long]
+  ) {
+    /** Drop the cell, or store `kept` and arm the wake-up timer. */
+    def store[S](state: GroupState[S], kept: => S): Unit =
+      if (remove) state.remove()
+      else {
+        state.update(kept)
+        wakeAt.foreach(state.setTimeoutTimestamp)
+      }
+  }
+
+  /** The event-time step every watermarked streaming front-end runs per
+    * key and trigger — the reference CepOperator's design (flink-cep
+    * .../operator/CepOperator.java: buffer out-of-order elements,
+    * advance the NFA in timestamp order on watermark, clear state on
+    * event-time timers):
+    *  - merge `arrivals` into the sorted `buffer` and release the rows
+    *    the watermark has passed (`releaseAll` releases every arrival,
+    *    for callers that process rows in arrival order);
+    *  - retire partials whose `within` horizon the watermark passed
+    *    (pending greedy loops and trailing negations emit);
+    *  - advance the NFA over the released rows;
+    *  - drop the cell when nothing is buffered, no partial lives, and
+    *    either PREV is unused or the prev-only cell's idle timer fired
+    *    (an event after a full within horizon of silence is late
+    *    anyway);
+    *  - otherwise wake at the first of: the earliest buffered row
+    *    ripening, the earliest partial's within expiry, or — for a
+    *    prev-only cell — a within horizon past now (no horizon without a
+    *    within bound: the cell is kept, as partials are).
+    * Buffered rows are bounded by the watermark delay and partials by
+    * `within`; nothing grows with the stream's length.
+    */
+  private[streaming] def watermarkStep[E](
+      pattern: SequencePattern[E],
+      buffer: Seq[E],
+      arrivals: Iterator[E],
+      nfa: NfaState[E],
+      wm: Long,
+      timedOut: Boolean,
+      releaseAll: Boolean,
+      order: Ordering[E],
+      tsMs: E => Long
+  ): WatermarkStep[E] = {
+    val sorted = (buffer ++ arrivals).sorted(order)
+    val (ripe, young) =
+      if (releaseAll) (sorted, Seq.empty[E]) else sorted.partition(tsMs(_) <= wm)
+    val (expired, alive) =
+      nfa.partials.partition(p => wm - p.startTs > pattern.withinMs)
+    val expiredMatches = flush(pattern, nfa.copy(partials = expired))
+    val (matches, nfa1) = advance(pattern, ripe, nfa.copy(partials = alive), tsMs)
+    val idle = young.isEmpty && nfa1.partials.isEmpty
+    val remove = idle && (!pattern.needsPrev || timedOut)
+    val wakes =
+      if (remove) Nil
+      else young.headOption.map(tsMs).toSeq ++
+        (if (nfa1.partials.nonEmpty)
+           Seq(nfa1.partials.map(_.startTs + pattern.withinMs).min)
+         else Nil) ++
+        (if (idle && pattern.withinMs != Long.MaxValue) Seq(wm + pattern.withinMs)
+         else Nil)
+    WatermarkStep(expiredMatches ++ matches, nfa1, young, remove,
+      if (wakes.isEmpty) None else Some(math.max(wakes.min, wm + 1)))
   }
 }

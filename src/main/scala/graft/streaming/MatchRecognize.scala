@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.streaming.StreamingOps.Event
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
@@ -56,7 +56,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    beyond 1 are rejected, as in the reference ("Flink does not
   *    support physical offsets within partition").
   *  - MEASURES: FIRST/LAST/COUNT/SUM/AVG/MIN/MAX over `VAR.column`
-  *    (see [[parseMeasures]]/[[withMeasures]]): the NFA emits the
+  *    (see [[parseMeasures]]/[[measureColumns]]): the NFA emits the
   *    per-step label of every matched row (`Match.step_names`), and
   *    each measure compiles to a collection expression over the
   *    label-filtered, row-ordered match — no second pattern pass.
@@ -370,29 +370,24 @@ object MatchRecognize {
       navSpecs.toIndexedSeq, selfVar)
   }
 
-  /** [[compileAgainst]] specialized to the Event schema, adapting
-    * Event instances to Catalyst rows.
+  /** A compiled DEFINE predicate adapted to the NFA's row type `E`.
+    * `toIr` gives a row's Catalyst form: Event rows fill the scratch
+    * row it is handed (`scratchWidth` wide); relation rows return the
+    * form they already carry and need no scratch (width 0).
     */
-  private final class EventPredicate(inner: BoundPredicate)
-      extends ((Option[Event], Event) => Boolean) with Serializable {
+  private final class DefinePredicate[E](inner: BoundPredicate,
+      scratchWidth: Int, toIr: (E, GenericInternalRow) => InternalRow)
+      extends ((Option[E], E) => Boolean) with Serializable {
     val usesPrev: Boolean = inner.usesPrev
     val usesNav: Boolean = inner.usesNav
-    @transient private lazy val cur = new GenericInternalRow(5)
-    @transient private lazy val prv = new GenericInternalRow(5)
-    private def fill(r: GenericInternalRow, e: Event): Unit = {
-      r.update(0, e.event_id)
-      r.update(1, if (e.ts == null) null else DateTimeUtils.fromJavaTimestamp(e.ts))
-      r.update(2, e.user_id)
-      r.update(3, UTF8String.fromString(e.event_type))
-      r.update(4, e.value)
+    @transient private lazy val cur = new GenericInternalRow(scratchWidth)
+    @transient private lazy val prv = new GenericInternalRow(scratchWidth)
+    private def prevIr(prev: Option[E]): Option[InternalRow] = prev match {
+      case Some(p) if usesPrev => Some(toIr(p, prv))
+      case _ => None
     }
-    override def apply(prev: Option[Event], e: Event): Boolean = {
-      fill(cur, e)
-      prev match {
-        case Some(p) if inner.usesPrev => fill(prv, p); inner(Some(prv), cur)
-        case _ => inner(None, cur)
-      }
-    }
+    override def apply(prev: Option[E], e: E): Boolean =
+      inner(prevIr(prev), toIr(e, cur))
     /** Match-aware evaluation for FIRST/LAST navigation. Conversion to
       * Catalyst form is LAZY: navTarget scans only the (string) labels
       * and indexes at most one row per NavSpec, so eager conversion of
@@ -401,38 +396,35 @@ object MatchRecognize {
       * oneOrMore loops. The view below converts exactly the rows the
       * compiled NavSpecs actually reach.
       */
-    def applyNav(ctx: CepCore.NavCtx[Event], e: Event): Boolean = {
-      fill(cur, e)
-      val prevIr = ctx.prev match {
-        case Some(p) if inner.usesPrev => fill(prv, p); Some(prv: InternalRow)
-        case _ => None
-      }
+    def applyNav(ctx: CepCore.NavCtx[E], e: E): Boolean = {
       val evRows = ctx.rows match {
-        case ix: scala.collection.IndexedSeq[Event] => ix
+        case ix: scala.collection.IndexedSeq[E] => ix
         case other => other.toIndexedSeq
       }
       val rows: scala.collection.IndexedSeq[InternalRow] =
         new scala.collection.IndexedSeq[InternalRow] {
           def length: Int = evRows.length
-          def apply(i: Int): InternalRow = {
-            val r = new GenericInternalRow(5)
-            fill(r, evRows(i))
-            r
-          }
+          def apply(i: Int): InternalRow =
+            toIr(evRows(i), new GenericInternalRow(scratchWidth))
         }
       val labels = ctx.labels match {
         case ix: scala.collection.IndexedSeq[String] => ix
         case other => other.toIndexedSeq
       }
-      inner.evalNav(prevIr, cur, rows, labels)
+      inner.evalNav(prevIr(ctx.prev), toIr(e, cur), rows, labels)
     }
   }
 
-  /** Compile one DEFINE condition against the Event schema; the
-    * predicate sees (previous row in partition, current row).
-    */
-  def compilePredicate(spark: SparkSession, sql: String): (Option[Event], Event) => Boolean =
-    new EventPredicate(compileAgainst(spark, sql, eventAttrs))
+  /** Event rows in [[eventAttrs]] order, filled into a scratch row. */
+  private def eventPredicate(p: BoundPredicate): DefinePredicate[Event] =
+    new DefinePredicate[Event](p, eventAttrs.size, (e, r) => {
+      r.update(0, e.event_id)
+      r.update(1, if (e.ts == null) null else DateTimeUtils.fromJavaTimestamp(e.ts))
+      r.update(2, e.user_id)
+      r.update(3, UTF8String.fromString(e.event_type))
+      r.update(4, e.value)
+      r
+    })
 
   // ---- text parsing ---------------------------------------------------
 
@@ -987,7 +979,18 @@ object MatchRecognize {
           s"ORDER BY ${cols.mkString(", ")} (detectRelation accepts " +
           "arbitrary ordering columns)")
     }
+    buildPattern(spark, sql, body, eventAttrs, eventPredicate)
+  }
 
+  /** The pattern both front-ends run, built from the MATCH_RECOGNIZE
+    * `body` once its PARTITION BY / ORDER BY have been checked: clause
+    * checks, AFTER MATCH SKIP, WITHIN, then each DEFINE compiled against
+    * `attrs` and adapted to the row type by `adapt`, then the PATTERN's
+    * steps with skip-to-variable targets resolved.
+    */
+  private def buildPattern[E](spark: SparkSession, sql: String, body: String,
+      attrs: Seq[AttributeReference],
+      adapt: BoundPredicate => DefinePredicate[E]): CepCore.SequencePattern[E] = {
     requireKnownClauses(body)
     requireFullCoverage(body)
     val skip = parseSkip(body)
@@ -1008,35 +1011,52 @@ object MatchRecognize {
     // the pattern's variable namespace, needed BEFORE compiling DEFINE
     // so FIRST/LAST(V.col) navigation can resolve V
     val pvars = patternVarsFromText(patBody)
-    val defines: Map[String, EventPredicate] =
+    val defines: Map[String, DefinePredicate[E]] =
       defineTexts(body).map { case (name, txt) =>
-        name -> new EventPredicate(
-          compileAgainst(spark, txt, eventAttrs, pvars, name))
+        name -> adapt(compileAgainst(spark, txt, attrs, pvars, name))
       }
 
-    val mkEv = (name: String, quant: Option[String]) => {
+    val mk = (name: String, quant: Option[String]) => {
       // SQL identifiers are case-insensitive: labels normalize to upper
       // case so DEFINE lookup, MEASURES filtering and CLASSIFIER output
       // agree regardless of how the query writes the variable
       val uname = name.toUpperCase
       // SQL-standard rule: an undefined variable matches any row
       val defined = defines.get(uname)
-      val pred: (Option[Event], Event) => Boolean = defined match {
+      val pred: (Option[E], E) => Boolean = defined match {
         case Some(p) if p.usesNav => (_, _) => throw new IllegalStateException(
           s"DEFINE $uname uses FIRST/LAST navigation and must be " +
             "evaluated with match context")
         case Some(p) => p
         case None => (_, _) => true
       }
-      val nav: Option[(CepCore.NavCtx[Event], Event) => Boolean] =
+      val nav: Option[(CepCore.NavCtx[E], E) => Boolean] =
         defined.filter(_.usesNav)
-          .map(p => (ctx: CepCore.NavCtx[Event], e: Event) => p.applyNav(ctx, e))
-      mkStep[Event](uname, pred, quant, defined.exists(_.usesPrev), nav)
+          .map(p => (ctx: CepCore.NavCtx[E], e: E) => p.applyNav(ctx, e))
+      def step(times: Int = 1, optional: Boolean = false,
+          oneOrMore: Boolean = false, greedy: Boolean = false,
+          timesMax: Int = 0): CepCore.Step[E] =
+        CepCore.Step(uname, pred, times, optional, oneOrMore, greedy, timesMax,
+          needsPrev = defined.exists(_.usesPrev), navPredicate = nav)
+      quant match {
+        case None => step()
+        case Some("?") => step(optional = true)
+        case Some("+") => step(oneOrMore = true, greedy = true)
+        case Some("+?") => step(oneOrMore = true, greedy = false)
+        case Some("*") => step(oneOrMore = true, greedy = true, optional = true)
+        case Some(braces) =>
+          raw"\d+".r.findAllIn(braces).map(_.toInt).toSeq match {
+            case Seq(n) => step(times = n)
+            case Seq(n, mx) => step(times = n, timesMax = mx)
+            case _ => throw new IllegalArgumentException(s"bad quantifier $braces")
+          }
+      }
     }
-    val (alts, excluded) = parsePattern(patBody, mkEv)
-    val pat = Cep.SequencePattern(alts.head, withinMs, strict = true,
-      skip = skip, orElse = alts.tail, excluded = excluded)
-    resolveSkipVar(pat, parseSubsets(sql))
+    val (alts, excluded) = parsePattern(patBody, mk)
+    resolveSkipVar(
+      CepCore.SequencePattern[E](alts.head, withinMs, strict = true,
+        skip = skip, orElse = alts.tail, excluded = excluded),
+      parseSubsets(sql))
   }
 
   /** Extract `DEFINE var AS predicate, ...` as (VAR → predicate text).
@@ -1054,40 +1074,11 @@ object MatchRecognize {
         }.toMap
     }
 
-  /** Map one (variable, quantifier) token onto a core NFA step. */
-  private def mkStep[E](uname: String, pred: (Option[E], E) => Boolean,
-      quant: Option[String], usesPrev: Boolean,
-      nav: Option[(CepCore.NavCtx[E], E) => Boolean] = None): CepCore.Step[E] = {
-    def step(times: Int = 1, optional: Boolean = false,
-        oneOrMore: Boolean = false, greedy: Boolean = false,
-        timesMax: Int = 0): CepCore.Step[E] =
-      CepCore.Step(uname, pred, times, optional, oneOrMore, greedy, timesMax,
-        needsPrev = usesPrev, navPredicate = nav)
-    quant match {
-      case None => step()
-      case Some("?") => step(optional = true)
-      case Some("+") => step(oneOrMore = true, greedy = true)
-      case Some("+?") => step(oneOrMore = true, greedy = false)
-      case Some("*") => step(oneOrMore = true, greedy = true, optional = true)
-      case Some(braces) =>
-        val nums = raw"\d+".r.findAllIn(braces).map(_.toInt).toSeq
-        nums match {
-          case Seq(n) => step(times = n)
-          case Seq(n, mx) => step(times = n, timesMax = mx)
-          case _ => throw new IllegalArgumentException(s"bad quantifier $braces")
-        }
-    }
-  }
-
   /** Run a MATCH_RECOGNIZE text over a batch of events. */
   def detectBatch(events: Dataset[Event], sql: String): Dataset[Cep.Match] = {
     requireMode(sql, allRows = false, "detectBatch")
-    detectBatchCore(events, sql)
-  }
-
-  private def detectBatchCore(events: Dataset[Event],
-      sql: String): Dataset[Cep.Match] =
     Cep.detectBatch(events, parse(events.sparkSession, sql))
+  }
 
   /** Streaming form — same parse, the NFA's keyed-state path. */
   def detectStream(events: Dataset[Event], sql: String): Dataset[Cep.Match] = {
@@ -1246,75 +1237,26 @@ object MatchRecognize {
     }
   }
 
-  /** Compute MEASURES over a match relation: one equi join of the
-    * exploded (event_id, step_name) pairs back to the events, one
-    * groupBy per match collecting the row-ordered (pos, label, fields)
-    * structs, then each measure is a pure collection expression over
-    * that array — FIRST/LAST by position, COUNT/SUM/AVG/MIN/MAX over
-    * the variable's rows. No driver state; the shuffle keys are
-    * event_id (join) and the match id (re-group), both well-spread.
+  /** The one-row MEASURES columns, over `__arr`: a match's rows as
+    * (`__pos`, `__lab`, columns…) structs sorted by position. FIRST/LAST
+    * navigate by position; COUNT/SUM/AVG/MIN/MAX aggregate the
+    * variable's rows. `field` names the struct field of a measure's
+    * column and rejects unknown columns.
     */
-  def withMeasures(
-      matches: DataFrame,
-      events: DataFrame,
-      measures: Seq[Measure],
-      subsets: Map[String, Seq[String]] = Map.empty,
-      patternVars: Option[Set[String]] = None
-  ): DataFrame = {
-    import org.apache.spark.sql.Column
+  private def measureColumns(measures: Seq[Measure],
+      subsets: Map[String, Seq[String]], patternVars: Set[String],
+      field: String => String): Seq[Column] = {
     require(measures.nonEmpty, "MEASURES clause is empty")
-    // labels a measure variable covers (validated when the caller
-    // supplies the pattern's variable namespace)
-    def labelsOf(v: String): Seq[String] = patternVars match {
-      case Some(pv) => resolveMeasureVar(v, subsets, pv)
-      case None => subsets.getOrElse(v, Seq(v))
-    }
-    val m = matches.withColumn("__mid", monotonically_increasing_id())
-    val ex = m
-      .select(
-        col("__mid"), col("key"), col("start_ts"), col("end_ts"),
-        posexplode(arrays_zip(col("event_ids"), col("step_names")))
-          .as(Seq("__pos", "__z"))
-      )
-      .select(
-        col("__mid"), col("key"), col("start_ts"), col("end_ts"),
-        col("__pos"),
-        col("__z.event_ids").as("__eid"),
-        col("__z.step_names").as("__lab")
-      )
-    val ev = events.select(
-      col("event_id").as("__eid"),
-      col("ts").as("__ts"),
-      col("event_type").as("__etype"),
-      col("value").as("__value")
-    )
-    val grouped = ex
-      .join(ev, Seq("__eid"))
-      .groupBy(col("__mid"), col("key"), col("start_ts"), col("end_ts"))
-      .agg(
-        sort_array(collect_list(struct(
-          col("__pos"), col("__lab"), col("__eid"), col("__ts"),
-          col("__etype"), col("__value")
-        ))).as("__arr")
-      )
-    def fieldOf(x: Column, c: String): Column = c match {
-      case "event_id" => x.getField("__eid")
-      case "ts" => x.getField("__ts")
-      case "event_type" => x.getField("__etype")
-      case "value" => x.getField("__value")
-      case other => throw new IllegalArgumentException(
-        s"unknown event column in MEASURES: $other")
-    }
-    val cols = measures.map { ms =>
-      val labs = labelsOf(ms.variable)
+    measures.map { ms =>
+      val labs = resolveMeasureVar(ms.variable, subsets, patternVars)
       val rows = filter(col("__arr"), x =>
         if (labs.size == 1) x.getField("__lab") === labs.head
         else x.getField("__lab").isin(labs: _*))
-      def vals = transform(rows, x => fieldOf(x, ms.column))
+      def vals = transform(rows, x => x.getField(field(ms.column)))
       // SQL aggregates skip NULLs: COUNT(col)/SUM/AVG see only the
       // variable's non-null values (COUNT(V.*) counts rows)
       def nnums = filter(
-        transform(rows, x => fieldOf(x, ms.column).cast("double")),
+        transform(rows, x => x.getField(field(ms.column)).cast("double")),
         v => v.isNotNull)
       val c = ms.func match {
         // navigation is positional over the variable's matched rows;
@@ -1340,6 +1282,55 @@ object MatchRecognize {
       }
       c.as(ms.alias)
     }
+  }
+
+  /** Compute MEASURES over the Event match relation: one equi join of
+    * the exploded (event_id, step_name) pairs back to the events, one
+    * groupBy per match collecting the row-ordered structs, then
+    * [[measureColumns]]. No driver state; the shuffle keys are event_id
+    * (join) and the match id (re-group), both well-spread.
+    */
+  private def withMeasures(
+      matches: DataFrame,
+      events: DataFrame,
+      measures: Seq[Measure],
+      subsets: Map[String, Seq[String]],
+      patternVars: Set[String]
+  ): DataFrame = {
+    val cols = measureColumns(measures, subsets, patternVars, {
+      case c @ ("event_id" | "ts" | "event_type" | "value") => c
+      case other => throw new IllegalArgumentException(
+        s"unknown event column in MEASURES: $other")
+    })
+    val m = matches.withColumn("__mid", monotonically_increasing_id())
+    val ex = m
+      .select(
+        col("__mid"), col("key"), col("start_ts"), col("end_ts"),
+        posexplode(arrays_zip(col("event_ids"), col("step_names")))
+          .as(Seq("__pos", "__z"))
+      )
+      .select(
+        col("__mid"), col("key"), col("start_ts"), col("end_ts"),
+        col("__pos"),
+        col("__z.event_ids").as("__eid"),
+        col("__z.step_names").as("__lab")
+      )
+    val ev = events.select(
+      col("event_id").as("__eid"),
+      col("ts").as("__ts"),
+      col("event_type").as("__etype"),
+      col("value").as("__value")
+    )
+    val grouped = ex
+      .join(ev, Seq("__eid"))
+      .groupBy(col("__mid"), col("key"), col("start_ts"), col("end_ts"))
+      .agg(
+        sort_array(collect_list(struct(
+          col("__pos"), col("__lab"), col("__eid").as("event_id"),
+          col("__ts").as("ts"), col("__etype").as("event_type"),
+          col("__value").as("value")
+        ))).as("__arr")
+      )
     grouped.select(
       col("key") +: col("start_ts") +: col("end_ts") +: cols: _*)
   }
@@ -1364,7 +1355,7 @@ object MatchRecognize {
       events.toDF(),
       parseMeasures(sql),
       parseSubsets(sql),
-      Some(patternVarNames(pat)))
+      patternVarNames(pat))
   }
 
   /** ALL ROWS PER MATCH output mode (SQL-standard counterpart of the
@@ -1420,7 +1411,6 @@ object MatchRecognize {
     * partition keys are (user, match), well-spread; no driver state.
     */
   def detectBatchAllRowsWithMeasures(events: Dataset[Event], sql: String): DataFrame = {
-    import org.apache.spark.sql.Column
     import org.apache.spark.sql.expressions.Window
     // measures run over the FULL match relation — SQL:2016 exclusion
     // only omits rows from OUTPUT; excluded rows still feed aggregates
@@ -1500,10 +1490,21 @@ object MatchRecognize {
   // ---- arbitrary relations --------------------------------------------
 
   /** Row wrapper the generic NFA runs over: the original external row
-    * (emitted back out), its Catalyst form (predicates evaluate on
-    * it), and the within-clock milliseconds.
+    * (emitted back out), the within-clock milliseconds, and its
+    * Catalyst form (predicates evaluate on it), converted on first use
+    * so rows no predicate reads are never converted.
     */
-  private final case class REv(row: Row, ir: InternalRow, tsMs: Long)
+  private final class REv(val row: Row, val tsMs: Long, toCatalyst: Any => Any) {
+    lazy val ir: InternalRow = toCatalyst(row).asInstanceOf[InternalRow]
+  }
+
+  /** The ALL ROWS PER MATCH output of one match: each matched row's
+    * columns plus `match_no`, `row_in_match` and `classifier`.
+    */
+  private def matchRows(m: CepCore.Match[REv], matchNo: Long): Seq[Row] =
+    m.rows.zip(m.labels).zipWithIndex.map { case ((ev, lab), i) =>
+      Row.fromSeq(ev.row.toSeq ++ Seq(matchNo, (i + 1).toLong, lab))
+    }
 
   private val clauseKwRe =
     raw"(?is)\b(PARTITION\s+BY|ORDER\s+BY|MEASURES|AFTER\s+MATCH|PATTERN|WITHIN|SUBSET|DEFINE|ONE\s+ROW|ALL\s+ROWS)\b".r
@@ -1616,54 +1617,13 @@ object MatchRecognize {
     val partIdx = partCols.map(resolve)
     val orderIdx = orderCols.map(resolve)
 
-    requireKnownClauses(body)
-    requireFullCoverage(body)
-    val skip = parseSkip(body)
-    val withinMs = withinRe.findFirstMatchIn(body) match {
-      case Some(m) =>
-        val n = m.group(1).toLong
-        m.group(2).toUpperCase match {
-          case "SECOND" => n * 1000L
-          case "MINUTE" => n * 60000L
-          case "HOUR" => n * 3600000L
-          case "DAY" => n * 86400000L
-        }
-      case None => Long.MaxValue
-    }
+    val pattern = buildPattern[REv](spark, sql, body, attrs,
+      p => new DefinePredicate[REv](p, 0, (e, _) => e.ir))
     val tsF = tsExtractor(schema(orderIdx.head).dataType, orderIdx.head)
-    require(withinMs == Long.MaxValue || tsF.isDefined,
+    require(pattern.withinMs == Long.MaxValue || tsF.isDefined,
       s"WITHIN requires the first ORDER BY column to be a timestamp/date/" +
         s"integer; ${orderCols.head} is ${schema(orderIdx.head).dataType.sql}")
     val clock: Row => Long = tsF.getOrElse(_ => 0L)
-
-    val relPatBody = balancedBody(body, "PATTERN")
-    val pvars = patternVarsFromText(relPatBody)
-    val defines: Map[String, BoundPredicate] =
-      defineTexts(body).map { case (name, txt) =>
-        name -> compileAgainst(spark, txt, attrs, pvars, name)
-      }
-    val mkRel = (name: String, quant: Option[String]) => {
-      val uname = name.toUpperCase
-      val defined = defines.get(uname)
-      val pred: (Option[REv], REv) => Boolean = defined match {
-        case Some(p) if p.usesNav => (_, _) => throw new IllegalStateException(
-          s"DEFINE $uname uses FIRST/LAST navigation and must be " +
-            "evaluated with match context")
-        case Some(p) => (prev, cur) => p(prev.map(_.ir), cur.ir)
-        case None => (_, _) => true
-      }
-      val nav: Option[(CepCore.NavCtx[REv], REv) => Boolean] =
-        defined.filter(_.usesNav).map(p =>
-          (ctx: CepCore.NavCtx[REv], cur: REv) =>
-            p.evalNav(ctx.prev.map(_.ir), cur.ir,
-              ctx.rows.map(_.ir).toIndexedSeq, ctx.labels.toIndexedSeq))
-      mkStep[REv](uname, pred, quant, defined.exists(_.usesPrev), nav)
-    }
-    val (alts, excluded) = parsePattern(relPatBody, mkRel)
-    val pattern = resolveSkipVar(
-      CepCore.SequencePattern[REv](alts.head, withinMs,
-        strict = true, skip = skip, orElse = alts.tail, excluded = excluded),
-      parseSubsets(sql))
 
     val outSchema = StructType(schema.fields.toSeq ++ Seq(
       org.apache.spark.sql.types.StructField("match_no", LongType, nullable = false),
@@ -1678,7 +1638,6 @@ object MatchRecognize {
     val partIdx = spec.partIdx
     val clock = spec.clock
     val pattern = spec.pattern
-    val tsOf: REv => Long = _.tsMs
 
     val partExprs = spec.partCols.map(col)
     val sortExprs = (spec.partCols ++ spec.orderCols).map(col)
@@ -1708,57 +1667,13 @@ object MatchRecognize {
         // columns surface as Array[Byte], whose == is reference
         // equality — wrap arrays so equal keys compare equal instead
         // of splitting every row into its own group
-        def keyOf(r: Row): Seq[Any] = partIdx.map(r.apply).map {
+        def keyOf(ev: REv): Seq[Any] = partIdx.map(ev.row.apply).map {
           case a: Array[_] => a.toSeq
           case x => x
         }
-        new Iterator[Row] {
-          private var buf: Iterator[Row] = Iterator.empty
-          private var curKey: Seq[Any] = null
-          private var open = false
-          private var st = CepCore.NfaState[REv](Seq.empty, 0L)
-          private var matchNo = 0L
-          // strict (not lazy) so match numbering interleaves correctly
-          // with the per-key counter reset below
-          private def rowsOf(ms: Seq[CepCore.Match[REv]]): Seq[Row] =
-            ms.flatMap { m =>
-              matchNo += 1
-              m.rows.zip(m.labels).zipWithIndex.map { case ((ev, lab), i) =>
-                Row.fromSeq(ev.row.toSeq ++ Seq(matchNo, (i + 1).toLong, lab))
-              }
-            }
-          private def fill(): Unit = {
-            while (!buf.hasNext && (rows.hasNext || open)) {
-              if (rows.hasNext) {
-                val r = rows.next()
-                val key = keyOf(r)
-                val ev = REv(r, conv(r).asInstanceOf[InternalRow], clock(r))
-                if (open && key == curKey) {
-                  val (m, s) = CepCore.advance(pattern, Seq(ev), st, tsOf)
-                  st = s
-                  buf = rowsOf(m).iterator
-                } else {
-                  val tail =
-                    if (open) rowsOf(CepCore.flush(pattern, st)) else Seq.empty
-                  curKey = key
-                  open = true
-                  matchNo = 0L
-                  val (m, s) = CepCore.advance(pattern, Seq(ev),
-                    CepCore.NfaState[REv](Seq.empty, 0L), tsOf)
-                  st = s
-                  buf = (tail ++ rowsOf(m)).iterator
-                }
-              } else {
-                buf = rowsOf(CepCore.flush(pattern, st)).iterator
-                open = false
-              }
-            }
-          }
-          override def hasNext: Boolean = { fill(); buf.hasNext }
-          override def next(): Row = {
-            if (!hasNext) throw new NoSuchElementException("empty iterator")
-            buf.next()
-          }
+        CepCore.scanSortedPartition(pattern,
+          rows.map(r => new REv(r, clock(r), conv)), keyOf, (e: REv) => e.tsMs) {
+          (_, m, matchNo) => matchRows(m, matchNo)
         }
       }(Encoders.row(spec.outSchema))
   }
@@ -1777,7 +1692,6 @@ object MatchRecognize {
     requireMode(sql, allRows = false, "detectRelationWithMeasures")
     val spec = parseRelation(df, sql)
     val measures = parseMeasures(sql)
-    require(measures.nonEmpty, "MEASURES clause is empty")
     // r22: same consumer-conditional pin as detectBatchWithMeasures —
     // the per-match re-group below dominates for bounded patterns
     relationMeasures(
@@ -1808,39 +1722,8 @@ object MatchRecognize {
     val grouped = allRows
       .groupBy(keyCols :+ col("match_no"): _*)
       .agg(arr.as("__arr"))
-    val cols = measures.map { ms =>
-      val labs = resolveMeasureVar(ms.variable, subsets, patternVars)
-      val rows = filter(col("__arr"), x =>
-        if (labs.size == 1) x.getField("__lab") === labs.head
-        else x.getField("__lab").isin(labs: _*))
-      def vals = transform(rows, x => x.getField(actual(ms.column)))
-      def nnums = filter(
-        transform(rows, x => x.getField(actual(ms.column)).cast("double")),
-        v => v.isNotNull)
-      val c = ms.func match {
-        // navigation is positional over the variable's matched rows;
-        // the size guard makes out-of-range NULL (ANSI element_at
-        // would throw) — same out-of-range rule as DEFINE navigation
-        case "FIRST" =>
-          when(size(vals) > ms.offset, element_at(vals, ms.offset + 1))
-        case "LAST" =>
-          when(size(vals) > ms.offset, element_at(vals, -(ms.offset + 1)))
-        // SQL COUNT(col) skips NULLs; COUNT(V.*) counts matched rows
-        case "COUNT" =>
-          (if (ms.column == "*") size(rows)
-           else size(filter(vals, v => v.isNotNull))).cast("long")
-        // SUM/AVG skip NULLs and are NULL over zero non-null values
-        case "SUM" =>
-          when(size(nnums) > 0, aggregate(nnums, lit(0.0), (a, x) => a + x))
-        case "AVG" =>
-          when(size(nnums) > 0,
-            aggregate(nnums, lit(0.0), (a, x) => a + x) / size(nnums))
-        case "MIN" => array_min(vals)
-        case "MAX" => array_max(vals)
-      }
-      c.as(ms.alias)
-    }
-    grouped.select((keyCols :+ col("match_no")) ++ cols: _*)
+    grouped.select((keyCols :+ col("match_no")) ++
+      measureColumns(measures, subsets, patternVars, actual): _*)
   }
 
   /** Keyed streaming state for [[detectRelationStream]]: the
@@ -1877,12 +1760,7 @@ object MatchRecognize {
     requireMode(sql, allRows = true, "detectRelationStream")
     val spec = parseRelation(df, sql)
     excludeRows(
-      relationStreamRun(df, spec, watermarkDelay, spec.outSchema) {
-        (m, matchNo) =>
-          m.rows.zip(m.labels).zipWithIndex.map { case ((ev, lab), i) =>
-            Row.fromSeq(ev.row.toSeq ++ Seq(matchNo, (i + 1).toLong, lab))
-          }
-      },
+      relationStreamRun(df, spec, watermarkDelay, spec.outSchema)(matchRows),
       spec)
   }
 
@@ -1986,10 +1864,6 @@ object MatchRecognize {
     }
   }
 
-  /** The shared streaming NFA runner: watermark-ordered buffering,
-    * WITHIN-bounded partials, idle prev-cell retirement — emission
-    * shape is the caller's (all-rows vs one-row-with-measures).
-    */
   /** Diagnostic probe for the streaming NFA's per-key state sizes —
     * the quantities the 100-TB deployment must keep bounded: live
     * partial matches (bounded by the WITHIN horizon via per-event and
@@ -2026,13 +1900,13 @@ object MatchRecognize {
     val partIdx = spec.partIdx
     val orderIdx = spec.orderIdx
     // event-time order within a key; null order keys sort first
-    val ord: Ordering[Row] = new Ordering[Row] {
-      override def compare(a: Row, b: Row): Int = {
+    val ord: Ordering[REv] = new Ordering[REv] {
+      override def compare(a: REv, b: REv): Int = {
         var k = 0
         while (k < orderIdx.length) {
           val i = orderIdx(k)
-          val av = a.get(i)
-          val bv = b.get(i)
+          val av = a.row.get(i)
+          val bv = b.row.get(i)
           val c =
             if (av == null && bv == null) 0
             else if (av == null) -1
@@ -2056,8 +1930,7 @@ object MatchRecognize {
         (_: Row, rows: Iterator[Row],
          state: org.apache.spark.sql.streaming.GroupState[RelNfaState]) =>
           val conv = CatalystTypeConverters.createToCatalystConverter(schema)
-          def toREv(r: Row): REv =
-            REv(r, conv(r).asInstanceOf[InternalRow], clock(r))
+          def toREv(r: Row): REv = new REv(r, clock(r), conv)
           def hydrate(p: CepCore.PartialMatch[Row]): CepCore.PartialMatch[REv] =
             CepCore.PartialMatch(p.stepIdx, p.inLoop, p.startTs, p.lastTs,
               p.startSeq, p.lastSeq, p.rows.map(toREv).toVector,
@@ -2068,50 +1941,21 @@ object MatchRecognize {
               p.rowSeqs)
           val st0 = state.getOption
             .getOrElse(RelNfaState(Seq.empty, Seq.empty, 0L, None, 0L))
-          val wm = state.getCurrentWatermarkMs()
-          // merge arrivals into the sort buffer; release the ripe
-          // prefix (the watermark guarantees nothing earlier arrives)
-          val sorted = (st0.buffer ++ rows).sorted(ord)
-          val (ripe, young) = sorted.partition(r => clock(r) <= wm)
-          val prev0 = st0.prev.map(toREv)
-          // expire partials whose within horizon the watermark passed
-          val partials0 = st0.partials.map(hydrate)
-          val (expired, alive) =
-            partials0.partition(p => wm - p.startTs > pattern.withinMs)
-          val expiredMatches = CepCore.flush(pattern,
-            CepCore.NfaState[REv](expired, st0.nextSeq, prev0))
-          val (matches, nfa1) = CepCore.advance(pattern, ripe.map(toREv),
-            CepCore.NfaState[REv](alive, st0.nextSeq, prev0),
-            (e: REv) => e.tsMs)
+          val step = CepCore.watermarkStep(pattern, st0.buffer.map(toREv),
+            rows.map(toREv),
+            CepCore.NfaState[REv](st0.partials.map(hydrate), st0.nextSeq,
+              st0.prev.map(toREv)),
+            state.getCurrentWatermarkMs(), state.hasTimedOut,
+            releaseAll = false, ord, (e: REv) => e.tsMs)
           var matchNo = st0.matchNo
-          val outRows = (expiredMatches ++ matches).flatMap { m =>
+          val outRows = step.matches.flatMap { m =>
             matchNo += 1
             emitMatch(m, matchNo)
           }
-          CepStateProbe.observe(nfa1.partials.size, young.size)
-          if (young.isEmpty && nfa1.partials.isEmpty &&
-            (!pattern.needsPrev || state.hasTimedOut))
-            // nothing buffered, no live partials, and either PREV is
-            // unused or the prev-only cell's idle-retention timer fired
-            state.remove()
-          else {
-            state.update(RelNfaState(young, nfa1.partials.map(dehydrate),
-              nfa1.nextSeq, nfa1.prev.map(_.row), matchNo))
-            // wake at whichever comes first: the earliest buffered row
-            // ripening, the earliest partial's within expiry, or — for
-            // a prev-only cell — the idle-retention horizon
-            val wakes =
-              young.headOption.map(clock).toSeq ++
-                (if (nfa1.partials.nonEmpty)
-                   Seq(nfa1.partials.map(_.startTs + pattern.withinMs).min)
-                 else Nil) ++
-                (if (young.isEmpty && nfa1.partials.isEmpty &&
-                   pattern.withinMs != Long.MaxValue)
-                   Seq(wm + pattern.withinMs)
-                 else Nil)
-            if (wakes.nonEmpty)
-              state.setTimeoutTimestamp(math.max(wakes.min, wm + 1))
-          }
+          CepStateProbe.observe(step.nfa.partials.size, step.buffer.size)
+          step.store(state, RelNfaState(step.buffer.map(_.row),
+            step.nfa.partials.map(dehydrate), step.nfa.nextSeq,
+            step.nfa.prev.map(_.row), matchNo))
           outRows.iterator
       }(stateEnc, outEnc)
   }

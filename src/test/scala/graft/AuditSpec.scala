@@ -12,7 +12,7 @@ class AuditSpec extends AnyFunSuite {
 
   test("planted null and dangling keys land in the right audit buckets") {
     val src = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("auditspec").toString
+    val dir = TempPaths.dir("auditspec").toString
     for (t <- Seq("customer", "part", "supplier", "events"))
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")

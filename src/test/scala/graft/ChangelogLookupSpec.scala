@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Changelog upsert sink (streaming MERGE), partitioned lookup join,
@@ -22,7 +21,7 @@ class ChangelogLookupSpec extends AnyFunSuite {
   test("streaming upsert sink maintains keyed current state across batches") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val path = Files.createTempDirectory("graft_upsert").toString + "/state"
+    val path = TempPaths.dir("graft_upsert").toString + "/state"
     val in = MemoryStream[Event]
     val changelog = in.toDF().select(
       col("user_id"), col("event_id"), col("value"),

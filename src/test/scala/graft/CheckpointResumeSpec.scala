@@ -24,8 +24,7 @@ class CheckpointResumeSpec extends AnyFunSuite {
   test("stateful aggregation resumes from checkpoint without loss or replay") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_resume").toString
+    val ckpt = TempPaths.dir("graft_ckpt_resume").toString
 
     val in = MemoryStream[Event]
     def agg = in.toDF()
@@ -78,10 +77,8 @@ class CheckpointResumeSpec extends AnyFunSuite {
   test("native file sink is exactly-once across a stop/restart") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_filesink").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_filesink_out").toString
+    val ckpt = TempPaths.dir("graft_ckpt_filesink").toString
+    val outDir = TempPaths.dir("graft_filesink_out").toString
 
     val in = MemoryStream[Event]
     def sink = in.toDF()

@@ -42,7 +42,7 @@ class ChunkProfileSpec extends AnyFunSuite {
     import spark.implicits._
     // the corpus plants near-dups, not byte-identical ones — build a
     // two-copy fixture (the chunk query reads only documents.parquet)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chunk").toString
+    val tmp = TempPaths.dir("graft_chunk").toString
     val text = (1 to 20).map(i => s"tok$i").mkString(" ")
     Seq(
       (1L, text, "en", "web", text.length),

@@ -68,7 +68,7 @@ class GraphPropertySpec extends AnyFunSuite {
         Seq((i.toLong, u), (i.toLong, v))
       }
       import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory(s"gprop$seed").toString
+      val dir = TempPaths.dir(s"gprop$seed").toString
       lineitem.toDF("l_partkey", "l_suppkey")
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       val es = edges.toSet
@@ -94,7 +94,7 @@ class GraphPropertySpec extends AnyFunSuite {
     import spark.implicits._
     for (seed <- Seq(301)) {
       val edges = randomGraph(seed, 20, 40)
-      val dir = java.nio.file.Files.createTempDirectory(s"gwalk$seed").toString
+      val dir = TempPaths.dir(s"gwalk$seed").toString
       // encode as the cust→supp trade relation the query derives edges
       // from: orderkey links the two sides
       edges.zipWithIndex.map { case ((c, s2), i) => (i.toLong, c) }

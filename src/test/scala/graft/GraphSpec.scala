@@ -84,7 +84,7 @@ class GraphSpec extends AnyFunSuite {
     val lineitem = und.zipWithIndex.flatMap { case ((u, v), i) =>
       Seq((i.toLong, u), (i.toLong, v))
     }.toDF("l_partkey", "l_suppkey")
-    val dir = java.nio.file.Files.createTempDirectory("graphspec").toString
+    val dir = TempPaths.dir("graphspec").toString
     lineitem.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val got = CacheScope.scoped {
       graft.operators.GraphQueries.defs.find(_.name == "q_graph_triangles").get

@@ -16,7 +16,7 @@ class MalformedRecordsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   private def writeJson(lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirty_json")
+    val dir = TempPaths.dir("graft_dirty_json")
     java.nio.file.Files.write(dir.resolve("part-0.json"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir.toString

@@ -91,7 +91,7 @@ class Scd2Spec extends AnyFunSuite {
   test("streaming scd2 sink maintains the Type-2 history across batches") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("graft_scd2").toString + "/hist"
+    val path = TempPaths.dir("graft_scd2").toString + "/hist"
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, String, String)]
     val changelog = in.toDF().toDF("k", "seq", "payload", ChangelogOps.ChangeCol)
     val q = ChangelogOps.scd2Sink(changelog, path, Seq("k"), "seq").start()

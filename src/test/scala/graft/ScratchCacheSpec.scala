@@ -12,7 +12,7 @@ class ScratchCacheSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   test("partitionPrunedScan scratch copy is invalidated when the source regenerates") {
-    val src = java.nio.file.Files.createTempDirectory("graft_fp_src").toFile
+    val src = TempPaths.dir("graft_fp_src").toFile
     val base = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     base.write.mode("overwrite").parquet(s"$src/orders.parquet")
 

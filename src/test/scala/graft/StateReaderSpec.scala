@@ -17,7 +17,7 @@ class StateReaderSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   private def newCkpt(): String =
-    java.nio.file.Files.createTempDirectory("graft_state_spec").toString
+    TempPaths.dir("graft_state_spec").toString
 
   test("statestore read equals the aggregation across two batches") {
     import spark.implicits._

@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Temporal sort (event-time ordered emit), RocksDB state backend, and
@@ -75,7 +74,7 @@ class TemporalSortSpec extends AnyFunSuite {
   }
 
   test("streaming file source reads appended parquet files") {
-    val dir = Files.createTempDirectory("graft_filestream").toString
+    val dir = TempPaths.dir("graft_filestream").toString
     val t = Engine.Tables(spark, "/root/testdata/sf0.001")
     val schema = t.orders.schema
     t.orders.limit(100).write.mode("overwrite").parquet(dir)

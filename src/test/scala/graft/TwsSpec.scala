@@ -22,8 +22,7 @@ class TwsSpec extends AnyFunSuite {
       val out = in.toDS().groupByKey(_.user_id)
         .transformWithState(
           new Tws.KeyedProfileProcessor, TimeMode.None(), OutputMode.Update())
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("tws_spec_ckpt").toString
+      val ckpt = TempPaths.dir("tws_spec_ckpt").toString
       val q = out.toDF().writeStream
         .outputMode("update").format("memory").queryName("tws_acc")
         .option("checkpointLocation", ckpt).start()
@@ -56,8 +55,7 @@ class TwsSpec extends AnyFunSuite {
       val out = in.toDS().groupByKey(_.span)
         .transformWithState(
           new Tws.SpanMinProcessor, TimeMode.None(), OutputMode.Update())
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("tws_spec_dedup").toString
+      val ckpt = TempPaths.dir("tws_spec_dedup").toString
       val q = out.toDF().writeStream
         .outputMode("update").format("memory").queryName("tws_dedup")
         .option("checkpointLocation", ckpt).start()
@@ -88,8 +86,7 @@ class TwsSpec extends AnyFunSuite {
         .transformWithState(
           new Tws.WarmSpanMinProcessor,
           TimeMode.None(), OutputMode.Update(), seed)
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("tws_spec_warm").toString
+      val ckpt = TempPaths.dir("tws_spec_warm").toString
       val q = out.toDF().writeStream
         .outputMode("update").format("memory").queryName("tws_warm")
         .option("checkpointLocation", ckpt).start()
@@ -116,8 +113,7 @@ class TwsSpec extends AnyFunSuite {
         .transformWithState(
           new Tws.GapSessionProcessor(gapMs = 5000),
           TimeMode.EventTime(), OutputMode.Update())
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("tws_spec_timer").toString
+      val ckpt = TempPaths.dir("tws_spec_timer").toString
       val q = out.toDF().writeStream
         .outputMode("update").format("memory").queryName("tws_sessions")
         .option("checkpointLocation", ckpt).start()
