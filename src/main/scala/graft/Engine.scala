@@ -84,6 +84,24 @@ object Engine {
       }
     }
 
+  /** Run `body` with the runtime confs `kvs` set on `spark`, then
+    * restore each key: to its previous value, or unset if it was absent
+    * before. The settings are session-global for the body's duration,
+    * so a query running concurrently on the same session would plan
+    * with them too; callers that share a session across threads need a
+    * cloned session instead (as `StreamingOps.statePinnedSession` does).
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** events.ts as a microsecond TimestampType column, for a batch read
     * or a stream of the events table. The driver's events.parquet
     * carries TIMESTAMP(NANOS), surfaced as int64 nanos by the

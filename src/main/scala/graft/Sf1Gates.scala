@@ -444,28 +444,19 @@ object Sf1Gates {
     * at scale: keep dim sides of skew-prone joins materialized tables,
     * or pre-salt (q_skew_salted_join covers the engine-side fallback).
     */
-  private def skewSplit(spark: SparkSession, dir: String): Gate = {
-    val restore = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.files.maxPartitionBytes"
-    ).map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+  private def skewSplit(spark: SparkSession, dir: String): Gate =
+    Engine.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       // thresholds scaled to the probe's MEASURED compressed shuffle
       // bytes (hot partition ≈ 180 KB vs ≈ 35 KB median — lz4 crushes
       // the constant-key rows), standing in for the 256 MB-class
       // defaults a production deployment keeps
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64k")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32k")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32k",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+    ) {
       val events = Engine.Tables(spark, dir).events
       // the split regroups MAPPER ranges of the skewed reduce
       // partition: a single-mapper scan (the whole 7 MB probe file is
@@ -502,11 +493,7 @@ object Sf1Gates {
         split && rows.nonEmpty,
         s"rows=${rows.length} skewMarker=$split"
       )
-    } finally restore.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
-  }
 
   /** Misra-Gries heavy hitters at sf1: the capacity-256 sketch's
     * candidate set must contain EVERY word with true frequency >=
@@ -640,27 +627,23 @@ object Sf1Gates {
       )
     }
 
-  /** BPE trainer at sf1: the distributed merge table must equal the
-    * sequential reference on the probe vocabulary — at probe volume
-    * the pair-count aggregation actually spills across partitions and
-    * the argmax tie-break gets exercised on real collisions. The vocab
-    * collect is distinct-words-sized (size-independent of corpus
-    * rows), the same class of driver scalar the other gates use.
+  /** BPE trainer at sf1: the incremental merge table must equal the
+    * sequential reference on the probe vocabulary — at probe volume the
+    * argmax tie-break gets exercised on real collisions. The vocab
+    * collect is distinct-words-sized (size-independent of corpus rows),
+    * the same class of driver scalar the other gates use.
     */
   private def bpeParity(spark: SparkSession, dir: String): Gate =
     CacheScope.scoped {
-      val words = Engine.Tables(spark, dir).documents
-        .select(explode(split(lower(col("text")), " ")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      val dist = graft.functions.Bpe.train(words, numMerges = 12)
-      val ref = graft.functions.Bpe.trainReference(
-        words.collect().map(r => r.getString(0) -> r.getLong(1)).toMap, 12)
+      val vocab =
+        graft.functions.Bpe.vocabulary(Engine.Tables(spark, dir).documents)
+      val merges = graft.functions.Bpe.train(vocab, numMerges = 12)
+      val ref = graft.functions.Bpe.trainReference(vocab, 12)
       Gate(
         "bpe_reference_parity_sf1",
-        dist == ref && dist.size == 12,
-        s"merges=${dist.size} equal=${dist == ref} " +
-          s"top=${dist.headOption.map(m => m.left + "+" + m.right).getOrElse("-")}"
+        merges == ref && merges.size == 12,
+        s"merges=${merges.size} equal=${merges == ref} " +
+          s"top=${merges.headOption.map(m => m.left + "+" + m.right).getOrElse("-")}"
       )
     }
 }

@@ -74,7 +74,7 @@ object VerifySf1 {
       .sortBy(_._1)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("SCALECHECK_sf1.json"),
-      merged.map("  " + _._2).mkString("{\n", ",\n", "\n}"))
+      merged.map("  " + _._2).mkString("{\n", ",\n", "\n}\n"))
     sys.exit(if (rc != 0 || gates.exists(!_.pass)) 1 else 0)
   }
 }

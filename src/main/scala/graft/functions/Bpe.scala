@@ -1,34 +1,31 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Distributed BPE merge training (Sennrich et al. 2016, "Neural
-  * Machine Translation of Rare Words with Subword Units" — the
+/** BPE merge training (Sennrich et al. 2016, "Neural Machine
+  * Translation of Rare Words with Subword Units" — the
   * tokenizer-training pass every LLM data pipeline runs before
   * tokenizing a corpus).
   *
   * Scale shape: BPE statistics live on the WORD VOCABULARY, not the
-  * corpus — one full-corpus pass aggregates (word → count), collapsing
-  * 100 TB of text to the distinct-word table, and every merge round
-  * after that touches only the vocab. Each round is one distributed
-  * pair-count aggregation (flatMap adjacent pairs weighted by word
-  * count → groupBy → 1-row argmax collect — the same size-independent
-  * driver scalar as the IVF codebook) followed by a vocab-wide map
-  * that applies the merge. Lineage is truncated with localCheckpoint
-  * every few rounds (the Iterations pattern) so k rounds never
-  * re-execute round 1.
+  * corpus. One distributed pass aggregates the corpus to (word → count)
+  * — the only pass whose cost scales with corpus size — and that
+  * distinct-word table is collected to the driver, where the merge
+  * loop runs in memory with zero Spark jobs. The vocabulary is small by
+  * construction: tokenizer training caps it regardless of corpus bytes,
+  * and the documents table has 31 distinct words at sf0.001, sf0.01
+  * and sf0.1 (27,939 / 27,165 / 270,704 word occurrences).
   *
   * Determinism: the argmax tie-break is total (freq DESC, left ASC,
   * right ASC), so the merge table is a pure function of the corpus —
   * independent of partitioning and cluster size (BpeSpec pins both
-  * against a sequential reference implementation).
+  * against [[trainReference]]).
   */
 object Bpe {
 
-  final case class VocabWord(symbols: Seq[String], count: Long)
   final case class Merge(rank: Int, left: String, right: String, freq: Long)
 
   /** Greedy left-to-right application of one merge to a symbol
@@ -48,120 +45,48 @@ object Bpe {
   private def pairsOf(sym: Seq[String]): Iterator[(String, String)] =
     sym.iterator.zip(sym.iterator.drop(1))
 
-  private def hasAdjacent(sym: Seq[String], l: String, r: String): Boolean = {
-    var i = 0
-    while (i + 1 < sym.length) {
-      if (sym(i) == l && sym(i + 1) == r) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Deterministic argmax over a driver-side pair-count map — the same
-    * total order every trainer uses (freq DESC, left ASC, right ASC),
-    * so the merge table is independent of hash-map iteration order.
+  /** Deterministic argmax over a pair-count map — the same total order
+    * both trainers use (freq DESC, left ASC, right ASC), so the merge
+    * table is independent of hash-map iteration order.
     */
   private def argmax(
       counts: scala.collection.Map[(String, String), Long]
   ): ((String, String), Long) =
     counts.minBy { case ((a, b), c) => (-c, a, b) }
 
-  /** Learn `numMerges` BPE merges from a (word, cnt) vocabulary
-    * DataFrame, with INCREMENTAL pair counts: one full pair-count job
-    * up front, then each round recounts only the words that actually
-    * contain the merged pair (their pair contributions are retracted
-    * and re-asserted as a delta), instead of re-aggregating the whole
-    * vocabulary k times. The pair-frequency map lives on the driver —
-    * O(distinct adjacent symbol pairs), bounded by observed symbol
-    * adjacencies, NOT by vocab or corpus size — so the per-round
-    * argmax is an in-memory scan and each round costs exactly one
-    * Spark job over the (shrinking) affected subset.
+  /** The corpus word vocabulary, collected to the driver: lower-cased
+    * text split on single spaces, empty tokens dropped, occurrences
+    * counted per word. One distributed aggregation, one collect.
+    */
+  def vocabulary(documents: DataFrame): Map[String, Long] =
+    documents
+      .select(explode(split(lower(col("text")), " ")).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+      .collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+      .toMap
+
+  /** Learn `numMerges` BPE merges from a (word → count) vocabulary with
+    * INCREMENTAL pair counts. The pair-count map plus a pair→words
+    * inverted index are built once; each round takes the argmax, and
+    * only the words containing the merged pair retract their old pair
+    * contributions and assert the post-merge ones, instead of
+    * recounting the whole vocabulary k times.
     *
     * Words are split to character symbols (no end-of-word marker —
     * documented choice, same statistics either way for the merge
-    * ranking). Stops early when no adjacent pair remains.
+    * ranking). Stops early when no adjacent pair remains. Produces
+    * byte-identical merges to [[trainReference]].
     */
-  def train(vocabDf: DataFrame, numMerges: Int): Seq[Merge] =
-    trainWithStats(vocabDf, numMerges)._1
+  def train(vocab: Map[String, Long], numMerges: Int): Seq[Merge] =
+    trainWithStats(vocab, numMerges)._1
 
-  /** [[train]] plus per-round affected-word counts (how many words the
-    * round-k delta job actually recounted — the spec asserts this is a
-    * small, shrinking fraction of the vocab). Counts come from an
-    * accumulator: exact in a deterministic local run, stats-only under
-    * task retries.
+  /** [[train]] plus per-round affected counts: how many distinct symbol
+    * sequences round k recounted (the spec asserts this is a small,
+    * shrinking fraction of the vocabulary).
     */
-  def trainWithStats(vocabDf: DataFrame, numMerges: Int): (Seq[Merge], Seq[Long]) = {
-    val spark = vocabDf.sparkSession
-    import spark.implicits._
-    implicit val vwEnc = Encoders.product[VocabWord]
-
-    var vocab: Dataset[VocabWord] = vocabDf
-      .select(col("word").cast("string"), col("cnt").cast("long"))
-      .as[(String, Long)]
-      .map { case (w, c) => VocabWord(w.map(_.toString), c) }
-    vocab = vocab.localCheckpoint()
-
-    // one full distributed pair count; from here on, deltas only
-    val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-    vocab
-      .flatMap(v => pairsOf(v.symbols).map { case (a, b) => (a, b, v.count) })
-      .toDF("left", "right", "w")
-      .groupBy(col("left"), col("right"))
-      .agg(sum(col("w")).as("freq"))
-      .collect()
-      .foreach(r => counts((r.getString(0), r.getString(1))) = r.getLong(2))
-
-    val merges = ArrayBuffer.empty[Merge]
-    val affectedPerRound = ArrayBuffer.empty[Long]
-    var rank = 0
-    while (rank < numMerges && counts.nonEmpty) {
-      val ((l, r), f) = argmax(counts)
-      merges += Merge(rank, l, r, f)
-      // delta job: only words containing (l,r) adjacently retract their
-      // old pair contributions and assert the post-merge ones
-      val acc = spark.sparkContext.longAccumulator(s"bpe_affected_$rank")
-      vocab
-        .flatMap { v =>
-          if (!hasAdjacent(v.symbols, l, r)) Iterator.empty
-          else {
-            acc.add(1L)
-            val merged = applyMerge(v.symbols, l, r)
-            pairsOf(v.symbols).map { case (a, b) => (a, b, -v.count) } ++
-              pairsOf(merged).map { case (a, b) => (a, b, v.count) }
-          }
-        }
-        .toDF("left", "right", "w")
-        .groupBy(col("left"), col("right"))
-        .agg(sum(col("w")).as("d"))
-        .collect()
-        .foreach { row =>
-          val k = (row.getString(0), row.getString(1))
-          val nv = counts.getOrElse(k, 0L) + row.getLong(2)
-          if (nv > 0L) counts(k) = nv else counts.remove(k)
-        }
-      affectedPerRound += acc.value
-      vocab = vocab.map(v => VocabWord(applyMerge(v.symbols, l, r), v.count))
-      // truncate lineage so round k doesn't replay rounds 0..k-1
-      if ((rank + 1) % 8 == 0) vocab = vocab.localCheckpoint()
-      rank += 1
-    }
-    (merges.toSeq, affectedPerRound.toSeq)
-  }
-
-  /** Incremental in-memory trainer over a collected vocabulary — used
-    * when the distinct-word table fits on the driver (the standard BPE
-    * training shape: even a 100 TB corpus collapses to a bounded word
-    * vocabulary once min-frequency/size caps apply, which is why every
-    * production tokenizer trainer runs the merge loop in memory).
-    * Maintains the pair-count map plus a pair→words inverted index, so
-    * round k touches only the words containing the merged pair — the
-    * same retract/assert delta as the distributed path, with zero jobs.
-    * Produces byte-identical merges to [[trainReference]] and [[train]].
-    */
-  def trainInMemory(vocab: Map[String, Long], numMerges: Int): Seq[Merge] =
-    trainInMemoryWithStats(vocab, numMerges)._1
-
-  def trainInMemoryWithStats(
+  def trainWithStats(
       vocab: Map[String, Long], numMerges: Int): (Seq[Merge], Seq[Long]) = {
     // collapse identical symbol sequences (mirrors trainReference)
     val grouped = vocab.groupMapReduce {
@@ -249,32 +174,13 @@ object Bpe {
     merges.toSeq
   }
 
-  /** The full operator: corpus → word counts → merge table DataFrame
-    * (rank, left, right, freq). The corpus→vocab aggregation is the
-    * only pass whose cost scales with corpus size — it stays
-    * distributed always. The merge loop then routes by vocab size:
-    * a vocab that fits on the driver (≤ `collectVocabThreshold`
-    * distinct words — the overwhelmingly common case, since tokenizer
-    * training caps vocab regardless of corpus bytes) runs the
-    * zero-job in-memory incremental trainer; a larger one runs the
-    * distributed incremental trainer (one delta job per merge). Both
-    * produce byte-identical merge tables (BpeSpec).
+  /** The full operator: corpus → [[vocabulary]] → merge table
+    * DataFrame (rank, left, right, freq).
     */
-  def trainFromDocuments(spark: SparkSession, documents: DataFrame,
-      numMerges: Int, collectVocabThreshold: Long = 2000000L): DataFrame = {
+  def trainFromDocuments(documents: DataFrame, numMerges: Int): DataFrame = {
+    val spark = documents.sparkSession
     import spark.implicits._
-    val words = documents
-      .select(explode(split(lower(col("text")), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // materialize once: sized, then trained on
-    val merges =
-      if (words.count() <= collectVocabThreshold)
-        trainInMemory(
-          words.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-          numMerges)
-      else train(words, numMerges)
-    merges
+    train(vocabulary(documents), numMerges)
       .toDF()
       .select(col("rank"), col("left"), col("right"), col("freq"))
   }

@@ -655,13 +655,10 @@ object DedupQueries extends QueryModule {
         val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
         val comps = graft.plans.Iterations.connectedComponentsAdaptive(edges)
           .select(col("vertex").as("doc_id"), col("component"))
-        val mixP = 1000003L
         val docs = tables(s, dir).documents.select(col("doc_id"), col("lang"))
         docs.join(comps, Seq("doc_id"), "left")
           .withColumn("group_key", coalesce(col("component"), col("doc_id")))
-          .withColumn("bucket",
-            pmod(pmod(col("group_key"), lit(mixP)) * lit(2654435761L) +
-              lit(12345L), lit(mixP)) % 10)
+          .withColumn("bucket", CrossEngineMix.mix(col("group_key")) % 10)
           .select(col("doc_id"), col("lang"), col("group_key"),
             when(col("bucket") < 9, "train").otherwise("val").as("split"))
       },
@@ -683,8 +680,8 @@ object DedupQueries extends QueryModule {
         )
         SELECT d.doc_id, d.lang,
                COALESCE(c.component, d.doc_id) AS group_key,
-               CASE WHEN ((COALESCE(c.component, d.doc_id) % 1000003)
-                          * 2654435761 + 12345) % 1000003 % 10 < 9
+               CASE WHEN ${CrossEngineMix.mixSql(
+                 "COALESCE(c.component, d.doc_id)")} % 10 < 9
                     THEN 'train' ELSE 'val' END AS split
         FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
       """)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryDef
 import graft.QueryModule
+import graft.operators.CrossEngineMix._
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over graphs derived from the relational tables —
@@ -22,18 +23,6 @@ import org.apache.spark.sql.functions._
   * un-oriented but only O(√|E|²)=O(|E|) oriented.
   */
 object GraphQueries extends QueryModule {
-
-  /** Knuth multiplicative mix mod a prime — the same cross-engine
-    * arithmetic PipelineQueries uses for deterministic sampling, so
-    * DuckDB replays every "random" choice exactly. Inputs must be
-    * non-negative (DuckDB's % keeps the dividend's sign, Spark's pmod
-    * doesn't) — callers shift node ids positive first.
-    */
-  private val MixP = 1000003L
-  private def mix(key: org.apache.spark.sql.Column) =
-    pmod(pmod(key, lit(MixP)) * lit(2654435761L) + lit(12345L), lit(MixP))
-  private def mixSql(key: String): String =
-    s"((($key) % 1000003) * 2654435761 + 12345) % 1000003"
 
   def defs: Seq[QueryDef] = Seq(
     // PageRank over the customer→supplier trade graph (edge when a

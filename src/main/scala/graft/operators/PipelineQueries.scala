@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule}
+import graft.operators.CrossEngineMix._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,19 +20,6 @@ import org.apache.spark.sql.functions._
   * instead of a statistical one.
   */
 object PipelineQueries extends QueryModule {
-
-  /** Multiplicative-mix pseudo-random bucket of a BIGINT key, kept in
-    * pure int64 arithmetic both engines evaluate identically (the
-    * pre-reduction mod keeps every intermediate < 2^52, so no overflow
-    * on either side at any SF).
-    */
-  private val MixP = 1000003L
-  private def mix(key: Column): Column =
-    pmod(pmod(key, lit(MixP)) * lit(2654435761L) + lit(12345L), lit(MixP))
-
-  /** Same mix in DuckDB SQL over a key expression. */
-  private def mixSql(key: String): String =
-    s"((($key) % 1000003) * 2654435761 + 12345) % 1000003"
 
   private val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private val PhoneRe = "\\+1-555-[0-9]{4}"

@@ -1102,7 +1102,7 @@ object TextQueries extends QueryModule {
       "q_tokenizer_bpe",
       (s, dir) =>
         graft.functions.Bpe.trainFromDocuments(
-          s, tables(s, dir).documents, numMerges = 256),
+          tables(s, dir).documents, numMerges = 256),
       None
     ),
     // BPE encode with the learned merges: per-doc token counts under
@@ -1113,11 +1113,8 @@ object TextQueries extends QueryModule {
       "q_tokenize_bpe_apply",
       (s, dir) => {
         val docs = tables(s, dir).documents
-        val words = docs
-          .select(explode(split(lower(col("text")), " ")).as("word"))
-          .filter(col("word") =!= "")
-          .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-        val merges = graft.functions.Bpe.train(words, numMerges = 12)
+        val merges = graft.functions.Bpe.train(
+          graft.functions.Bpe.vocabulary(docs), numMerges = 12)
         graft.functions.Bpe.tokenize(docs, merges)
       },
       None

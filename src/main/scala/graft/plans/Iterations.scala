@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   */
 object Iterations {
 
-  /** r22 (VERDICT item 1, guide §1.2-3): run a connected-components
-    * driver loop with AQE disabled on this session, restoring the
-    * caller's value after. Rationale, measured: the CC loop's shuffles
+  /** r22 (VERDICT item 1, guide §1.2-3): the connected-components
+    * driver loops run with AQE disabled on their session, through
+    * [[graft.Engine.withConf]] (session-global for the loop's
+    * duration, the caller's value restored after). Rationale, measured: the CC loop's shuffles
     * are AGGREGATIONS (union→groupBy(vertex) min-label, window+distinct
     * star rounds) and one already-co-partitioned join — AQE's
     * skew-JOIN splitting cannot apply to any of them (guide §2.5), and
@@ -29,24 +30,18 @@ object Iterations {
     * wrapped: its loop joins ride the AQE-sized prep checkpoints'
     * partitioning, and the same conf A/B measured global-off at 1.08x
     * there — see OPTIMIZATION_r22.md.
-    *
-    * Assumes a single-threaded session: the setting is session-global
-    * for the body's duration, so a query running concurrently on the
-    * same session would also plan without AQE. Callers that share a
-    * session across threads need a cloned session instead (as
-    * `StreamingOps.statePinnedSession` does).
     */
-  private def withoutAqe[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private val AqeOff = "spark.sql.adaptive.enabled" -> "false"
+
+  /** An observed Long metric; 0 when the observed relation was empty
+    * (sum over no rows is null).
+    */
+  private def observedLong(
+      obs: org.apache.spark.sql.Observation, key: String): Long =
+    obs.get(key) match {
+      case null => 0L
+      case x: Number => x.longValue()
     }
-  }
 
   /** Connected components by min-label propagation over an undirected
     * edge list (`src`, `dst` columns). Returns (vertex, component)
@@ -129,7 +124,9 @@ object Iterations {
     */
   private def minLabelCore(
       edges: DataFrame, maxIter: Int): (DataFrame, Int, Boolean) =
-    withoutAqe(edges.sparkSession) { minLabelCoreBody(edges, maxIter) }
+    graft.Engine.withConf(edges.sparkSession, AqeOff) {
+      minLabelCoreBody(edges, maxIter)
+    }
 
   private def minLabelCoreBody(
       edges: DataFrame, maxIter: Int): (DataFrame, Int, Boolean) = {
@@ -177,11 +174,6 @@ object Iterations {
     }
     var converged = false
     var iter = 0
-    def metric(o: org.apache.spark.sql.Observation): Long =
-      o.get("changed") match {
-        case null => 0L
-        case n: Number => n.longValue()
-      }
     while (!converged && iter < maxIter) {
       // fuse two rounds per materialization: round A lazy (but still
       // observed — its CollectMetrics rides round B's checkpoint job,
@@ -195,13 +187,13 @@ object Iterations {
                   else labels
       val obs = org.apache.spark.sql.Observation(s"cc_changed_$iter")
       val next = step(first, Some(obs)).localCheckpoint()
-      val changed = metric(obs)
+      val changed = observedLong(obs, "changed")
       labels = next.select(col("vertex"), col("component"))
       converged = changed == 0
       // exact round accounting: if round A already saw no change,
       // convergence held at entry and an unfused loop would have run
       // exactly ONE (observing) round — count 1, not 2
-      iter += (if (!pair) 1 else if (metric(obsA.get) == 0L) 1 else 2)
+      iter += (if (!pair) 1 else if (observedLong(obsA.get, "changed") == 0L) 1 else 2)
     }
     bidir.unpersist()
     (labels, iter, converged)
@@ -228,7 +220,7 @@ object Iterations {
     */
   def connectedComponentsStarWithRounds(
       edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) =
-    withoutAqe(edges.sparkSession) {
+    graft.Engine.withConf(edges.sparkSession, AqeOff) {
       connectedComponentsStarBody(edges, maxIter)
     }
 
@@ -283,11 +275,8 @@ object Iterations {
           sum(pmod(xxhash64(col("u"), col("p")), lit(1000000007L))).as("h1"),
           sum(pmod(xxhash64(col("p"), col("u")), lit(999999937L))).as("h2"))
         .localCheckpoint()
-      def l(k: String): Long = obs.get(k) match {
-        case null => 0L
-        case x: Number => x.longValue()
-      }
-      val sig = (l("n"), l("h1"), l("h2"))
+      val sig = (observedLong(obs, "n"), observedLong(obs, "h1"),
+        observedLong(obs, "h2"))
       converged = prevSig.contains(sig)
       prevSig = Some(sig)
       e = next
@@ -327,14 +316,6 @@ object Iterations {
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
       teleport: Double = 0.15): DataFrame = {
-    // Loop-invariant tables are hash-partitioned on their join keys
-    // ONCE before checkpointing — LogicalRDD preserves the output
-    // partitioning, so the per-iteration joins (edges⋈ranks on src,
-    // vertices⋈contribs on vertex) insert NO exchange on these sides.
-    // Each iteration then shuffles exactly once: the contribution
-    // aggregation onto dst. On a skewed graph that one shuffle is
-    // AQE's to split; everything else stays in place.
-    //
     // Prep discipline: repartition(key) FIRST, dedup after —
     // HashPartitioning(key) satisfies the dedup aggregation's
     // ClusteredDistribution (partitioning exprs ⊆ grouping keys), so
@@ -346,6 +327,45 @@ object Iterations {
       .repartition(col("src"))
       .dropDuplicates("src", "dst")
       .localCheckpoint()
+    rankLoop(e,
+      e.groupBy(col("src")).agg(count(lit(1)).cast("double").as("deg")),
+      col("rank") / col("deg"), iters, damping, teleport)
+  }
+
+  /** Weighted PageRank — [[pageRank]] generalized to a weighted edge
+    * list (`src`, `dst`, `w`): contributions are rank·w/Σw_out instead
+    * of rank/outdeg. Same loop, same partitioning contract, same
+    * fixed-iterations-for-the-oracle design.
+    */
+  def pageRankWeighted(edges: DataFrame, iters: Int,
+      damping: Double = 0.85, teleport: Double = 0.15): DataFrame = {
+    // same prep discipline as pageRank: one src shuffle feeds the
+    // weight-sum aggregation and the join exchange-free (duplicate
+    // weighted edges fold into ow and contribute individually — no
+    // dedup by design)
+    val e = edges.select(col("src"), col("dst"), col("w"))
+      .repartition(col("src"))
+      .localCheckpoint()
+    rankLoop(e, e.groupBy(col("src")).agg(sum(col("w")).as("ow")),
+      col("rank") * col("w") / col("ow"), iters, damping, teleport)
+  }
+
+  /** The PageRank loop both variants share. `e` is the src-partitioned,
+    * checkpointed edge table; `outStats` its per-src aggregate (keyed
+    * by `src`), joined onto every edge once; `contrib` the per-edge
+    * contribution over that annotated edge and the source's `rank`.
+    *
+    * Loop-invariant tables are hash-partitioned on their join keys
+    * ONCE before checkpointing — LogicalRDD preserves the output
+    * partitioning, so the per-iteration joins (edges⋈ranks on src,
+    * vertices⋈contribs on vertex) insert NO exchange on these sides.
+    * Each iteration then shuffles exactly once: the contribution
+    * aggregation onto dst. On a skewed graph that one shuffle is
+    * AQE's to split; everything else stays in place.
+    */
+  private def rankLoop(e: DataFrame, outStats: DataFrame,
+      contrib: org.apache.spark.sql.Column, iters: Int, damping: Double,
+      teleport: Double): DataFrame = {
     // N rides the vertex materialization as an observed metric — no
     // separate count job (same fusion as connectedComponents)
     val obs = org.apache.spark.sql.Observation("pagerank_n")
@@ -355,19 +375,12 @@ object Iterations {
       .dropDuplicates("vertex")
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint()
-    val n = (obs.get("n") match {
-      case null => 0L
-      case x: Number => x.longValue()
-    }).toDouble
-    // (src, dst, deg) — each edge annotated with its source's
-    // out-degree, computed once; every iteration joins ranks against
-    // this single materialized table. Both sides are the
-    // src-partitioned checkpoint, so neither the aggregation nor the
-    // join shuffles.
-    val withDeg = e
-      .join(e.groupBy(col("src"))
-        .agg(count(lit(1)).cast("double").as("deg")), "src")
-      .localCheckpoint()
+    val n = observedLong(obs, "n").toDouble
+    // each edge annotated with its source's out-stats, computed once;
+    // every iteration joins ranks against this single materialized
+    // table. Both sides are the src-partitioned checkpoint, so neither
+    // the aggregation nor the join shuffles.
+    val annotated = e.join(outStats, "src").localCheckpoint()
     // ranks inherit the vertex partitioning (projection preserves it,
     // and so does every checkpoint in the loop); the initial ranks are
     // a pure projection of the checkpointed vertices — no job of
@@ -375,9 +388,9 @@ object Iterations {
     var ranks = vertices.withColumn("rank", lit(1.0 / n))
     var iter = 0
     while (iter < iters) {
-      val contribs = withDeg
-        .join(ranks, withDeg("src") === ranks("vertex"))
-        .select(col("dst").as("vertex"), (col("rank") / col("deg")).as("c"))
+      val contribs = annotated
+        .join(ranks, annotated("src") === ranks("vertex"))
+        .select(col("dst").as("vertex"), contrib.as("c"))
         .groupBy(col("vertex"))
         .agg(sum(col("c")).as("in"))
       ranks = vertices
@@ -392,55 +405,6 @@ object Iterations {
       // (r22: every-THIRD was A/B'd — 0.99x, neutral
       // (plans/r22/ab/t9) — and reverted: one job out of 37 buys
       // nothing measurable, and every-2 is the r20-measured form.)
-      if (iter % 2 == 1) ranks = ranks.localCheckpoint()
-      iter += 1
-    }
-    ranks
-  }
-
-  /** Weighted PageRank — [[pageRank]] generalized to a weighted edge
-    * list (`src`, `dst`, `w`): contributions are rank·w/Σw_out instead
-    * of rank/outdeg. Same loop shape, same partitioning contract, same
-    * fixed-iterations-for-the-oracle design.
-    */
-  def pageRankWeighted(edges: DataFrame, iters: Int,
-      damping: Double = 0.85, teleport: Double = 0.15): DataFrame = {
-    // same prep discipline as pageRank: one src shuffle feeds the
-    // weight-sum aggregation and the join exchange-free (duplicate
-    // weighted edges fold into ow and contribute individually — no
-    // dedup by design)
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src"))
-      .localCheckpoint()
-    val obs = org.apache.spark.sql.Observation("pagerank_w_n")
-    val vertices = e.select(col("src").as("vertex"))
-      .union(e.select(col("dst").as("vertex")))
-      .repartition(col("vertex"))
-      .dropDuplicates("vertex")
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val n = (obs.get("n") match {
-      case null => 0L
-      case x: Number => x.longValue()
-    }).toDouble
-    val withW = e
-      .join(e.groupBy(col("src")).agg(sum(col("w")).as("ow")), "src")
-      .localCheckpoint()
-    var ranks = vertices.withColumn("rank", lit(1.0 / n))
-    var iter = 0
-    while (iter < iters) {
-      val contribs = withW
-        .join(ranks, withW("src") === ranks("vertex"))
-        .select(col("dst").as("vertex"),
-          (col("rank") * col("w") / col("ow")).as("c"))
-        .groupBy(col("vertex"))
-        .agg(sum(col("c")).as("in"))
-      ranks = vertices
-        .join(contribs, Seq("vertex"), "left")
-        .select(col("vertex"),
-          (lit(teleport / n) +
-            lit(damping) * coalesce(col("in"), lit(0.0))).as("rank"))
-      // every-2nd checkpoint, same rationale as pageRank
       if (iter % 2 == 1) ranks = ranks.localCheckpoint()
       iter += 1
     }
@@ -509,10 +473,7 @@ object Iterations {
         .distinct()
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint()
-      val nextSize = obs.get("n") match {
-        case null => 0L
-        case n: Number => n.longValue()
-      }
+      val nextSize = observedLong(obs, "n")
       converged = nextSize == size
       size = nextSize
       reach = expanded

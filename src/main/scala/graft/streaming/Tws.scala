@@ -125,6 +125,19 @@ object Tws {
   final case class SpanHit(span: String, doc_id: Long)
   final case class SpanVerdict(doc_id: Long, span_min: Long)
 
+  /** The span-min step both processors run: fold the batch's hits
+    * into the span's stored minimum, then answer every hit with it.
+    */
+  private def spanMinVerdicts(
+      minDoc: ValueState[Long], rows: Iterator[SpanHit]): Iterator[SpanVerdict] = {
+    val hits = rows.map(_.doc_id).toArray
+    var m = if (minDoc.exists()) minDoc.get() else Long.MaxValue
+    hits.foreach(d => if (d < m) m = d)
+    minDoc.update(m)
+    val canonical = m
+    hits.iterator.map(d => SpanVerdict(d, canonical))
+  }
+
   /** Online-dedup bucket state: per span (the key), the minimum doc id
     * seen so far; every arriving hit is answered with that canonical
     * id (min over history ∪ this batch, so the verdict is order-free
@@ -145,14 +158,8 @@ object Tws {
     override def handleInputRows(
         key: String,
         rows: Iterator[SpanHit],
-        timerValues: TimerValues): Iterator[SpanVerdict] = {
-      val hits = rows.map(_.doc_id).toArray
-      var m = if (minDoc.exists()) minDoc.get() else Long.MaxValue
-      hits.foreach(d => if (d < m) m = d)
-      minDoc.update(m)
-      val canonical = m
-      hits.iterator.map(d => SpanVerdict(d, canonical))
-    }
+        timerValues: TimerValues): Iterator[SpanVerdict] =
+      spanMinVerdicts(minDoc, rows)
   }
 
   /** [[SpanMinProcessor]] warm-started from a batch corpus: the
@@ -181,28 +188,14 @@ object Tws {
     override def handleInputRows(
         key: String,
         rows: Iterator[SpanHit],
-        timerValues: TimerValues): Iterator[SpanVerdict] = {
-      val hits = rows.map(_.doc_id).toArray
-      var m = if (minDoc.exists()) minDoc.get() else Long.MaxValue
-      hits.foreach(d => if (d < m) m = d)
-      minDoc.update(m)
-      val canonical = m
-      hits.iterator.map(d => SpanVerdict(d, canonical))
-    }
+        timerValues: TimerValues): Iterator[SpanVerdict] =
+      spanMinVerdicts(minDoc, rows)
   }
 
   /** Run `body` with the RocksDB state store provider (required by the
     * v2 API), restoring the previous provider afterwards.
     */
-  def withRocksDb[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def withRocksDb[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
+    graft.Engine.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 }

@@ -4,19 +4,16 @@ import graft.functions.Bpe
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** BPE merge training: the distributed trainer must be a pure function
-  * of the corpus — equal to the sequential reference implementation
-  * and invariant to partitioning (the determinism a 1000-executor
+/** BPE merge training: the trainer must be a pure function of the
+  * corpus — equal to the sequential reference implementation and
+  * invariant to partitioning (the determinism a 1000-executor
   * tokenizer-training run needs for reproducible vocabularies).
   */
 class BpeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
   private val dir = "/root/testdata/sf0.001"
 
-  private def wordCounts = Engine.Tables(spark, dir).documents
-    .select(explode(split(lower(col("text")), " ")).as("word"))
-    .filter(col("word") =!= "")
-    .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+  private def documents = Engine.Tables(spark, dir).documents
 
   test("applyMerge replaces greedily left-to-right") {
     assert(Bpe.applyMerge(Seq("a", "b", "a", "b", "b"), "a", "b")
@@ -26,28 +23,17 @@ class BpeSpec extends AnyFunSuite {
     assert(Bpe.applyMerge(Seq("x"), "a", "b") == Seq("x"))
   }
 
-  test("distributed trainer equals the sequential reference") {
-    val ref = Bpe.trainReference(
-      wordCounts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      numMerges = 12)
-    val dist = Bpe.train(wordCounts, numMerges = 12)
-    assert(ref.size == 12, s"reference produced ${ref.size} merges")
-    assert(dist == ref,
-      s"distributed != reference\n dist=$dist\n ref =$ref")
-    // frequencies must be non-increasing is NOT guaranteed by BPE
-    // (later merges can beat earlier pair counts), but every freq is
-    // positive and ranks are sequential
-    assert(dist.map(_.rank) == (0 until 12))
-    assert(dist.forall(_.freq > 0))
-  }
-
   test("in-memory incremental trainer equals the reference at 256 merges") {
-    val vocab =
-      wordCounts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val vocab = Bpe.vocabulary(documents)
     val ref = Bpe.trainReference(vocab, numMerges = 256)
-    val (inc, affected) = Bpe.trainInMemoryWithStats(vocab, numMerges = 256)
+    val (inc, affected) = Bpe.trainWithStats(vocab, numMerges = 256)
     assert(inc == ref, s"incremental != reference (first diff: ${
       inc.zip(ref).indexWhere { case (a, b) => a != b }})")
+    // BPE frequencies need not be non-increasing (later merges can beat
+    // earlier pair counts), but ranks are sequential and every freq is
+    // positive
+    assert(inc.nonEmpty && inc.map(_.rank) == inc.indices)
+    assert(inc.forall(_.freq > 0))
     // the whole point of incremental counts: round k touches only the
     // words containing the merged pair, a shrinking sliver of the vocab
     val nWords = vocab.size.toLong
@@ -60,31 +46,16 @@ class BpeSpec extends AnyFunSuite {
       s"recount input did not shrink: early=${early.sum} late=${late.sum}")
   }
 
-  test("distributed incremental delta recounts only affected words") {
-    val (dist, affected) = Bpe.trainWithStats(wordCounts, numMerges = 12)
-    val vocab =
-      wordCounts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(dist == Bpe.trainReference(vocab, numMerges = 12))
-    // the in-memory and distributed paths recount the identical
-    // per-round affected sets (same retract/assert delta semantics)
-    val (_, affectedMem) = Bpe.trainInMemoryWithStats(vocab, numMerges = 12)
-    // distributed counts words; in-memory counts distinct symbol
-    // sequences — distributed is >= and both are far below vocab size
-    assert(affected.zip(affectedMem).forall { case (d, m) => d >= m })
-    assert(affected.forall(_ < vocab.size),
-      s"a delta round recounted the whole vocab: $affected")
-  }
-
   test("merge table is partitioning-invariant") {
-    val a = Bpe.train(wordCounts.repartition(3), numMerges = 8)
-    val b = Bpe.train(wordCounts.repartition(13), numMerges = 8)
+    val a = Bpe.train(Bpe.vocabulary(documents.repartition(3)), numMerges = 8)
+    val b = Bpe.train(Bpe.vocabulary(documents.repartition(13)), numMerges = 8)
     assert(a == b, s"partitioning changed merges:\n $a\n $b")
   }
 
   test("tokenize compresses and matches per-word reference encoding") {
-    val merges = Bpe.train(wordCounts, numMerges = 12)
+    val docs = documents
+    val merges = Bpe.train(Bpe.vocabulary(docs), numMerges = 12)
     val rules = merges.map(m => (m.left, m.right))
-    val docs = Engine.Tables(spark, dir).documents
     val out = Bpe.tokenize(docs, merges)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     // distributed per-doc counts equal a driver-side re-encode
