@@ -220,9 +220,10 @@ object Sf1Gates {
       }
       val expected = (0L until ScaleUp.PlantedQueries.toLong)
         .map(i => (i, i + ScaleUp.PlantOffset)).toSet
-      val reranked = operators.SimilarityQueries
-        .pqTopKRerank(Engine.Tables(spark, dir).embeddings,
-          ScaleUp.PlantedQueries, k = 10, shortlist = 200, numCodes = 64)
+      import operators.SimilarityQueries.{pqTopK, rerankExact}
+      val emb = Engine.Tables(spark, dir).embeddings
+      val reranked = rerankExact(emb,
+          pqTopK(emb, ScaleUp.PlantedQueries, k = 200, numCodes = 64), k = 10)
         .select(col("q_id"), col("cand_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val hits = (reranked & expected).size
@@ -486,7 +487,6 @@ object Sf1Gates {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sv"))
       val rows = joined.collect() // materialize: AQE finalizes the plan
       val plan = joined.queryExecution.executedPlan.toString
-      if (sys.env.contains("GRAFT_SKEW_GATE_DEBUG")) println(plan)
       val split = plan.contains("skew=true")
       Gate(
         "aqe_skew_split_sf1",
@@ -506,11 +506,11 @@ object Sf1Gates {
     */
   private def heavyHitters(spark: SparkSession, dir: String): Gate =
     CacheScope.scoped {
-      val words = Engine.Tables(spark, dir).documents
+      val documents = Engine.Tables(spark, dir).documents
+      val words = documents
         .select(explode(split(lower(col("text")), " ")).as("word"))
         .filter(col("word") =!= "")
-      val exact = words.groupBy(col("word")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val exact = graft.functions.Bpe.vocabulary(documents)
       val n = exact.values.sum
       val truth = exact.collect { case (w, c) if c >= 0.01 * n => w }.toSet
       val mg = udaf(new graft.functions.MisraGriesAgg(256))

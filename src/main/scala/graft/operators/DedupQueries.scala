@@ -347,50 +347,19 @@ object DedupQueries extends QueryModule {
     * outputs).
     */
   private[graft] def semanticAssign(s: SparkSession, dir: String): (DataFrame, Int, Long) = {
-    graft.functions.SketchExpressions.register(s)
-    import graft.functions.SketchExpressions.dot_product
-    val t = tables(s, dir)
-    val e = t.embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("n2", dot_product(col("v"), col("v")))
+    import SimilarityQueries.{assign, seedCentroids, seedVectors, vectors}
+    val e = vectors(tables(s, dir).embeddings)
     val n = e.count()
     val k = semanticK(n)
-    val step = math.max(1L, n / k)
-    // deterministic seed codebook: evenly-spaced vec_ids, same
-    // rule as the IVF builder's seed pass — and like that pass the
-    // <= k seed rows come to the driver (k x dim, bounded by
-    // SemanticMaxK independent of corpus size) so numbering needs no
-    // partitionless window
-    import s.implicits._
-    // r21 (guide §2.4): the k×dim codebook rides ONE broadcast row as
-    // an array column and the nearest-centroid assignment is an
-    // array_min projection — no ×k crossJoin fanout, no per-row window
-    // shuffle. Identical arithmetic + tie-breaks as the window form:
-    // rd = round(n2 − 2·dot + cn2, 6), ties to the lower list_id
-    // (struct comparison orders rd first, then list_id). cn2 keeps the
-    // Spark-computed values collected with the seeds.
-    val cents = e
-      .filter(pmod(col("vec_id"), lit(step)) === 0)
-      .orderBy(col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("v"), col("n2"))
-      .collect()
-      .sortBy(_.getLong(0))
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1), r.getDouble(2)) }
-      .toSeq
-      .toDF("list_id", "cv", "cn2")
-      .agg(array_sort(collect_list(
-        struct(col("list_id"), col("cv"), col("cn2")))).as("cb"))
-    val asg = e.crossJoin(broadcast(cents))
-      .withColumn("best",
-        array_min(transform(col("cb"), c =>
-          struct(
-            round(col("n2") - lit(2.0) * dot_product(col("v"), c.getField("cv"))
-              + c.getField("cn2"), 6).as("rd"),
-            c.getField("list_id").as("list_id")))))
-      .select(col("best.list_id").as("cluster_id"), col("vec_id"),
-        col("v"), col("n2"))
+    // deterministic seed codebook (the IVF builder's seed rule; the
+    // <= k seed rows, k x dim bounded by SemanticMaxK, come to the
+    // driver so numbering needs no partitionless window). r21 (guide
+    // §2.4): the codebook rides ONE broadcast row as an array column and
+    // the nearest-centroid assignment is an array_min projection — no
+    // ×k crossJoin fanout, no per-row window shuffle, ties to the lower
+    // list_id.
+    val asg = assign(e, seedCentroids(s, seedVectors(e, n, k)))
+      .select(col("list_id").as("cluster_id"), col("vec_id"), col("v"), col("n2"))
     (asg, k, n)
   }
 
@@ -753,24 +722,14 @@ object DedupQueries extends QueryModule {
     QueryDef(
       "q_mine_hard_negatives",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        graft.functions.SketchExpressions.register(s)
         val t = tables(s, dir)
         val pairs = prefixFilterPairs(t, 4, 5)
         val comps = graft.plans.Iterations
           .connectedComponentsAdaptive(
             pairs.select(col("d1").as("src"), col("d2").as("dst")))
           .select(col("vertex"), col("component"))
-        val e = t.embeddings.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-          .withColumn("n2", SimilarityQueries.dot(col("v"), col("v")))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"),
-            col("n2").as("qn"))
-        val scored = e.join(broadcast(q), col("q_id") =!= col("vec_id"))
-          .select(col("q_id"), col("vec_id").as("cand_id"),
-            round(SimilarityQueries.cosine(col("qv"), col("v"),
-              col("qn"), col("n2")), 6).as("cos"))
+        val scored = SimilarityQueries.crossScores(
+          SimilarityQueries.vectors(t.embeddings), 10, "cos")
         // veto pairs inside one near-dup component (either direction)
         val qc = comps.select(col("vertex").as("q_id"),
           col("component").as("q_comp"))
@@ -781,12 +740,7 @@ object DedupQueries extends QueryModule {
           .join(broadcast(cc), Seq("cand_id"), "left")
           .filter(col("q_comp").isNull || col("c_comp").isNull ||
             col("q_comp") =!= col("c_comp"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("cand_id"))
-        vetoed
-          .select(col("q_id"), col("cand_id"), col("cos"),
-            row_number().over(w).as("rnk"))
-          .filter(col("rnk") <= 3)
+        SimilarityQueries.topK(vetoed, "cos", descending = true, 3)
       },
       Some(s"""
         WITH RECURSIVE pairs AS MATERIALIZED ($jaccardOracle),

@@ -2,9 +2,17 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the embedding column.
+  *
+  * Every search here is the same three-stage pipeline: candidate
+  * generation (full cross, LSH bucket, IVF cell, PQ/ADC shortlist),
+  * exact rescoring of the candidates, then a per-query top-k. The
+  * stages share one set of helpers: [[vectors]] (the one vector load),
+  * [[seedVectors]] (the one seed codebook rule), [[topK]] (the one
+  * ranker), the PQ code-array/LUT/ADC builders and [[rerankExact]].
   *
   *  - Brute-force cosine top-k (oracle-checked): the exact baseline.
   *    A small query set crossed with all candidates — the join is a
@@ -33,6 +41,60 @@ object SimilarityQueries extends QueryModule {
   def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / sqrt(normA * normB)
 
+  /** The one vector load: (vec_id, v, n2) with the embedding as
+    * array<double> and n2 = dot(v, v). Registers the native kernels on
+    * the session; paths that never read n2 get it pruned.
+    */
+  private[operators] def vectors(emb: DataFrame): DataFrame = {
+    graft.functions.SketchExpressions.register(emb.sparkSession)
+    emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("n2", dot(col("v"), col("v")))
+  }
+
+  /** The one seed codebook rule (IVF, PQ, IVF-PQ, SemDeDup): the first
+    * `k` vectors whose vec_id is a multiple of max(1, n / k), in vec_id
+    * order. `n` is the caller's row count of `e`. The <= k seed
+    * vectors (k×dim doubles) come to the driver, the size-independent
+    * codebook footprint any k-means keeps.
+    */
+  private[operators] def seedVectors(e: DataFrame, n: Long, k: Int): Seq[Seq[Double]] =
+    e.filter(pmod(col("vec_id"), lit(math.max(1L, n / k))) === 0)
+      .orderBy(col("vec_id"))
+      .limit(k)
+      .select(col("v"))
+      .collect()
+      .map(_.getSeq[Double](0))
+      .toSeq
+
+  /** The one per-query ranker: (q_id, cand_id, score, rnk) for the `k`
+    * best candidates of each q_id, ties to the lower cand_id.
+    */
+  private[operators] def topK(
+      scored: DataFrame, score: String, descending: Boolean, k: Int): DataFrame = {
+    val s = col(score)
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(if (descending) s.desc else s, col("cand_id"))
+    scored
+      .select(col("q_id"), col("cand_id"), s, row_number().over(w).as("rnk"))
+      .filter(col("rnk") <= k)
+  }
+
+  /** Rounded cosine of every (q_id, cand_id) pair, cand_id != q_id, of
+    * the query set vec_id < nQueries against all `vecs` (vec_id, v, n2)
+    * — the broadcast cross shared by the exact-baseline paths.
+    */
+  private[operators] def crossScores(
+      vecs: DataFrame, nQueries: Int, score: String): DataFrame = {
+    val q = vecs
+      .filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
+    vecs
+      .select(col("vec_id").as("cand_id"), col("v").as("cv"), col("n2").as("cn"))
+      .join(broadcast(q), col("q_id") =!= col("cand_id"))
+      .select(col("q_id"), col("cand_id"),
+        round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6).as(score))
+  }
+
   /** r21 optimization (guide §2.4 / §1.2-1): nearest-centroid
     * assignment as a PURE PROJECTION. The codebook is already
     * driver-side (k×dim, the bounded-collect contract), so instead of
@@ -46,7 +108,7 @@ object SimilarityQueries extends QueryModule {
     * (struct comparison is lexicographic: rd first, then list_id —
     * exactly the old `ORDER BY rd, list_id ... rn = 1`).
     */
-  private[operators] def centroidArrayDf(
+  private def centroidArrayDf(
       s: org.apache.spark.sql.SparkSession,
       cents: Seq[(Int, Seq[Double])]): DataFrame = {
     // contract pin (r21 ADVICE): an empty codebook would yield ONE row
@@ -62,11 +124,16 @@ object SimilarityQueries extends QueryModule {
         struct(col("list_id"), col("cv"), col("cn2")))).as("cb"))
   }
 
+  /** [[centroidArrayDf]] over seed vectors numbered 0.. in seed order. */
+  private[operators] def seedCentroids(
+      s: org.apache.spark.sql.SparkSession, seeds: Seq[Seq[Double]]): DataFrame =
+    centroidArrayDf(s, seeds.zipWithIndex.map { case (v, i) => (i, v) })
+
   /** Per-centroid (rounded dist2, list_id) structs for `v` against the
     * 1-row codebook array `cb` — the shared kernel of [[nearestListId]]
     * and [[probeListIds]].
     */
-  private[operators] def centDists(cb: Column, v: Column, n2: Column): Column =
+  private def centDists(cb: Column, v: Column, n2: Column): Column =
     transform(cb, c =>
       struct(
         round(n2 - lit(2.0) * dot(v, c.getField("cv")) + c.getField("cn2"), 6)
@@ -74,45 +141,45 @@ object SimilarityQueries extends QueryModule {
         c.getField("list_id").as("list_id")))
 
   /** argmin cell id (ties to the lower list_id). */
-  private[operators] def nearestListId(cb: Column, v: Column, n2: Column): Column =
+  private def nearestListId(cb: Column, v: Column, n2: Column): Column =
     array_min(centDists(cb, v, n2)).getField("list_id")
 
   /** The `nProbe` nearest cell ids, nearest first (same order contract
     * as the old `row_number <= nProbe` probe window).
     */
-  private[operators] def probeListIds(
+  private def probeListIds(
       cb: Column, v: Column, n2: Column, nProbe: Int): Column =
     transform(slice(array_sort(centDists(cb, v, n2)), 1, nProbe),
       x => x.getField("list_id"))
 
-  /** Exact top-k neighbors for each query vector (vec_id < nQueries). */
-  def bruteForceTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    graft.functions.SketchExpressions.register(emb.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    val e = emb.select(
-      col("vec_id"),
-      col("embedding").cast("array<double>").as("v")
-    )
-    val withNorm = e.withColumn("n2", dot(col("v"), col("v")))
-    val q = withNorm
-      .filter(col("vec_id") < nQueries)
+  /** `df` (vec_id, v, n2, …) plus its nearest cell `list_id` —
+    * projection argmin against the 1-row broadcast codebook array (see
+    * [[centroidArrayDf]]): same rounded dist2 and lower-list-id
+    * tie-break as the window form it replaced (r21), with no ×k fanout
+    * and no per-row shuffle.
+    */
+  private[operators] def assign(df: DataFrame, cents: DataFrame): DataFrame =
+    df.crossJoin(broadcast(cents))
+      .withColumn("list_id", nearestListId(col("cb"), col("v"), col("n2")))
+      .drop("cb")
+
+  /** (q_id, qv, qn, list_id): each query vec_id < nQueries once per
+    * probed cell, its nProbe nearest by rounded argmin (same contract
+    * as the cell assignment) — a projection top-n against the
+    * broadcast codebook array instead of a crossJoin fanout + window
+    * (r21).
+    */
+  private def ivfProbes(e: DataFrame, cents: DataFrame, nQueries: Int, nProbe: Int): DataFrame =
+    e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
-    val c = withNorm.select(
-      col("vec_id").as("cand_id"),
-      col("v").as("cv"),
-      col("n2").as("cn")
-    )
-    val scored = c
-      .join(broadcast(q), col("q_id") =!= col("cand_id"))
-      .withColumn(
-        "cos",
-        round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
-      )
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id"))
-    scored
-      .select(col("q_id"), col("cand_id"), col("cos"), row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
-  }
+      .crossJoin(broadcast(cents))
+      .select(col("q_id"), col("qv"), col("qn"),
+        explode(probeListIds(col("cb"), col("qv"), col("qn"), nProbe))
+          .as("list_id"))
+
+  /** Exact top-k neighbors for each query vector (vec_id < nQueries). */
+  def bruteForceTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame =
+    topK(crossScores(vectors(emb), nQueries, "cos"), "cos", descending = true, k)
 
   /** Multi-table random-hyperplane LSH: `tables` independent hash
     * tables of `planes` deterministic ±1 hyperplanes each. A vector
@@ -128,12 +195,6 @@ object SimilarityQueries extends QueryModule {
       dim: Int,
       numTables: Int = 8
   ): DataFrame = {
-    graft.functions.SketchExpressions.register(emb.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    val e = emb.select(
-      col("vec_id"),
-      col("embedding").cast("array<double>").as("v")
-    )
     // cached for the consuming action (CacheScope releases it): the
     // hyperplane bucket assignment (planes × dim dot products per row)
     // is the expensive part and feeds three consumers — hot-bucket
@@ -141,8 +202,7 @@ object SimilarityQueries extends QueryModule {
     // come from ONE native expression call per row (HyperplaneBuckets)
     // — the equivalent literal coefficient tree (numTables × planes ×
     // dim lit()s) costs more in codegen compilation than the scan.
-    val withBuckets = graft.CacheScope.cached(e
-      .withColumn("n2", dot(col("v"), col("v")))
+    val withBuckets = graft.CacheScope.cached(vectors(emb)
       .select(
         col("vec_id"),
         col("v"),
@@ -189,10 +249,7 @@ object SimilarityQueries extends QueryModule {
         "cos",
         round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
       )
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id"))
-    scored
-      .select(col("q_id"), col("cand_id"), col("cos"), row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
+    topK(scored, "cos", descending = true, k)
   }
 
   /** DuckDB replay of [[graft.functions.HyperplaneBuckets]] for the
@@ -269,41 +326,17 @@ object SimilarityQueries extends QueryModule {
       nLists: Int,
       lloydIters: Int
   ): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.SketchExpressions.register(emb.sparkSession)
     val s = emb.sparkSession
     // cached: the normed corpus feeds the codebook seed, every Lloyd
     // iteration, the final assignment, and the probe side; released by
     // the consuming action's CacheScope
-    val e = graft.CacheScope.cached(emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("n2", dot(col("v"), col("v"))))
-    val n = e.count()
-    val step = math.max(1L, n / nLists)
+    val e = graft.CacheScope.cached(vectors(emb))
 
-    /** nearest-centroid assignment — projection argmin against the
-      * 1-row broadcast codebook array (see [[centroidArrayDf]]): same
-      * rounded dist2 and lower-list-id tie-break as the window form it
-      * replaced (r21), with no ×k fanout and no per-row shuffle.
-      */
-    def assign(df: DataFrame, centsArr: DataFrame): DataFrame =
-      df.crossJoin(broadcast(centsArr))
-        .withColumn("list_id", nearestListId(col("cb"), col("v"), col("n2")))
-        .drop("cb")
-
-    // seed codebook: evenly-spaced vec_ids
-    var codebook = e
-      .filter(pmod(col("vec_id"), lit(step)) === 0)
-      .orderBy(col("vec_id"))
-      .limit(nLists)
-      .collect()
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](r.fieldIndex("v"))) }
-      .toSeq
+    var cents = seedCentroids(s, seedVectors(e, e.count(), nLists))
     // Lloyd iterations: elementwise mean per cell via posexplode —
     // the shuffle is k×dim cells, independent of corpus size
     for (_ <- 1 to lloydIters) {
-      val assigned = assign(e, centroidArrayDf(s, codebook))
-      codebook = assigned
+      cents = centroidArrayDf(s, assign(e, cents)
         .select(col("list_id"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("list_id"), col("pos"))
         .agg(avg(col("x")).as("m"))
@@ -313,10 +346,8 @@ object SimilarityQueries extends QueryModule {
         .collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1)))
         .toSeq
-        .sortBy(_._1)
+        .sortBy(_._1))
     }
-
-    val cents = centroidArrayDf(s, codebook)
     val lists = assign(e, cents) // (vec_id, v, n2, list_id)
     (cents, lists, e)
   }
@@ -329,27 +360,13 @@ object SimilarityQueries extends QueryModule {
       nProbe: Int = 4,
       lloydIters: Int = 2
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (cents, lists, e) = ivfIndex(emb, nLists, lloydIters)
-    // each query probes its nProbe nearest cells (rounded argmin, same
-    // contract as assign) — projection top-n against the broadcast
-    // codebook array instead of a crossJoin fanout + window (r21)
-    val probes = e
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
-      .crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("qn"),
-        explode(probeListIds(col("cb"), col("qv"), col("qn"), nProbe))
-          .as("list_id"))
     val scored = lists
-      .join(probes, "list_id")
+      .join(ivfProbes(e, cents, nQueries, nProbe), "list_id")
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos", round(cosine(col("qv"), col("v"), col("qn"), col("n2")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored
-      .select(col("q_id"), col("vec_id").as("cand_id"), col("cos"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("vec_id").as("cand_id"),
+        round(cosine(col("qv"), col("v"), col("qn"), col("n2")), 6).as("cos"))
+    topK(scored, "cos", descending = true, k)
   }
 
   /** Symmetric per-vector int8 scalar quantization (the SQ8 scheme of
@@ -362,12 +379,9 @@ object SimilarityQueries extends QueryModule {
     * so unlike the float sketches this operator is EXACTLY
     * oracle-checkable.
     */
-  def sq8Quantize(emb: DataFrame): DataFrame = {
-    val e = emb.select(
-      col("vec_id"),
-      col("embedding").cast("array<double>").as("v")
-    )
-    e.withColumn("max_abs", array_max(transform(col("v"), x => abs(x))))
+  def sq8Quantize(emb: DataFrame): DataFrame =
+    vectors(emb)
+      .withColumn("max_abs", array_max(transform(col("v"), x => abs(x))))
       .withColumn("scale",
         when(col("max_abs") > 0, col("max_abs") / lit(127.0))
           .otherwise(lit(0.0)))
@@ -375,7 +389,6 @@ object SimilarityQueries extends QueryModule {
         when(col("max_abs") > 0,
           transform(col("v"), x => round(x / col("scale"), 0).cast("int")))
           .otherwise(transform(col("v"), _ => lit(0))))
-  }
 
   /** Top-k cosine over the QUANTIZED codes: every product and partial
     * sum of an int8 dot is an exact integer far below 2^53, so the
@@ -387,26 +400,10 @@ object SimilarityQueries extends QueryModule {
     * same equi-join keys at a quarter of the payload).
     */
   def sq8TopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    graft.functions.SketchExpressions.register(emb.sparkSession)
-    import org.apache.spark.sql.expressions.Window
     val qd = sq8Quantize(emb)
-      .select(col("vec_id"),
-        transform(col("qvec"), c => c.cast("double")).as("qv"))
-    val withNorm = qd.withColumn("qn", dot(col("qv"), col("qv")))
-    val q = withNorm
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("a"), col("qn").as("an"))
-    val c = withNorm.select(
-      col("vec_id").as("cand_id"), col("qv").as("b"), col("qn").as("bn"))
-    val scored = c
-      .join(broadcast(q), col("q_id") =!= col("cand_id"))
-      .withColumn("qcos",
-        round(dot(col("a"), col("b")) / sqrt(col("an") * col("bn")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("cand_id"))
-    scored
-      .select(col("q_id"), col("cand_id"), col("qcos"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
+      .select(col("vec_id"), transform(col("qvec"), c => c.cast("double")).as("v"))
+      .withColumn("n2", dot(col("v"), col("v")))
+    topK(crossScores(qd, nQueries, "qcos"), "qcos", descending = true, k)
   }
 
   /** IVF-SQ8 composite (the Faiss IVFScalarQuantizer layout): the
@@ -425,10 +422,10 @@ object SimilarityQueries extends QueryModule {
       nProbe: Int = 4,
       lloydIters: Int = 2
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (cents, lists0, e) = ivfIndex(emb, nLists, lloydIters)
     // codes derived per-row from the stored floats (index build time);
-    // the search never touches v again
+    // the search never touches v again. The codes stay doubles (no int
+    // round trip): an int cast would turn a -0.0 code into 0.0.
     def codes(vcol: Column): Column = {
       val ma = array_max(transform(vcol, x => abs(x)))
       when(ma > 0,
@@ -439,27 +436,15 @@ object SimilarityQueries extends QueryModule {
       .withColumn("qcodes", codes(col("v")))
       .withColumn("cbn", dot(col("qcodes"), col("qcodes")))
       .select(col("list_id"), col("vec_id"), col("qcodes").as("cb"), col("cbn"))
-    // projection top-nProbe against the broadcast codebook array (r21;
-    // same rounded-dist2 + lower-list-id order as the window it
-    // replaced)
-    val probes = e
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn"))
-      .crossJoin(broadcast(cents.withColumnRenamed("cb", "cbk")))
-      .select(col("q_id"), codes(col("qv")).as("qa"),
-        explode(probeListIds(col("cbk"), col("qv"), col("qn"), nProbe))
-          .as("list_id"))
+    val probes = ivfProbes(e, cents, nQueries, nProbe)
+      .select(col("q_id"), codes(col("qv")).as("qa"), col("list_id"))
       .withColumn("qan", dot(col("qa"), col("qa")))
     val scored = lists
       .join(probes, "list_id")
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("qcos",
-        round(dot(col("qa"), col("cb")) / sqrt(col("qan") * col("cbn")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("vec_id"))
-    scored
-      .select(col("q_id"), col("vec_id").as("cand_id"), col("qcos"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("vec_id").as("cand_id"),
+        round(dot(col("qa"), col("cb")) / sqrt(col("qan") * col("cbn")), 6).as("qcos"))
+    topK(scored, "qcos", descending = true, k)
   }
 
   /** Product quantization (the Faiss PQ/ADC layout): the vector is cut
@@ -486,45 +471,57 @@ object SimilarityQueries extends QueryModule {
   // coarse-quantizer argmin [centroidArrayDf/nearestListId] stayed: one
   // flat transform of k large dot products amortizes the interpreter
   // overhead and removes a full-corpus shuffle+window per call.)
-  final case class PqModel(codebook: DataFrame, m: Int, subDim: Int)
+  // `seeds` are the full seed vectors whose subvectors form the
+  // codebook; IVF-PQ uses them whole as its coarse centroids.
+  final case class PqModel(codebook: DataFrame, m: Int, subDim: Int, seeds: Seq[Seq[Double]]) {
+    def numCodes: Int = seeds.size
+  }
 
   /** Build the per-subspace codebook: (sub_id, code_id, cw, cwn2).
     * k×m subvector rows — broadcast-size, independent of corpus size.
     */
-  def pqCodebook(emb: DataFrame, m: Int = 4, numCodes: Int = 16): PqModel = {
-    graft.functions.SketchExpressions.register(emb.sparkSession)
-    val s = emb.sparkSession
-    val e = emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val n = e.count()
-    val step = math.max(1L, n / numCodes)
-    // numCodes×dim doubles to the driver — the same size-independent
-    // codebook footprint the IVF index keeps
-    val seedRows = e
-      .filter(pmod(col("vec_id"), lit(step)) === 0)
-      .orderBy(col("vec_id"))
-      .limit(numCodes)
-      .select(col("v"))
-      .collect()
-      .map(_.getSeq[Double](0))
+  def pqCodebook(emb: DataFrame, m: Int = 4, numCodes: Int = 16): PqModel =
+    pqModel(vectors(emb), m, numCodes)
+
+  /** [[pqCodebook]] over loaded [[vectors]]: its row count and seed
+    * pass run on `e` (a cached `e` is materialized by them).
+    */
+  private def pqModel(e: DataFrame, m: Int, numCodes: Int): PqModel = {
+    val s = e.sparkSession
+    val seeds = seedVectors(e, e.count(), numCodes)
     // the fused ADC scan indexes a DENSE flattened LUT as
     // j*numCodes + code — a short codebook would silently misalign
     // every distance (or throw ANSI out-of-bounds), so fail loudly here
-    require(seedRows.length == numCodes,
-      s"pqCodebook: corpus yielded ${seedRows.length} seed rows, " +
+    require(seeds.length == numCodes,
+      s"pqCodebook: corpus yielded ${seeds.length} seed rows, " +
         s"need numCodes=$numCodes (corpus smaller than the codebook?)")
-    val dim = seedRows.head.size
+    val dim = seeds.head.size
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val subDim = dim / m
     import s.implicits._
-    val cb = seedRows.zipWithIndex.toSeq
+    val cb = seeds.zipWithIndex
       .flatMap { case (v, i) =>
         (0 until m).map(j => (j, i, v.slice(j * subDim, (j + 1) * subDim)))
       }
       .toDF("sub_id", "code_id", "cw")
       .withColumn("cwn2", dot(col("cw"), col("cw")))
-    PqModel(cb, m, subDim)
+    PqModel(cb, m, subDim, seeds)
   }
+
+  /** (vec_id, sub_id, sv, svn2, code_id, cw, cwn2, d2): every subvector
+    * of `e` against every codeword of its subspace (broadcast hash join
+    * on sub_id), d2 the rounded squared euclidean — the shared body of
+    * the encoder and the per-query LUT.
+    */
+  private def subspaceDists(e: DataFrame, model: PqModel): DataFrame =
+    e.select(col("vec_id"),
+        posexplode(transform(sequence(lit(0), lit(model.m - 1)),
+          j => slice(col("v"), j * model.subDim + 1, lit(model.subDim))))
+          .as(Seq("sub_id", "sv")))
+      .withColumn("svn2", dot(col("sv"), col("sv")))
+      .join(broadcast(model.codebook), "sub_id")
+      .withColumn("d2",
+        round(col("svn2") - lit(2.0) * dot(col("sv"), col("cw")) + col("cwn2"), 6))
 
   /** Encode every vector: per-subspace argmin against the broadcast
     * codebook. One narrow pass over the corpus (rows fan out ×m, join
@@ -533,20 +530,9 @@ object SimilarityQueries extends QueryModule {
     * vec_id exactly once.
     */
   def pqEncode(emb: DataFrame, model: PqModel): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val subs = e
-      .select(col("vec_id"),
-        posexplode(transform(sequence(lit(0), lit(model.m - 1)),
-          j => slice(col("v"), j * model.subDim + 1, lit(model.subDim))))
-          .as(Seq("sub_id", "sv")))
-      .withColumn("svn2", dot(col("sv"), col("sv")))
     val w = Window.partitionBy(col("vec_id"), col("sub_id"))
       .orderBy(col("d2"), col("code_id"))
-    subs
-      .join(broadcast(model.codebook), "sub_id")
-      .withColumn("d2",
-        round(col("svn2") - lit(2.0) * dot(col("sv"), col("cw")) + col("cwn2"), 6))
+    subspaceDists(vectors(emb), model)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col("vec_id"), col("sub_id"), col("code_id"), col("d2"))
@@ -571,13 +557,47 @@ object SimilarityQueries extends QueryModule {
           .as("recon_dist2"))
   }
 
+  /** (vec_id, codes): the PQ codes pivoted to ONE array per vector
+    * (codes[j] = subspace-j code), so an ADC scan touches one row per
+    * candidate per query instead of m LUT-join rows.
+    */
+  private def pqCodeArrays(emb: DataFrame, model: PqModel): DataFrame =
+    pqEncode(emb, model)
+      .groupBy(col("vec_id"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("sub_id"), col("code_id")))),
+        x => x("code_id")).as("codes"))
+
+  /** (q_id, lut): per-query LUT of the queries vec_id < nQueries in `e`,
+    * flattened to a dense array indexed sub_id*numCodes+code_id (the
+    * broadcast join on sub_id makes every (sub,code) slot present, so
+    * array_sort by idx yields exactly that dense layout) — ADC is then
+    * an arithmetic element_at instead of a per-(sub,code) hash probe.
+    */
+  private def pqLuts(e: DataFrame, nQueries: Int, model: PqModel): DataFrame =
+    subspaceDists(e.filter(col("vec_id") < nQueries), model)
+      .groupBy(col("vec_id").as("q_id"))
+      .agg(transform(
+        array_sort(collect_list(struct(
+          (col("sub_id") * model.numCodes + col("code_id")).as("idx"), col("d2")))),
+        x => x("d2")).as("lut"))
+
+  /** ADC distance of a (lut, codes) row: the fixed-order sum
+    * j = 0..m-1 of lut[j*numCodes + codes[j]], rounded like every
+    * other distance.
+    */
+  private def adcDist2(model: PqModel): Column =
+    round(aggregate(sequence(lit(0), lit(model.m - 1)), lit(0.0),
+      (acc, j) => acc + element_at(col("lut"),
+        j * model.numCodes + element_at(col("codes"), j + 1) + 1)), 6)
+      .as("adc_dist2")
+
   /** ADC search (asymmetric distance computation): the query stays
     * full-precision; per query a lookup table of m×k per-subspace
     * distances is built against the codebook, and a candidate's
     * distance is the fixed-order sum of LUT entries its codes select.
     * The scale shape is the whole point: the corpus-side scan touches
-    * ONLY the m-byte codes (equi-join on (sub_id, code_id) against a
-    * broadcast LUT of |Q|·m·k rows), floats never travel.
+    * ONLY the m-byte codes, floats never travel.
     */
   def pqTopK(
       emb: DataFrame,
@@ -586,116 +606,40 @@ object SimilarityQueries extends QueryModule {
       m: Int = 4,
       numCodes: Int = 16
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val model = pqCodebook(emb, m, numCodes)
-    // one codes array per candidate (same fusion as ivfPqTopK): the
-    // corpus-side scan is then one row per candidate per query instead
-    // of m LUT-join rows per candidate per query, and the ADC sum is an
-    // arithmetic element_at projection — no (sub,code) hash probe, no
-    // (q_id, cand_id) re-aggregation shuffle
-    val codesArr = pqEncode(emb, model)
-      .groupBy(col("vec_id").as("cand_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub_id"), col("code_id")))),
-        x => x("code_id")).as("codes"))
-    val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val lutArr = e
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          j => slice(col("v"), j * model.subDim + 1, lit(model.subDim))))
-          .as(Seq("sub_id", "qsv")))
-      .withColumn("qsvn2", dot(col("qsv"), col("qsv")))
-      .join(broadcast(model.codebook), "sub_id")
-      .withColumn("qd2",
-        round(col("qsvn2") - lit(2.0) * dot(col("qsv"), col("cw")) + col("cwn2"), 6))
-      .groupBy(col("q_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(
-          (col("sub_id") * numCodes + col("code_id")).as("idx"), col("qd2")))),
-        x => x("qd2")).as("lut"))
     // full-corpus ADC is BY DESIGN a bounded cartesian: every candidate
     // is scored against each of the nQueries broadcast LUT rows (the
-    // "scan only the m-byte codes" contract) — fixed subspace order
-    // j = 0..m-1, same as the pivot sum it replaces
-    val scored = codesArr
-      .join(broadcast(lutArr), col("q_id") =!= col("cand_id"))
-      .select(col("q_id"), col("cand_id"),
-        round(aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-          (acc, j) => acc + element_at(col("lut"),
-            j * numCodes + element_at(col("codes"), j + 1) + 1)), 6)
-          .as("adc_dist2"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc_dist2"), col("cand_id"))
-    scored
-      .select(col("q_id"), col("cand_id"), col("adc_dist2"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
+    // "scan only the m-byte codes" contract)
+    val scored = pqCodeArrays(emb, model)
+      .select(col("vec_id").as("cand_id"), col("codes"))
+      .join(broadcast(pqLuts(vectors(emb), nQueries, model)),
+        col("q_id") =!= col("cand_id"))
+      .select(col("q_id"), col("cand_id"), adcDist2(model))
+    topK(scored, "adc_dist2", descending = false, k)
   }
 
-  /** ADC shortlist → exact rerank — the deployed PQ retrieval shape
-    * (Faiss refine/rerank stage): ADC is a lossy pre-ranking whose
-    * error is the query's own quantization residual, so rank-1
-    * neighbors are NOT guaranteed to top the ADC list once many
-    * vectors share nearby codes (at sf1, >1000 candidates tie at
-    * ADC 0 for a seed-coincident query). The fix every production PQ
-    * system ships: take the top-L ADC shortlist, recompute EXACT
-    * distances on those L full vectors only, re-rank. Cost stays
+  /** Shortlist → exact rerank — the deployed PQ retrieval shape (Faiss
+    * refine/rerank stage): ADC is a lossy pre-ranking whose error is
+    * the query's own quantization residual, so rank-1 neighbors are
+    * NOT guaranteed to top the ADC list once many vectors share nearby
+    * codes (at sf1, >1000 candidates tie at ADC 0 for a seed-coincident
+    * query). The fix every production PQ system ships: take the top-L
+    * ADC shortlist (any (q_id, cand_id) frame, e.g. [[pqTopK]] or
+    * [[ivfPqTopK]] at k = L), recompute EXACT distances on those L full
+    * vectors only, re-rank to (q_id, cand_id, dist2, rnk). Cost stays
     * L·dim per query — independent of corpus size — while recall
     * recovers to near-exact. Deterministic end to end (same rounding
-    * + id tie-breaks), so the registered query is hash-oracled.
+    * + id tie-breaks), so the registered queries are hash-oracled.
     */
-  def pqTopKRerank(
-      emb: DataFrame,
-      nQueries: Int,
-      k: Int,
-      shortlist: Int = 50,
-      m: Int = 4,
-      numCodes: Int = 16
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val adc = pqTopK(emb, nQueries, shortlist, m, numCodes)
-      .select(col("q_id"), col("cand_id"))
-    val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val rr = adc
+  def rerankExact(emb: DataFrame, shortlist: DataFrame, k: Int): DataFrame = {
+    val e = vectors(emb)
+    val rr = shortlist.select(col("q_id"), col("cand_id"))
       .join(e.select(col("vec_id").as("q_id"), col("v").as("qv")), "q_id")
       .join(e.select(col("vec_id").as("cand_id"), col("v").as("cv")), "cand_id")
       .withColumn("dist2",
         round(dot(col("qv"), col("qv")) - lit(2.0) * dot(col("qv"), col("cv"))
           + dot(col("cv"), col("cv")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist2"), col("cand_id"))
-    rr.select(col("q_id"), col("cand_id"), col("dist2"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** IVF-PQ shortlist + exact rerank — [[pqTopKRerank]] over the
-    * probed-cell ADC ranking instead of the full-corpus one. Per-query
-    * cost: (nProbe/nLists)·N ADC lookups + L exact distances.
-    */
-  def ivfPqTopKRerank(
-      emb: DataFrame,
-      nQueries: Int,
-      k: Int,
-      shortlist: Int = 50,
-      nLists: Int = 16,
-      nProbe: Int = 4,
-      m: Int = 4,
-      numCodes: Int = 16
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val adc = ivfPqTopK(emb, nQueries, shortlist, nLists, nProbe, m, numCodes)
-      .select(col("q_id"), col("cand_id"))
-    val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val rr = adc
-      .join(e.select(col("vec_id").as("q_id"), col("v").as("qv")), "q_id")
-      .join(e.select(col("vec_id").as("cand_id"), col("v").as("cv")), "cand_id")
-      .withColumn("dist2",
-        round(dot(col("qv"), col("qv")) - lit(2.0) * dot(col("qv"), col("cv"))
-          + dot(col("cv"), col("cv")), 6))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist2"), col("cand_id"))
-    rr.select(col("q_id"), col("cand_id"), col("dist2"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
+    topK(rr, "dist2", descending = false, k)
   }
 
   /** IVF-PQ composite (the Faiss IVFPQ layout, the index family behind
@@ -722,86 +666,30 @@ object SimilarityQueries extends QueryModule {
       m: Int = 4,
       numCodes: Int = 16
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nLists == numCodes, "coarse centroids reuse the PQ seed rows")
-    val model = pqCodebook(emb, m, numCodes)
-    val e = graft.CacheScope.cached(emb
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("n2", dot(col("v"), col("v"))))
-    // coarse centroids: the FULL seed vectors (k×dim to the driver, the
-    // standard coarse-codebook footprint)
-    val n = e.count()
-    val step = math.max(1L, n / nLists)
-    val s = emb.sparkSession
-    import s.implicits._
-    val cents = centroidArrayDf(s, e
-      .filter(pmod(col("vec_id"), lit(step)) === 0)
-      .orderBy(col("vec_id"))
-      .limit(nLists)
-      .select(col("v"))
-      .collect()
-      .map(_.getSeq[Double](0))
-      .zipWithIndex.toSeq
-      .map { case (v, i) => (i, v) })
-    // coarse routing as projections against the broadcast codebook
-    // array (r21): argmin for the cell assignment, sorted-slice for the
-    // probes — same rounded-dist2 + lower-list-id contract as the
-    // windows they replaced (kept on the paired A/B: one flat transform
-    // of k full-dim dots, unlike the reverted nested PQ-encode HOFs)
-    val cellAsg = e
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        nearestListId(col("cb"), col("v"), col("n2")).as("list_id"))
-    val probes = e
-      .filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id").as("q_id"),
-        explode(probeListIds(col("cb"), col("v"), col("n2"), nProbe))
-          .as("list_id"))
-    // codes pivoted to ONE array per vector (codes[j] = subspace-j code):
-    // the probe-side scan then touches one row per candidate, not m
-    val codesArr = pqEncode(emb, model)
-      .groupBy(col("vec_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub_id"), col("code_id")))),
-        x => x("code_id")).as("codes"))
-      .join(cellAsg, "vec_id")
-    // per-query LUT flattened to a dense array indexed sub_id*k+code_id
-    // (the broadcast join on sub_id makes every (sub,code) slot present,
-    // so array_sort by idx yields exactly that dense layout) — ADC then
-    // becomes an arithmetic element_at instead of a per-(sub,code) hash
-    // probe against a 3-key broadcast join
-    val lutArr = e
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"),
-        posexplode(transform(sequence(lit(0), lit(m - 1)),
-          j => slice(col("v"), j * model.subDim + 1, lit(model.subDim))))
-          .as(Seq("sub_id", "qsv")))
-      .withColumn("qsvn2", dot(col("qsv"), col("qsv")))
-      .join(broadcast(model.codebook), "sub_id")
-      .withColumn("qd2",
-        round(col("qsvn2") - lit(2.0) * dot(col("qsv"), col("cw")) + col("cwn2"), 6))
-      .groupBy(col("q_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(
-          (col("sub_id") * numCodes + col("code_id")).as("idx"), col("qd2")))),
-        x => x("qd2")).as("lut"))
+    // the model's count and seed pass run on the cached corpus, so they
+    // materialize it for the cell assignment, probes and LUTs below
+    val e = graft.CacheScope.cached(vectors(emb))
+    val model = pqModel(e, m, numCodes)
+    // coarse centroids: the model's FULL seed vectors (k×dim, already
+    // on the driver). Coarse routing is projections against the
+    // broadcast codebook array (r21): argmin for the cell assignment,
+    // sorted-slice for the probes — same rounded-dist2 + lower-list-id
+    // contract as the windows they replaced (kept on the paired A/B:
+    // one flat transform of k full-dim dots, unlike the reverted nested
+    // PQ-encode HOFs)
+    val cents = seedCentroids(emb.sparkSession, model.seeds)
+    val cellAsg = assign(e, cents).select(col("vec_id"), col("list_id"))
+    val probes = ivfProbes(e, cents, nQueries, nProbe).select(col("q_id"), col("list_id"))
+    val codesArr = pqCodeArrays(emb, model).join(cellAsg, "vec_id")
     // every (q_id, vec_id) pair appears at most once here (one cell per
     // vector, distinct probed lists per query), so the ADC sum is a pure
-    // projection — fixed subspace order j = 0..m-1, same as before
+    // projection
     val scored = codesArr
-      .join(broadcast(probes.join(lutArr, "q_id")), "list_id")
+      .join(broadcast(probes.join(pqLuts(e, nQueries, model), "q_id")), "list_id")
       .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-          (acc, j) => acc + element_at(col("lut"),
-            j * numCodes + element_at(col("codes"), j + 1) + 1)), 6)
-          .as("adc_dist2"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc_dist2"), col("vec_id"))
-    scored
-      .select(col("q_id"), col("vec_id").as("cand_id"), col("adc_dist2"),
-        row_number().over(w).as("rnk"))
-      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("vec_id").as("cand_id"), adcDist2(model))
+    topK(scored, "adc_dist2", descending = false, k)
   }
 
   /** Greedy Maximal Marginal Relevance over a bounded shortlist: the
@@ -819,10 +707,7 @@ object SimilarityQueries extends QueryModule {
   def mmrSelect(emb: DataFrame, queryId: Long, shortlist: Int, k: Int,
       lambdaRel: Double = 0.7, lambdaDiv: Double = 0.3): DataFrame = {
     val s = emb.sparkSession
-    graft.functions.SketchExpressions.register(s)
-    val e = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-      .withColumn("n2", dot(col("v"), col("v")))
+    val e = vectors(emb)
     val q = e.filter(col("vec_id") === queryId)
       .select(col("v").as("qv"), col("n2").as("qn"))
     val cand = e.filter(col("vec_id") =!= queryId)
@@ -1138,11 +1023,14 @@ object SimilarityQueries extends QueryModule {
       Some(ivfPqOracle)
     ),
     // PQ + exact rerank: ADC top-50 shortlist re-scored with exact
-    // distances (the production retrieval shape; recall-gated at sf1
-    // with higher-resolution codes in pq_planted_codes_sf1).
+    // distances (the production retrieval shape; also recall-gated at
+    // sf1 with higher-resolution codes in pq_planted_codes_sf1).
     QueryDef(
       "q_ann_pq_rerank",
-      (s, dir) => pqTopKRerank(tables(s, dir).embeddings, 10, 5, 50),
+      (s, dir) => {
+        val emb = tables(s, dir).embeddings
+        rerankExact(emb, pqTopK(emb, 10, 50), 5)
+      },
       Some(pqRerankOracle)
     ),
     // IVF-PQ + exact rerank — the complete Faiss IVFPQ+refine stack:
@@ -1150,7 +1038,10 @@ object SimilarityQueries extends QueryModule {
     // every stage deterministic and the whole pipeline hash-oracled.
     QueryDef(
       "q_ann_ivf_pq_rerank",
-      (s, dir) => ivfPqTopKRerank(tables(s, dir).embeddings, 10, 5, 50),
+      (s, dir) => {
+        val emb = tables(s, dir).embeddings
+        rerankExact(emb, ivfPqTopK(emb, 10, 50), 5)
+      },
       Some(ivfPqRerankOracle)
     )
   )

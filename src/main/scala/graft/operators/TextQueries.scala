@@ -409,14 +409,11 @@ object TextQueries extends QueryModule {
       "q_retrieval_hybrid_rrf",
       (s, dir) => {
         val t = tables(s, dir)
-        graft.functions.SketchExpressions.register(s)
         val bm = bm25Scores(t.documents, Seq("spark", "batch", "stream"))
         val (lex0, _) = graft.plans.DistributedRank.globalRank(
           bm, "rank_lex", col("bm25").desc, col("doc_id"))
         val lex = lex0.select(col("doc_id"), col("rank_lex").cast("long").as("rank_lex"))
-        val e = t.embeddings.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-          .withColumn("n2", SimilarityQueries.dot(col("v"), col("v")))
+        val e = SimilarityQueries.vectors(t.embeddings)
         val q = e.filter(col("vec_id") === 0L)
           .select(col("v").as("qv"), col("n2").as("qn"))
         val sem0 = e.filter(col("vec_id") =!= 0L)

@@ -226,6 +226,34 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("semantic dedup assigns every vector to its nearest seed (rounded dist2, lower id)") {
+    import org.apache.spark.sql.functions.col
+    CacheScope.scoped {
+      val (asg, k, n) = DedupQueries.semanticAssign(spark, dir)
+      val vecs = Engine.Tables(spark, dir).embeddings
+        .select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).sortBy(_._1)
+      assert(vecs.length == n)
+      // the seed rule: the first k vec_ids that are multiples of n / k
+      val step = math.max(1L, n / k)
+      val seeds = vecs.filter(_._1 % step == 0).take(k).map(_._2)
+      // Spark's round() is HALF_UP via BigDecimal — mirror it exactly
+      def r6(x: Double): Double =
+        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      def dot(a: Seq[Double], b: Seq[Double]): Double =
+        a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))
+      val byDistThenId = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+      val expected = vecs.map { case (id, v) =>
+        id -> seeds.indices.minBy(i =>
+          (r6(dot(v, v) - 2.0 * dot(v, seeds(i)) + dot(seeds(i), seeds(i))), i))(byDistThenId)
+      }.toMap
+      val actual = asg.select("vec_id", "cluster_id").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(actual == expected,
+        s"${(actual.toSet -- expected.toSet).take(5)} vs ${(expected.toSet -- actual.toSet).take(5)}")
+    }
+  }
+
   test("fuzzy decontamination: exact precision, full recall in the Jaccard band region") {
     import org.apache.spark.sql.functions._
     graft.functions.SketchExpressions.register(spark)

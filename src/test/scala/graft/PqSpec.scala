@@ -150,4 +150,40 @@ class PqSpec extends AnyFunSuite {
       assert(actual == expected, s"ADC mismatch:\n got $actual\n exp $expected")
     }
   }
+
+  test("exact rerank of the PQ and IVF-PQ shortlists matches a driver-side exact ranking") {
+    CacheScope.scoped {
+      val vecs = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      // Spark's round() is HALF_UP via BigDecimal — mirror it exactly
+      def r6(x: Double): Double =
+        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      def dot(a: Seq[Double], b: Seq[Double]): Double =
+        a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))
+      // same shape as the engine: n2(q) - 2*dot + n2(c), sequential dots
+      def dist2(q: Seq[Double], c: Seq[Double]): Double =
+        r6(dot(q, q) - 2.0 * dot(q, c) + dot(c, c))
+      val byDistThenId =
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+      Seq(
+        "pq" -> SimilarityQueries.pqTopK(emb, 10, 50),
+        "ivf_pq" -> SimilarityQueries.ivfPqTopK(emb, 10, 50)
+      ).foreach { case (name, shortlist) =>
+        val pairs = shortlist.select("q_id", "cand_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        assert(pairs.map(_._1).distinct.length == 10, s"$name: 10 queries")
+        val expected = pairs.groupBy(_._1).toSeq.flatMap { case (q, ps) =>
+          ps.map { case (_, c) => (dist2(vecs(q), vecs(c)), c) }
+            .sorted(byDistThenId).take(5).zipWithIndex
+            .map { case ((d, c), i) => (q, c, d, i + 1) }
+        }.toSet
+        val actual = SimilarityQueries.rerankExact(emb, shortlist, 5)
+          .select("q_id", "cand_id", "dist2", "rnk").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+          .toSet
+        assert(actual == expected,
+          s"$name rerank mismatch:\n got ${actual -- expected}\n exp ${expected -- actual}")
+      }
+    }
+  }
 }
