@@ -1,7 +1,8 @@
 package graft
 
 /** The one JSON string writer for the hand-built records (`Verify`'s
-  * oracle_sql.json, `Bench`'s record line).
+  * oracle_sql.json, `Bench`'s record line, `VerifySf1`'s
+  * SCALECHECK_sf1.json).
   */
 object Json {
 

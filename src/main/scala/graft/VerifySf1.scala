@@ -69,7 +69,7 @@ object VerifySf1 {
       else Seq.empty
     }
     val fresh = gates.map(g =>
-      g.name -> s""""${g.name}": {"pass": ${g.pass}, "detail": "${g.detail}"}""")
+      g.name -> s"""${Json.str(g.name)}: {"pass": ${g.pass}, "detail": ${Json.str(g.detail)}}""")
     val merged = (prior.filterNot(p => fresh.exists(_._1 == p._1)) ++ fresh)
       .sortBy(_._1)
     java.nio.file.Files.writeString(

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, QueryModule}
 import graft.streaming.Cep
 import graft.streaming.StreamingOps.Event
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CEP pattern detection exposed as verifiable batch queries (the
@@ -12,17 +13,20 @@ import org.apache.spark.sql.functions._
   */
 object CepQueries extends QueryModule {
 
+  /** The events table as the typed stream the CEP front-ends read. */
+  private def events(s: SparkSession, dir: String): Dataset[Event] = {
+    import s.implicits._
+    tables(s, dir).events
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event]
+  }
+
   def defs: Seq[QueryDef] = Seq(
     // Strict contiguity: two consecutive 'error' events of one user
     // within 30 minutes (MATCH_RECOGNIZE PATTERN (E1 E2) semantics).
     QueryDef(
       "q_cep_double_error",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("e1", _.event_type == "error"),
@@ -32,7 +36,7 @@ object CepQueries extends QueryModule {
           strict = true
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -63,11 +67,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_signup_purchase",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("signup", _.event_type == "signup"),
@@ -77,7 +76,7 @@ object CepQueries extends QueryModule {
           strict = false
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -109,11 +108,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_error_burst",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("errs", _.event_type == "error", oneOrMore = true, greedy = true),
@@ -127,7 +121,7 @@ object CepQueries extends QueryModule {
           skip = Cep.SkipPastLastEvent
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -166,11 +160,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_skip_past_last",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("e1", _.event_type == "error"),
@@ -183,7 +172,7 @@ object CepQueries extends QueryModule {
           skip = Cep.SkipPastLastEvent
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -220,11 +209,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_optional_strict",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("signup", _.event_type == "signup"),
@@ -237,7 +221,7 @@ object CepQueries extends QueryModule {
           strict = true
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -270,11 +254,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_not_followed_by",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("signup", _.event_type == "signup"),
@@ -284,7 +263,7 @@ object CepQueries extends QueryModule {
           strict = false
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -315,11 +294,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_not_next",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("err", _.event_type == "error"),
@@ -329,7 +303,7 @@ object CepQueries extends QueryModule {
           strict = true
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -357,11 +331,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_followed_by_any",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("signup", _.event_type == "signup"),
@@ -371,7 +340,7 @@ object CepQueries extends QueryModule {
           strict = false
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -402,11 +371,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_consecutive",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           steps = Seq(
             Cep.Step("errs", _.event_type == "error",
@@ -418,7 +382,7 @@ object CepQueries extends QueryModule {
           skip = Cep.SkipPastLastEvent
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -454,13 +418,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_double_error",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -500,13 +459,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_error_burst",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -556,13 +510,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_measures",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatchWithMeasures(events, """
+          .detectBatchWithMeasures(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -623,13 +572,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_all_rows",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatchAllRowsWithMeasures(events, """
+          .detectBatchAllRowsWithMeasures(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -686,13 +630,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_updown",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -730,11 +669,6 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_group_loop",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         val pattern = Cep.SequencePattern(
           Seq(
             Cep.Group(Seq(
@@ -748,7 +682,7 @@ object CepQueries extends QueryModule {
           skip = Cep.SkipToNext
         )
         Cep
-          .detectBatch(events, pattern)
+          .detectBatch(events(s, dir), pattern)
           .toDF()
           .select(
             col("key").as("user_id"),
@@ -864,13 +798,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_group",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -928,13 +857,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_alt",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1040,13 +964,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_permute",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1093,13 +1012,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_subset",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatchWithMeasures(events, """
+          .detectBatchWithMeasures(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1154,13 +1068,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_final_running",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatchAllRowsWithMeasures(events, """
+          .detectBatchAllRowsWithMeasures(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1225,13 +1134,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_exclusion",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatchAllRowsWithMeasures(events, """
+          .detectBatchAllRowsWithMeasures(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1284,13 +1188,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_skip_last",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1347,13 +1246,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_group_alt",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1415,13 +1309,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_skip_to_var",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1479,13 +1368,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_skip_subset",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1547,13 +1431,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_nav_run",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatch(events, """
+          .detectBatch(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts
@@ -1595,13 +1474,8 @@ object CepQueries extends QueryModule {
     QueryDef(
       "q_cep_sql_nav_measures",
       (s, dir) => {
-        import s.implicits._
-        val t = tables(s, dir)
-        val events = t.events
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
         graft.streaming.MatchRecognize
-          .detectBatchWithMeasures(events, """
+          .detectBatchWithMeasures(events(s, dir), """
             MATCH_RECOGNIZE (
               PARTITION BY user_id
               ORDER BY ts

@@ -490,35 +490,14 @@ object DedupQueries extends QueryModule {
     QueryDef(
       "q_dedup_embedding",
       (s, dir) => {
-        graft.functions.SketchExpressions.register(s)
-        import graft.functions.SketchExpressions.dot_product
-        val t = tables(s, dir)
-        val e = t.embeddings.select(
-          col("vec_id"),
-          col("label"),
-          col("embedding").cast("array<double>").as("v")
-        )
-        val withNorm = e.withColumn("dot_self", dot_product(col("v"), col("v")))
-        val a = withNorm.select(
-          col("label"),
-          col("vec_id").as("v1"),
-          col("v").as("va"),
-          col("dot_self").as("na")
-        )
-        val b = withNorm.select(
-          col("label"),
-          col("vec_id").as("v2"),
-          col("v").as("vb"),
-          col("dot_self").as("nb")
-        )
+        val e = SimilarityQueries.vectors(tables(s, dir).embeddings, "label")
+        val a = e.select(col("label"), col("vec_id").as("v1"), col("v").as("va"), col("n2").as("na"))
+        val b = e.select(col("label"), col("vec_id").as("v2"), col("v").as("vb"), col("n2").as("nb"))
         a.join(b, Seq("label"))
           .filter(col("v1") < col("v2"))
           .withColumn(
             "cos",
-            round(
-              dot_product(col("va"), col("vb")) / sqrt(col("na") * col("nb")),
-              6
-            )
+            round(SimilarityQueries.cosine(col("va"), col("vb"), col("na"), col("nb")), 6)
           )
           .filter(col("cos") >= 0.35)
           .select(col("label"), col("v1"), col("v2"), col("cos"))

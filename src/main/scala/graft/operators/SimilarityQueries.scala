@@ -41,13 +41,14 @@ object SimilarityQueries extends QueryModule {
   def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / sqrt(normA * normB)
 
-  /** The one vector load: (vec_id, v, n2) with the embedding as
-    * array<double> and n2 = dot(v, v). Registers the native kernels on
-    * the session; paths that never read n2 get it pruned.
+  /** The one vector load: (vec_id, keep…, v, n2) with the embedding as
+    * array<double> and n2 = dot(v, v); `keep` names input columns to
+    * carry along, such as a blocking `label`. Registers the native
+    * kernels on the session; paths that never read n2 get it pruned.
     */
-  private[operators] def vectors(emb: DataFrame): DataFrame = {
+  private[operators] def vectors(emb: DataFrame, keep: String*): DataFrame = {
     graft.functions.SketchExpressions.register(emb.sparkSession)
-    emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    emb.select((col("vec_id") +: keep.map(col)) :+ col("embedding").cast("array<double>").as("v"): _*)
       .withColumn("n2", dot(col("v"), col("v")))
   }
 

@@ -1,12 +1,9 @@
 package graft.skew
 
 import graft.functions.MisraGriesAgg
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.ConcurrentHashMap
-import scala.collection.concurrent.TrieMap
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.util.Try
@@ -36,131 +33,36 @@ import scala.util.Try
   *  - the control loop: AdaptiveSalter, one tick per micro-batch,
   *    deciding from a key sketch observed on the previous batch's own
   *    input (the controller reading its own job's per-channel input
-  *    counts). SkewMonitor, a listener over task metrics, only reports.
+  *    counts). Its actionability test is the parameter-free
+  *    `ceil(maxShare × P) > 1`, so the busy/free thresholds have no
+  *    counterpart; task metrics are collected, not acted on, by the one
+  *    metrics listener (graft.metrics.Collector).
   */
 object ReshapeConfig {
-  /** Config keys mirror the reference's system properties
-    * (README.md:14-22); read from Spark conf with the same defaults.
+  /** Mirrors the reference's system property (README.md:14-22), read
+    * from Spark conf with the same default.
     */
-  val HiThresholdKey = "spark.graft.reshape.hiThreshold"
-  val LoThresholdKey = "spark.graft.reshape.loThreshold"
   val FirstPhaseKey = "spark.graft.reshape.firstPhaseNum"
 
-  final case class Settings(
-      hiThreshold: Double,
-      loThreshold: Double,
-      firstPhaseNum: Int
-  )
+  final case class Settings(firstPhaseNum: Int)
 
-  def from(spark: SparkSession): Settings = Settings(
-    hiThreshold = spark.conf.get(HiThresholdKey, "0.8").toDouble,
-    loThreshold = spark.conf.get(LoThresholdKey, "0.2").toDouble,
-    firstPhaseNum = spark.conf.get(FirstPhaseKey, "6").toInt
-  )
+  def from(spark: SparkSession): Settings =
+    Settings(firstPhaseNum = spark.conf.get(FirstPhaseKey, "6").toInt)
 }
 
-/** Driver-side load report — an observability listener, not the
-  * controller's input.
-  *
-  * Collects per-task (duration, records) per stage; on stage
-  * completion classifies tasks against the busy/free thresholds
-  * exactly as the reference classifies subtask busy ratios
-  * (ControllerSimulator.scala:95-155: busy = ratio > hi, free =
-  * ratio < lo, paired busiest-with-freest). The product is a
-  * [[SkewReport]] per stage plus a recommended salt factor: the
-  * number of helpers the hottest partition needs so that
-  * max/mean ≈ 1, which is what the reference's phase-2 proportional
-  * ratio `(in(skew)-in(helper))*100/in(skew)` converges to.
-  *
-  * The reports cover every job in the session and see AQE's coalesced
-  * tasks, not keys, so `AdaptiveSalter` does not read them.
+/** The metrics collector plus the stage filter behind the benchmark's
+  * `skew.monitor_reports` count. The class exists only for `bench/`,
+  * which constructs it and counts `stageReports`; it goes once a
+  * benchmark change stops constructing it. Nothing in the engine reads
+  * it, and `settings` is unused.
   */
-final class SkewMonitor(settings: ReshapeConfig.Settings) extends SparkListener {
+final class SkewMonitor(settings: ReshapeConfig.Settings) extends graft.metrics.Collector {
 
-  final case class TaskStat(durationMs: Long, records: Long, bytes: Long)
-
-  final case class SkewReport(
-      stageId: Int,
-      numTasks: Int,
-      maxMs: Long,
-      medianMs: Long,
-      skewedTasks: Seq[Int],
-      freeTasks: Seq[Int],
-      recommendedSalt: Int
-  )
-
-  private val perStage = new TrieMap[Int, TrieMap[Long, TaskStat]]()
-  private val reports = new ConcurrentHashMap[Int, SkewReport]()
-
-  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-    if (t.taskMetrics != null) {
-      val (recs, bytes) =
-        if (t.taskMetrics.shuffleReadMetrics != null)
-          (t.taskMetrics.shuffleReadMetrics.recordsRead,
-            t.taskMetrics.shuffleReadMetrics.totalBytesRead)
-        else (0L, 0L)
-      perStage
-        .getOrElseUpdate(t.stageId, TrieMap.empty)
-        .put(t.taskInfo.taskId, TaskStat(t.taskInfo.duration, recs, bytes))
-    }
-  }
-
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-    val stageId = sc.stageInfo.stageId
-    perStage.remove(stageId).foreach { stats =>
-      val durations = stats.values.map(_.durationMs).toSeq.sorted
-      if (durations.size >= 2 && durations.last > 0) {
-        val median = durations(durations.size / 2)
-        // Load signal, in preference order: shuffle-read BYTES — the
-        // per-channel input volume the reference's controller reads
-        // (ControllerSimulator.scala:95-155), and the only signal that
-        // survives map-side partial aggregation (partials for a hot key
-        // collapse to one record per map task, but a wide partial like
-        // a collect buffer keeps its size) — then records, then task
-        // durations for map stages. Counts/bytes are deterministic
-        // where millisecond durations are noise at micro-batch scale.
-        val byteTotal = stats.values.map(_.bytes).sum
-        val recTotal = stats.values.map(_.records).sum
-        val loads: Seq[(Long, Double)] =
-          if (byteTotal > 0) stats.toSeq.map { case (tid, st) => (tid, st.bytes.toDouble) }
-          else if (recTotal > 0) stats.toSeq.map { case (tid, st) => (tid, st.records.toDouble) }
-          else stats.toSeq.map { case (tid, st) => (tid, st.durationMs.toDouble) }
-        val mx = math.max(1.0, loads.map(_._2).max)
-        // Duration is the least reliable signal: sub-500ms tasks are
-        // scheduler noise, not load (the reference's busy ratios are
-        // averaged over a 10 s window — ControllerSimulator timer).
-        // Record such stages but never flag them skewed.
-        val reliable = byteTotal > 0 || recTotal > 0 || durations.last >= 500
-        val ratios = loads.map { case (tid, l) => (tid, l / mx) }
-        val skewed =
-          if (reliable) ratios.filter(_._2 > settings.hiThreshold).map(_._1.toInt) else Nil
-        val free =
-          if (reliable) ratios.filter(_._2 < settings.loThreshold).map(_._1.toInt) else Nil
-        val mean = loads.map(_._2).sum / loads.size
-        val salt =
-          if (reliable)
-            math.min(32, math.max(1, math.ceil(mx / math.max(1.0, mean)).toInt))
-          else 1
-        reports.put(
-          stageId,
-          SkewReport(stageId, stats.size, durations.last, median, skewed, free, salt)
-        )
-      }
-    }
-  }
-
-  /** Latest per-stage reports (driver-side; cheap). */
-  def stageReports: Map[Int, SkewReport] = {
-    import scala.jdk.CollectionConverters._
-    reports.asScala.toMap
-  }
-
-  /** The salt factor the next run of a skewed aggregation should use:
-    * max recommendation over recent stages, 1 when balanced.
+  /** Stages where at least two tasks finished and the slowest took
+    * more than 0 ms, by stage id.
     */
-  def recommendedSaltFactor: Int =
-    if (reports.isEmpty) 1
-    else stageReports.values.map(_.recommendedSalt).max
+  def stageReports: Map[Int, graft.metrics.Collector.StageRow] =
+    stages.filter(s => s.finishedTasks >= 2 && s.maxTaskMs > 0).map(s => s.id -> s).toMap
 }
 
 /** Per-tick salt controller — the timer loop of the reference's
