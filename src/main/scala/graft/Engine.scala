@@ -88,8 +88,9 @@ object Engine {
     * restore each key: to its previous value, or unset if it was absent
     * before. The settings are session-global for the body's duration,
     * so a query running concurrently on the same session would plan
-    * with them too; callers that share a session across threads need a
-    * cloned session instead (as `StreamingOps.statePinnedSession` does).
+    * with them too: keep the body as short as the setting needs (a
+    * streaming query records its confs when it starts, so
+    * `StreamingOps.runToEnd` scopes only `start()`).
     */
   def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }

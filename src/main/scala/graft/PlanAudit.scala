@@ -189,12 +189,10 @@ object PlanAudit {
         // codegen coverage is measured on a one-off AQE-less replan of
         // the same query (the operators are identical; only runtime
         // re-planning is off).
-        val codegenSpans = {
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          try fn(spark, dir).queryExecution.executedPlan.collect {
+        val codegenSpans = Engine.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+          fn(spark, dir).queryExecution.executedPlan.collect {
             case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
           }.size
-          finally spark.conf.set("spark.sql.adaptive.enabled", "true")
         }
 
         // A Window with an empty partition spec funnels every row of

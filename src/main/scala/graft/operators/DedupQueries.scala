@@ -901,8 +901,8 @@ object DedupQueries extends QueryModule {
         import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
         val k = SpanWords
         val path = s"$dir/documents.parquet"
-        // the state-pinned clone is created INSIDE withRocksDb so it
-        // inherits the provider pin
+        // the query starts INSIDE withRocksDb, so its checkpoint
+        // records the RocksDB provider
         val src = graft.streaming.StreamingOps
           .replaySource(s, path, s.read.parquet(path).schema)
         val spans = src

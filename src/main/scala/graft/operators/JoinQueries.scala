@@ -608,6 +608,7 @@ object JoinQueries extends QueryModule {
       joinType)
     val outDir = TempPaths.dir("graft_ssjoin_out").toString
     StreamingOps.runToEnd(
+      s,
       joined.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
         b.write.mode("append").parquet(outDir)
       },

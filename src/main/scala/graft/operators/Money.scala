@@ -124,13 +124,6 @@ object Money {
   def priceQtyUnitsSql(price: String, qty: String): String =
     s"${centsSql(price)} * CAST($qty AS BIGINT)"
 
-  /** sum(price * quantity) exactly, returned as double dollars. */
-  def sumPriceQty(price: Column, qty: Column): Column =
-    sumWideUnits(priceQtyUnits(price, qty)) / lit(100.0)
-
-  def sumPriceQtySql(price: String, qty: String): String =
-    s"${sumWideUnitsSql(priceQtyUnitsSql(price, qty))} / 100.0"
-
   /** sum(price * (1 - disc) * (1 + tax)) exactly (1e-6-dollar units). */
   def sumCharge(price: Column, disc: Column, tax: Column): Column =
     sumWideUnits(

@@ -40,7 +40,7 @@ object StateQueries extends QueryModule {
         count(lit(1)).as("n_events"),
         sum(col("value")).as("v_sum"))
     StreamingOps.runToEnd(
-      agg.writeStream.outputMode("update").format("noop"), "state")
+      s, agg.writeStream.outputMode("update").format("noop"), "state")
   }
 
   /** Read the aggregation's state store as a table. Key/value struct
@@ -78,8 +78,8 @@ object StateQueries extends QueryModule {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val path = s"$dir/events.parquet"
-      // the state-pinned clone is created INSIDE withRocksDb so it
-      // inherits the provider pin
+      // the query starts INSIDE withRocksDb, so its checkpoint records
+      // the RocksDB provider
       val src = StreamingOps.replaySource(s, path, s.read.parquet(path).schema)
         .select(col("user_id"), col("event_type"), col("value"))
         .as[Tws.TwsEvent]

@@ -28,128 +28,35 @@ import java.sql.Timestamp
   * shuffle.
   *
   * The oracle-checked stateful queries replay a parquet table through
-  * them with one bounded-replay path: `replaySource` (file stream on
-  * the state-pinned session), `runToEnd` (fresh checkpoint, drain,
-  * stop) and, for update-mode results, `replayToMemory`.
+  * them with one bounded-replay path: `replaySource` (the table's file
+  * stream), `runToEnd` (fresh checkpoint, state partitions pinned
+  * around `start()`, drain, stop) and, for update-mode results,
+  * `replayToMemory`.
   */
 object StreamingOps {
 
-  /** A cloned session (same SparkContext, isolated SQL conf) whose
-    * shuffle-partition count is pinned to the streaming STATE partition
-    * count. Build the streaming source AND start the query on the
-    * returned session; the parent session's conf is never touched, so
-    * concurrent batch queries on the parent can never inherit the pin —
-    * isolation by construction, not by a single-caller convention (the
-    * previous conf-mutate-and-restore version only serialized other
-    * callers of itself).
-    *
-    * Stateful streaming cost is dominated by state-store commits —
-    * per micro-batch, EVERY state partition writes + renames a delta
-    * file per store instance (a symmetric hash join keeps 4 stores per
-    * side pair), regardless of how few rows it holds. The partition
-    * count is baked into the checkpoint at first start, so it is a
-    * per-query deployment knob, NOT the job-wide CPU default: size it
-    * to state volume the way the reference sizes a stateful operator's
-    * parallelism independently of the job parallelism. Default 2: the
-    * sf0.1 stream-stream joins hold ~40k rows of state, which 2 shards
-    * carry comfortably. Measured on the sf0.1 replay, identical results
-    * at every count: 32 shards → 11–17 s, 8 → ~3.5 s; then min-of-3 of
-    * the left/right/full joins in one host window: 8 → 3.46/3.35/4.11 s,
-    * 2 → 2.68/2.50/3.07 s, 1 → no further gain (2.60/2.57/3.16 s) — the
-    * knee is 2. A real deployment raises
-    * `spark.graft.stream.statePartitions` with state volume, not with
-    * CPU count.
-    *
-    * NOTE: `newSession()` starts from the SparkContext conf, not the
-    * parent's runtime mutations (e.g. the RocksDB provider pinned by
-    * `Tws.withRocksDb`), so the parent's runtime conf is re-synced into
-    * the clone on every call; static confs (unchangeable per-session on
-    * a shared context, so already equal) are skipped, any OTHER copy
-    * failure is logged — a silently dropped dynamic conf like the
-    * provider pin would run the query on the wrong state store with no
-    * signal. Memory-sink tables registered by a query started on the
-    * pinned session are session-scoped: read them back through the SAME
-    * returned session.
-    *
-    * ONE clone is memoized per parent session (weak key — the clone
-    * does not reference the parent, so the entry dies with it): each
-    * clone lazily registers a StreamingQueryListenerBus on the shared
-    * LiveListenerBus that is never unregistered, so a fresh clone per
-    * invocation on a long-lived session would accumulate listeners and
-    * pinned sessions linearly. Re-syncing the conf each call keeps the
-    * cached clone tracking later parent mutations AND un-sets (e.g.
-    * withRocksDb restoring the provider after its body).
+  /** State partitions of every bounded replay. The count is recorded
+    * in the checkpoint at the query's first start, so it is a per-query
+    * setting sized to state volume, not the job-wide CPU default (the
+    * reference sets a keyed operator's parallelism on the operator
+    * itself). Stateful streaming cost is dominated by state-store
+    * commits: per micro-batch, EVERY state partition writes and renames
+    * a delta file per store instance (a symmetric hash join keeps 4
+    * stores per side pair), however few rows it holds. The sf0.1
+    * stream-stream joins hold ~40k rows of state, which 2 shards carry
+    * comfortably. Measured on the sf0.1 replay, identical results at
+    * every count: 32 shards → 11–17 s, 8 → ~3.5 s; then min-of-3 of the
+    * left/right/full joins in one host window: 8 → 3.46/3.35/4.11 s,
+    * 2 → 2.68/2.50/3.07 s, 1 → no further gain (2.60/2.57/3.16 s). The
+    * knee is 2.
     */
-  private val pinnedClones =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.SparkSession]()
-  /** Test hook: the monitor the reconciliation holds, so a spec's
-    * writer can make parent-conf pair-updates atomic with respect to
-    * the sync (StatePinnedConcurrencySpec).
-    */
-  private[graft] def confLock: AnyRef = pinnedClones
-  private val staticConfKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def statePinnedSession(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    // The WHOLE lookup + conf reconciliation runs under the lock: the
-    // memoized clone is shared per parent, so two concurrent callers
-    // interleaving unset/set on it could hand one of them a
-    // half-synced conf to start a stream on (the fresh-clone-per-call
-    // design this memoization replaced had no such race). The lock is
-    // global rather than per-parent — reconciliation is a handful of
-    // conf map ops on a per-stream-setup path, never hot.
-    pinnedClones.synchronized {
-      val pinned = Option(pinnedClones.get(s)).getOrElse {
-        val p = s.newSession(); pinnedClones.put(s, p); p
-      }
-      val parent = s.conf.getAll
-      // keys the parent has since unset must leave the clone too — a
-      // stale provider pin would silently outlive its withRocksDb scope
-      pinned.conf.getAll.keysIterator
-        .filterNot(parent.contains)
-        .filterNot(staticConfKeys.contains)
-        .foreach { k =>
-          try pinned.conf.unset(k)
-          catch {
-            case _: org.apache.spark.sql.AnalysisException =>
-              // static conf — per-session unset rejected by design
-              staticConfKeys.add(k)
-            case scala.util.control.NonFatal(e) =>
-              // transient failure on a DYNAMIC key must not blacklist
-              // it from every future sync — log and retry next call
-              System.err.println(
-                s"[graft] statePinnedSession: could not unset conf $k: ${e.getMessage}")
-          }
-        }
-      parent.foreach { case (k, v) =>
-        if (!staticConfKeys.contains(k) && !pinned.conf.getOption(k).contains(v)) {
-          try pinned.conf.set(k, v)
-          catch {
-            case _: org.apache.spark.sql.AnalysisException =>
-              // static conf — per-session set is rejected by design and
-              // the clone already holds the same context-level value
-              staticConfKeys.add(k)
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"[graft] statePinnedSession: could not sync conf $k: ${e.getMessage}")
-          }
-        }
-      }
-      pinned.conf.set("spark.sql.shuffle.partitions",
-        s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2"))
-      pinned
-    }
+  private val StatePartitions = 2
 
   /** Bounded replay, the source: the file stream of one parquet table
-    * at `path`, built on the state-pinned session so the stateful query
-    * plans with state-volume-sized partitions. `schema` is the table's
-    * batch schema: a join replay reads the table once for both the
-    * schema and its batch-side horizon. The file source monitors a
-    * directory, so a single file is exposed through a symlinked temp
-    * dir under its own name. Called inside `Tws.withRocksDb`, the clone
-    * inherits the provider pin.
+    * at `path` on `s`. `schema` is the table's batch schema: a join
+    * replay reads the table once for both the schema and its batch-side
+    * horizon. The file source monitors a directory, so a single file is
+    * exposed through a symlinked temp dir under its own name.
     */
   def replaySource(s: SparkSession, path: String, schema: StructType): DataFrame = {
     val f = new java.io.File(path)
@@ -160,17 +67,29 @@ object StreamingOps {
         java.nio.file.Files.createSymbolicLink(d.resolve(f.getName), f.toPath)
         d.toString
       }
-    statePinnedSession(s).readStream.schema(schema).parquet(dir)
+    s.readStream.schema(schema).parquet(dir)
   }
 
   /** Bounded replay, the run: start `writer` on a fresh checkpoint,
     * drain every available input, stop. Returns the checkpoint dir.
     * This is the one place a replay's micro-batches and state commits
     * happen.
+    *
+    * The query starts with `spark.sql.shuffle.partitions` scoped to
+    * `StatePartitions` on `s` around `start()` only: the stream clones
+    * its own session inside `start()` and the checkpoint records the
+    * count (and the state-store provider, e.g. `Tws.withRocksDb`'s) at
+    * the first batch, so the batches keep it after the scope has
+    * restored `s`. While `start()` runs the scope is session-global, so
+    * a query started concurrently on `s` would plan with it too. No
+    * caller does that: the mains and the benchmark run one query at a
+    * time, and the replays are their only streaming queries.
     */
-  def runToEnd(writer: DataStreamWriter[Row], name: String): String = {
+  def runToEnd(s: SparkSession, writer: DataStreamWriter[Row], name: String): String = {
     val ckpt = graft.TempPaths.dir(s"graft_${name}_ckpt").toString
-    val q = writer.option("checkpointLocation", ckpt).start()
+    val q = graft.Engine.withConf(s, "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
+      writer.option("checkpointLocation", ckpt).start()
+    }
     try q.processAllAvailable()
     finally q.stop()
     ckpt
@@ -180,16 +99,16 @@ object StreamingOps {
     * sink table, its result is materialized with `localCheckpoint`, and
     * the table is dropped even when the run or `finish` throws, so a
     * long-lived session never keeps one sink table per call. The sink
-    * table is session-scoped: it is read through the session `out` runs
-    * on (the state-pinned clone for a `replaySource` stream).
+    * is a temp view on the session `out` was built on, so it is read
+    * and dropped there.
     */
   def replayToMemory(out: DataFrame, name: String)(finish: DataFrame => DataFrame): DataFrame = {
-    val ps = out.sparkSession
+    val s = out.sparkSession
     val sink = s"${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     try {
-      runToEnd(out.writeStream.outputMode("update").format("memory").queryName(sink), name)
-      finish(ps.table(sink)).localCheckpoint()
-    } finally ps.catalog.dropTempView(sink)
+      runToEnd(s, out.writeStream.outputMode("update").format("memory").queryName(sink), name)
+      finish(s.table(sink)).localCheckpoint()
+    } finally s.catalog.dropTempView(sink)
   }
 
   final case class Event(
@@ -384,35 +303,6 @@ object StreamingOps {
             TopNOut(user, i + 1, id, v)
           }
         } else Iterator.empty
-      }
-  }
-
-  final case class IdleState(lastSeen: Long, count: Long)
-  final case class IdleAlert(user_id: Long, events_seen: Long)
-
-  /** Keyed process function with processing-time timer (reference
-    * KeyedProcessFunction + timers): emit an alert when a user goes
-    * idle for `idleMs`.
-    */
-  def idleAlerts(events: Dataset[Event], idleMs: Long): Dataset[IdleAlert] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append,
-        GroupStateTimeout.ProcessingTimeTimeout
-      ) { (user: Long, rows: Iterator[Event], state: GroupState[IdleState]) =>
-        if (state.hasTimedOut) {
-          val st = state.get
-          state.remove()
-          Iterator.single(IdleAlert(user, st.count))
-        } else {
-          val prev = state.getOption.map(_.count).getOrElse(0L)
-          val n = prev + rows.size
-          state.update(IdleState(System.currentTimeMillis(), n))
-          state.setTimeoutDuration(idleMs)
-          Iterator.empty
-        }
       }
   }
 }

@@ -114,31 +114,6 @@ class StreamingSpec extends AnyFunSuite {
       s"streaming != batch:\n streaming=$streaming\n batch=$batch")
   }
 
-  test("statePinnedSession pins state partitions on a clone and never touches the parent") {
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    val pinned = StreamingOps.statePinnedSession(spark)
-    assert(pinned.conf.get(key) == "2",
-      s"default state partition count must be 2, got ${pinned.conf.get(key)}")
-    assert(spark.conf.get(key) == before,
-      "parent session conf must be untouched (isolation by construction)")
-    // runtime conf mutations on the parent (e.g. the RocksDB provider
-    // pin from Tws.withRocksDb) must propagate to the clone
-    spark.conf.set("spark.graft.test.marker", "inherited")
-    spark.conf.set("spark.graft.stream.statePartitions", "3")
-    try {
-      val custom = StreamingOps.statePinnedSession(spark)
-      assert(custom.conf.get(key) == "3",
-        s"knob must override, got ${custom.conf.get(key)}")
-      assert(custom.conf.get("spark.graft.test.marker") == "inherited",
-        "clone must inherit the parent's runtime conf")
-    } finally {
-      spark.conf.unset("spark.graft.stream.statePartitions")
-      spark.conf.unset("spark.graft.test.marker")
-    }
-    assert(spark.conf.get(key) == before)
-  }
-
   test("stream-stream LEFT OUTER join null-extends unmatched signups after the watermark passes") {
     import spark.implicits._
     implicit val sq = spark.sqlContext

@@ -155,8 +155,7 @@ class TwsSpec extends AnyFunSuite {
         .groupByKey(_.user_id)
         .transformWithState(
           new Tws.KeyedProfileProcessor, TimeMode.None(), OutputMode.Update())
-      val ps = StreamingOps.statePinnedSession(spark)
-      def sinks = ps.catalog.listTables().collect().map(_.name)
+      def sinks = spark.catalog.listTables().collect().map(_.name)
         .filter(_.startsWith("tws_leak_probe_"))
       var seen = Seq.empty[String]
       val err = intercept[IllegalStateException] {
