@@ -357,7 +357,7 @@ object Sf1Gates {
     }
 
   /** Streaming MATCH_RECOGNIZE state bound at sf1: drive the REAL
-    * streaming operator (flatMapGroupsWithState path) over a
+    * streaming operator (MatchRecognize.relationStreamRun) over a
     * time-ordered, heavily skewed keying of the probe's events (3/4
     * of ~1M rows on one key) with a worst-case always-matching loop
     * pattern `E+ V` under WITHIN '2' MINUTE, and assert the live

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.streaming.StreamingOps.Event
+import graft.streaming.StreamingOps.{Event, Keyed, eventOrder, perUser}
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** CEP — the reference's MATCH_RECOGNIZE / Pattern API core
   * (reference: flink-libraries/flink-cep/.../pattern/Pattern.java:
@@ -20,8 +19,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Event path use. One NFA serves both modes:
   *  - batch: each key's time-ordered history in one pass plus an
   *    end-of-input flush for pending greedy loops;
-  *  - streaming: flatMapGroupsWithState keeping the set of partial
-  *    matches per key as state; each micro-batch advances them.
+  *  - streaming: the keyed-state driver [[StreamingOps.perUser]]
+  *    keeping the set of partial matches per key as state; each
+  *    micro-batch advances them.
   * Partial-match state is bounded by `within` (expired partials are
   * retired on every event), so state can't grow unboundedly on a hot
   * key.
@@ -192,10 +192,6 @@ object Cep {
   def flush(pattern: SequencePattern, key: Long, st: NfaState): Seq[Match] =
     CepCore.flush(pattern, st).map(toMatch(key, _))
 
-  // getNanos carries sub-millisecond precision getTime drops
-  private val eventOrder: Ordering[Event] =
-    Ordering.by((e: Event) => (e.ts.getTime, e.ts.getNanos, e.event_id))
-
   /** Batch detection: each key's events processed in event-time order,
     * then pending greedy loops flushed at end-of-input (bounded data
     * has a real end).
@@ -230,7 +226,8 @@ object Cep {
       else events.repartition(col("user_id"))
     keyed
       // Timestamp columns order by micros == (getTime, getNanos) here
-      // (Catalyst precision is micros), so this matches eventOrder
+      // (Catalyst precision is micros), so this matches
+      // StreamingOps.eventOrder
       .sortWithinPartitions(col("user_id"), col("ts"), col("event_id"))
       .mapPartitions { rows =>
         CepCore.scanSortedPartition(pattern, rows, (e: Event) => e.user_id,
@@ -255,21 +252,15 @@ object Cep {
     */
   def detectStream(events: Dataset[Event], pattern: SequencePattern): Dataset[Match] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[NfaState]) =>
-          val initial = state.getOption.getOrElse(NfaState(Seq.empty, 0L))
-          val (matches, st) = advance(pattern, key, rows.toSeq.sorted(eventOrder), initial)
-          // no live partials → drop the key's state entirely; the seq
-          // counter may reset, which is safe because skip-strategy
-          // comparisons only ever involve live partials. A pattern
-          // using PREV keeps one row (the key's last) in state instead
-          // — physical navigation must survive micro-batch boundaries.
-          if (st.partials.isEmpty && !pattern.needsPrev) state.remove()
-          else state.update(st)
-          matches.iterator
-      }
+    perUser[NfaState, Match](events, None) { (key, rows, prior, _) =>
+      val (matches, st) = advance(pattern, key, rows, prior.getOrElse(NfaState(Seq.empty, 0L)))
+      // no live partials → drop the key's state entirely; the seq
+      // counter may reset, which is safe because skip-strategy
+      // comparisons only ever involve live partials. A pattern using
+      // PREV keeps one row (the key's last) in state instead — physical
+      // navigation must survive micro-batch boundaries.
+      Keyed(Some(st).filter(_ => st.partials.nonEmpty || pattern.needsPrev), matches)
+    }
   }
 
   /** [[detectStream]] with watermark-driven state expiry: a key that
@@ -286,19 +277,12 @@ object Cep {
       watermarkDelay: String
   ): Dataset[Match] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[NfaState]) =>
-          // arrival order: every arrival is released, nothing is buffered
-          val step = CepCore.watermarkStep(pattern, Seq.empty, rows,
-            state.getOption.getOrElse(NfaState(Seq.empty, 0L)),
-            state.getCurrentWatermarkMs(), state.hasTimedOut,
-            releaseAll = true, eventOrder, tsMs)
-          step.store(state, step.nfa)
-          step.matches.iterator.map(toMatch(key, _))
-      }
+    perUser[NfaState, Match](events, Some(watermarkDelay)) { (key, rows, prior, wm) =>
+      // every arrival is released, nothing is buffered
+      val step = CepCore.watermarkStep(pattern, Seq.empty, rows,
+        prior.getOrElse(NfaState(Seq.empty, 0L)), wm.get, releaseAll = true, eventOrder, tsMs)
+      Keyed(step.state.map(_._1), step.out.map(toMatch(key, _)), step.wakeAt)
+    }
   }
 
   /** Keyed state for [[detectStreamOrdered]]: the not-yet-ripe event
@@ -327,18 +311,12 @@ object Cep {
       watermarkDelay: String
   ): Dataset[Match] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[OrderedNfaState]) =>
-          val st0 = state.getOption
-            .getOrElse(OrderedNfaState(Seq.empty, NfaState(Seq.empty, 0L)))
-          val step = CepCore.watermarkStep(pattern, st0.buffer, rows, st0.nfa,
-            state.getCurrentWatermarkMs(), state.hasTimedOut,
-            releaseAll = false, eventOrder, tsMs)
-          step.store(state, OrderedNfaState(step.buffer, step.nfa))
-          step.matches.iterator.map(toMatch(key, _))
-      }
+    perUser[OrderedNfaState, Match](events, Some(watermarkDelay)) { (key, rows, prior, wm) =>
+      val st0 = prior.getOrElse(OrderedNfaState(Seq.empty, NfaState(Seq.empty, 0L)))
+      val step = CepCore.watermarkStep(pattern, st0.buffer, rows, st0.nfa, wm.get,
+        releaseAll = false, eventOrder, tsMs)
+      Keyed(step.state.map { case (nfa, buf) => OrderedNfaState(buf, nfa) },
+        step.out.map(toMatch(key, _)), step.wakeAt)
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.GroupState
-
 /** Generic CEP NFA — the row-type-agnostic core behind [[Cep]] (the
   * Event-typed Scala API) and [[MatchRecognize]]'s generic-relation
   * front-end. The reference runs MATCH_RECOGNIZE over any input
@@ -16,7 +14,8 @@ import org.apache.spark.sql.streaming.GroupState
   * until, followedByAny, consecutive/allowCombinations) are documented
   * on [[Cep]]; this file holds the machinery, including the two loops
   * every front-end runs the NFA in: [[scanSortedPartition]] (batch)
-  * and [[watermarkStep]] (watermarked streaming).
+  * and [[watermarkStep]] (watermarked streaming, stored through
+  * [[StreamingOps.Keyed]]).
   *
   * Two capabilities live only here:
   *  - predicates see the PREVIOUS ROW in the partition (`(Option[E],
@@ -760,27 +759,6 @@ object CepCore {
       }
     }
 
-  /** What one [[watermarkStep]] leaves for a key: the matches to emit
-    * (within-expired retirements first), the NFA over the released
-    * rows, the rows the watermark has not passed yet, and whether the
-    * state cell goes or stays with a wake-up timer.
-    */
-  private[streaming] final case class WatermarkStep[E](
-      matches: Seq[Match[E]],
-      nfa: NfaState[E],
-      buffer: Seq[E],
-      remove: Boolean,
-      wakeAt: Option[Long]
-  ) {
-    /** Drop the cell, or store `kept` and arm the wake-up timer. */
-    def store[S](state: GroupState[S], kept: => S): Unit =
-      if (remove) state.remove()
-      else {
-        state.update(kept)
-        wakeAt.foreach(state.setTimeoutTimestamp)
-      }
-  }
-
   /** The event-time step every watermarked streaming front-end runs per
     * key and trigger — the reference CepOperator's design (flink-cep
     * .../operator/CepOperator.java: buffer out-of-order elements,
@@ -788,7 +766,7 @@ object CepCore {
     * event-time timers):
     *  - merge `arrivals` into the sorted `buffer` and release the rows
     *    the watermark has passed (`releaseAll` releases every arrival,
-    *    for callers that process rows in arrival order);
+    *    for callers that buffer nothing);
     *  - retire partials whose `within` horizon the watermark passed
     *    (pending greedy loops and trailing negations emit);
     *  - advance the NFA over the released rows;
@@ -796,24 +774,27 @@ object CepCore {
     *    either PREV is unused or the prev-only cell's idle timer fired
     *    (an event after a full within horizon of silence is late
     *    anyway);
-    *  - otherwise wake at the first of: the earliest buffered row
-    *    ripening, the earliest partial's within expiry, or — for a
-    *    prev-only cell — a within horizon past now (no horizon without a
-    *    within bound: the cell is kept, as partials are).
+    *  - otherwise keep (NFA, unripe rows) and wake at the first of:
+    *    the earliest buffered row ripening, the earliest partial's
+    *    within expiry, or — for a prev-only cell — a within horizon past
+    *    now (no horizon without a within bound: the cell is kept, as
+    *    partials are).
+    * The result is a [[StreamingOps.Keyed]] (within-expired
+    * retirements emit first); the caller maps the kept pair into its
+    * state class and stores it with the one drop-or-wake rule.
     * Buffered rows are bounded by the watermark delay and partials by
     * `within`; nothing grows with the stream's length.
     */
   private[streaming] def watermarkStep[E](
       pattern: SequencePattern[E],
       buffer: Seq[E],
-      arrivals: Iterator[E],
+      arrivals: Seq[E],
       nfa: NfaState[E],
       wm: Long,
-      timedOut: Boolean,
       releaseAll: Boolean,
       order: Ordering[E],
       tsMs: E => Long
-  ): WatermarkStep[E] = {
+  ): StreamingOps.Keyed[(NfaState[E], Seq[E]), Match[E]] = {
     val sorted = (buffer ++ arrivals).sorted(order)
     val (ripe, young) =
       if (releaseAll) (sorted, Seq.empty[E]) else sorted.partition(tsMs(_) <= wm)
@@ -822,16 +803,16 @@ object CepCore {
     val expiredMatches = flush(pattern, nfa.copy(partials = expired))
     val (matches, nfa1) = advance(pattern, ripe, nfa.copy(partials = alive), tsMs)
     val idle = young.isEmpty && nfa1.partials.isEmpty
-    val remove = idle && (!pattern.needsPrev || timedOut)
+    // a key runs without arrivals only when its timer fired
+    val remove = idle && (!pattern.needsPrev || arrivals.isEmpty)
     val wakes =
-      if (remove) Nil
-      else young.headOption.map(tsMs).toSeq ++
+      young.headOption.map(tsMs).toSeq ++
         (if (nfa1.partials.nonEmpty)
            Seq(nfa1.partials.map(_.startTs + pattern.withinMs).min)
          else Nil) ++
         (if (idle && pattern.withinMs != Long.MaxValue) Seq(wm + pattern.withinMs)
          else Nil)
-    WatermarkStep(expiredMatches ++ matches, nfa1, young, remove,
-      if (wakes.isEmpty) None else Some(math.max(wakes.min, wm + 1)))
+    StreamingOps.Keyed(if (remove) None else Some((nfa1, young)),
+      expiredMatches ++ matches, wakes.minOption)
   }
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Changelog (CDC) semantics — the reference models every stream as a
   * changelog with row kinds +I/-U/+U/-D (reference flink-core/.../
@@ -114,60 +116,51 @@ object ChangelogOps {
 
   /** SCD2 sink for a streaming changelog: per micro-batch, fold the
     * batch into the Type-2 history parquet via scd2Merge (read current
-    * → replay + batch → rebuild → atomic rename). On a lakehouse
-    * target the rebuild becomes a MERGE over the touched keys only.
+    * → replay + batch → rebuild → swap). On a lakehouse target the
+    * rebuild becomes a MERGE over the touched keys only.
     */
   def scd2Sink(
       changelog: DataFrame,
       path: String,
       pk: Seq[String],
       orderingCol: String
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changelog.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
-      val existing =
-        try Some(spark.read.parquet(path))
-        catch { case _: Throwable => None }
-      val merged = scd2Merge(existing, batch, pk, orderingCol)
-      merged.write.mode("overwrite").parquet(s"$path.tmp")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration
-      )
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$path.tmp"), new org.apache.hadoop.fs.Path(path))
-      ()
-    }
+  ): DataStreamWriter[Row] =
+    rewriteSink(changelog, path)(scd2Merge(_, _, pk, orderingCol))
 
   /** Upsert sink for a streaming changelog: per micro-batch, merge the
     * batch into the keyed parquet target (read current → union batch →
-    * normalize → rewrite). foreachBatch is the documented Spark
-    * pattern for MERGE-style sinks; on a lakehouse target the body
-    * becomes a real MERGE INTO.
+    * normalize → swap). foreachBatch is the documented Spark pattern
+    * for MERGE-style sinks; on a lakehouse target the body becomes a
+    * real MERGE INTO.
     */
   def upsertSink(
       changelog: DataFrame,
       path: String,
       pk: Seq[String],
       ordering: Seq[String]
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  ): DataStreamWriter[Row] =
+    rewriteSink(changelog, path) { (current, batch) =>
+      // re-tag current state as inserts older than any batch row
+      val all = current.fold(batch)(
+        _.withColumn(ChangeCol, lit(Insert)).unionByName(batch, allowMissingColumns = true))
+      normalize(all, pk, ordering.map(col))
+    }
+
+  /** The sinks' one micro-batch write: `rebuild` gets the current
+    * target (None only while `path` does not exist — a target that
+    * cannot be read fails the batch instead of being replaced by the
+    * batch alone), writes its result to `path.tmp`, then swaps it in.
+    */
+  private def rewriteSink(changelog: DataFrame, path: String)(
+      rebuild: (Option[DataFrame], DataFrame) => DataFrame): DataStreamWriter[Row] =
     changelog.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val spark = batch.sparkSession
-      val existing =
-        try {
-          val cur = spark.read.parquet(path)
-          // re-tag current state as inserts older than any batch row
-          cur.withColumn(ChangeCol, lit(Insert))
-        } catch { case _: Throwable => null }
-      val all =
-        if (existing == null) batch
-        else existing.unionByName(batch, allowMissingColumns = true)
-      val merged = normalize(all, pk, ordering.map(col))
-      merged.write.mode("overwrite").parquet(s"$path.tmp")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration
-      )
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      fs.rename(new org.apache.hadoop.fs.Path(s"$path.tmp"), new org.apache.hadoop.fs.Path(path))
+      val (target, tmp) = (new Path(path), new Path(s"$path.tmp"))
+      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val current = if (fs.exists(target)) Some(spark.read.parquet(path)) else None
+      rebuild(current, batch).write.mode("overwrite").parquet(tmp.toString)
+      fs.delete(target, true)
+      if (!fs.rename(tmp, target)) throw new java.io.IOException(s"cannot rename $tmp to $target")
       ()
     }
 }

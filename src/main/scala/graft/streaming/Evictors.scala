@@ -1,16 +1,16 @@
 package graft.streaming
 
-import graft.streaming.StreamingOps.Event
+import graft.streaming.StreamingOps.{Event, Keyed, eventOrder, perUser}
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Window evictors (reference flink-streaming-java/.../windowing/
   * evictors/{CountEvictor,TimeEvictor}.java): remove elements from a
   * buffered window before the window function evaluates. Spark's
   * built-in window aggregation is incremental (no buffer to evict), so
-  * evicting windows buffer their elements in keyed state and emit when
-  * the watermark closes the window — the same evict-before-apply
-  * contract as the reference's EvictingWindowOperator.
+  * evicting windows buffer their elements in keyed state (the driver
+  * [[StreamingOps.perUser]]) and emit when the watermark closes the
+  * window — the same evict-before-apply contract as the reference's
+  * EvictingWindowOperator.
   *
   * The evictor functions are pure and shared by the batch oracle
   * queries (EvictorQueries expresses the identical semantics through
@@ -23,7 +23,7 @@ object Evictors {
     * window, in event-time order.
     */
   def evictCount(events: Seq[Event], keep: Int): Seq[Event] =
-    events.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id)).takeRight(keep)
+    events.sorted(eventOrder).takeRight(keep)
 
   /** TimeEvictor.of(t): keep only elements within `keepMs` of the
     * window's max timestamp.
@@ -43,9 +43,7 @@ object Evictors {
   def evictDelta(events: Seq[Event], threshold: Double): Seq[Event] = {
     if (events.isEmpty) events
     else {
-      val last = events
-        .maxBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-        .value
+      val last = events.max(eventOrder).value
       events.filter(e => math.abs(e.value - last) < threshold)
     }
   }
@@ -64,33 +62,21 @@ object Evictors {
       evict: Seq[Event] => Seq[Event]
   ): Dataset[EvictWinOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[EvictBuf]) =>
-          val buffered = state.getOption.map(_.events).getOrElse(Seq.empty) ++ rows
-          val wm = state.getCurrentWatermarkMs()
-          val (closed, open) =
-            buffered.partition(e => (e.ts.getTime / windowMs + 1) * windowMs <= wm)
-          val out = closed
-            .groupBy(e => e.ts.getTime / windowMs * windowMs)
-            .toSeq
-            .sortBy(_._1)
-            .map { case (winStart, evs) =>
-              val kept = evict(evs)
-              EvictWinOut(key, winStart / 1000L, kept.size.toLong,
-                math.rint(kept.map(_.value).sum * 10000) / 10000)
-            }
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(EvictBuf(open))
-            // wake when the watermark can close the earliest open window
-            val earliestEnd =
-              open.map(e => (e.ts.getTime / windowMs + 1) * windowMs).min
-            state.setTimeoutTimestamp(math.max(earliestEnd, wm + 1))
-          }
-          out.iterator
-      }
+    perUser[EvictBuf, EvictWinOut](events, Some(watermarkDelay)) { (key, rows, prior, wm) =>
+      val windowEnd = (e: Event) => (e.ts.getTime / windowMs + 1) * windowMs
+      val (closed, open) =
+        (prior.map(_.events).getOrElse(Seq.empty) ++ rows).partition(windowEnd(_) <= wm.get)
+      val out = closed
+        .groupBy(e => e.ts.getTime / windowMs * windowMs)
+        .toSeq
+        .sortBy(_._1)
+        .map { case (winStart, evs) =>
+          val kept = evict(evs)
+          EvictWinOut(key, winStart / 1000L, kept.size.toLong,
+            math.rint(kept.map(_.value).sum * 10000) / 10000)
+        }
+      // wake when the watermark can close the earliest open window
+      Keyed(Some(EvictBuf(open)).filter(_.events.nonEmpty), out, open.map(windowEnd).minOption)
+    }
   }
 }

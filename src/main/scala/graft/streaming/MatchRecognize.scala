@@ -1942,21 +1942,20 @@ object MatchRecognize {
           val st0 = state.getOption
             .getOrElse(RelNfaState(Seq.empty, Seq.empty, 0L, None, 0L))
           val step = CepCore.watermarkStep(pattern, st0.buffer.map(toREv),
-            rows.map(toREv),
+            rows.map(toREv).toSeq,
             CepCore.NfaState[REv](st0.partials.map(hydrate), st0.nextSeq,
               st0.prev.map(toREv)),
-            state.getCurrentWatermarkMs(), state.hasTimedOut,
-            releaseAll = false, ord, (e: REv) => e.tsMs)
+            state.getCurrentWatermarkMs(), releaseAll = false, ord, (e: REv) => e.tsMs)
           var matchNo = st0.matchNo
-          val outRows = step.matches.flatMap { m =>
+          val outRows = step.out.flatMap { m =>
             matchNo += 1
             emitMatch(m, matchNo)
           }
-          CepStateProbe.observe(step.nfa.partials.size, step.buffer.size)
-          step.store(state, RelNfaState(step.buffer.map(_.row),
-            step.nfa.partials.map(dehydrate), step.nfa.nextSeq,
-            step.nfa.prev.map(_.row), matchNo))
-          outRows.iterator
+          step.state.foreach { case (nfa, buf) => CepStateProbe.observe(nfa.partials.size, buf.size) }
+          StreamingOps.Keyed(step.state.map { case (nfa, buf) =>
+            RelNfaState(buf.map(_.row), nfa.partials.map(dehydrate), nfa.nextSeq,
+              nfa.prev.map(_.row), matchNo)
+          }, outRows, step.wakeAt).store(state)
       }(stateEnc, outEnc)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
@@ -18,8 +18,11 @@ import java.sql.Timestamp
   *  - StreamExecIntervalJoin / StreamExecJoin inner/left/right/full →
   *    `intervalJoin`, a stream-stream join with a watermarked
   *    time-range condition
-  *  - StreamExecRank / AppendOnlyTopNFunction (streaming Top-N) and
-  *    KeyedProcessFunction + timers → flatMapGroupsWithState
+  *  - StreamExecRank / AppendOnlyTopNFunction (streaming Top-N),
+  *    count/delta triggers and every other keyed Event operator (keyed
+  *    state + per-key event-time timers) → [[perUser]], the one keyed-
+  *    state driver: [[eventOrder]] within a key and the drop-or-wake
+  *    rule [[Keyed.store]]
   *
   * These combinators take unbounded Datasets (from readStream) and
   * return transformed streaming Datasets; callers attach sinks. All
@@ -119,6 +122,52 @@ object StreamingOps {
       value: Double
   )
 
+  /** The one within-key event order: event time (getNanos carries the
+    * sub-millisecond precision getTime drops), then event_id.
+    */
+  val eventOrder: Ordering[Event] =
+    Ordering.by((e: Event) => (e.ts.getTime, e.ts.getNanos, e.event_id))
+
+  /** One keyed step's result: the state to keep, the rows to emit and
+    * the event time to wake at. [[store]] is the one drop-or-wake rule
+    * of every keyed operator (the reference's per-key event-time timer
+    * fires once the watermark passes it): `None` removes the cell;
+    * `Some` updates it and arms `wakeAt`, clamped past the watermark.
+    */
+  final case class Keyed[S, O](state: Option[S], out: Seq[O], wakeAt: Option[Long] = None) {
+    def store(g: GroupState[S]): Iterator[O] = {
+      state match {
+        case None => g.remove()
+        case Some(s) =>
+          g.update(s)
+          wakeAt.foreach(t => g.setTimeoutTimestamp(math.max(t, g.getCurrentWatermarkMs() + 1)))
+      }
+      out.iterator
+    }
+  }
+
+  /** The keyed-state driver of the Event operators (the reference's
+    * keyed-state backend plus per-key timer service): groups by
+    * `user_id` and hands `step` the key, its micro-batch rows in
+    * [[eventOrder]], its state and the watermark. With a
+    * `watermarkDelay` it watermarks `ts` and keys wake on event-time
+    * timers; without one there is no watermark (the step gets `None`)
+    * and a key runs only when rows arrive for it.
+    */
+  def perUser[S: Encoder, O: Encoder](events: Dataset[Event], watermarkDelay: Option[String])(
+      step: (Long, Seq[Event], Option[S], Option[Long]) => Keyed[S, O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    val timeout =
+      if (watermarkDelay.isEmpty) GroupStateTimeout.NoTimeout else GroupStateTimeout.EventTimeTimeout
+    watermarkDelay.fold(events)(events.withWatermark("ts", _))
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append, timeout) {
+        (key: Long, rows: Iterator[Event], g: GroupState[S]) =>
+          val wm = watermarkDelay.map(_ => g.getCurrentWatermarkMs())
+          step(key, rows.toSeq.sorted(eventOrder), g.getOption, wm).store(g)
+      }
+  }
+
   /** Tumbling-window counts with bounded-out-of-orderness watermark. */
   def windowedCounts(
       events: DataFrame,
@@ -215,24 +264,19 @@ object StreamingOps {
     */
   def countTriggerWindow(events: Dataset[Event], size: Int): Dataset[CountWin] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[CountWinState]) =>
-          var st = state.getOption.getOrElse(CountWinState(0L, 0L, 0.0))
-          val out = Seq.newBuilder[CountWin]
-          rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-            .foreach { e =>
-              st = CountWinState(st.batch_id, st.n + 1, st.sum + e.value)
-              if (st.n == size) {
-                out += CountWin(key, st.batch_id, size.toLong, st.sum)
-                st = CountWinState(st.batch_id + 1, 0L, 0.0)
-              }
-            }
-          state.update(st)
-          out.result().iterator
+    perUser[CountWinState, CountWin](events, None) { (key, rows, prior, _) =>
+      var st = prior.getOrElse(CountWinState(0L, 0L, 0.0))
+      val out = rows.flatMap { e =>
+        st = CountWinState(st.batch_id, st.n + 1, st.sum + e.value)
+        if (st.n != size) None
+        else {
+          val fired = CountWin(key, st.batch_id, size.toLong, st.sum)
+          st = CountWinState(st.batch_id + 1, 0L, 0.0)
+          Some(fired)
+        }
       }
+      Keyed(Some(st), out)
+    }
   }
 
   final case class DeltaWinState(
@@ -249,29 +293,23 @@ object StreamingOps {
     */
   def deltaTriggerWindow(events: Dataset[Event], threshold: Double): Dataset[DeltaWin] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[DeltaWinState]) =>
-          var st = state.getOption.getOrElse(DeltaWinState(false, 0.0, 0L, 0.0, 0L))
-          val out = Seq.newBuilder[DeltaWin]
-          rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-            .foreach { e =>
-              st = st.copy(n = st.n + 1, sum = st.sum + e.value)
-              if (!st.has_base) {
-                // first element establishes the baseline (the
-                // reference seeds the delta function with the first
-                // element, which cannot fire)
-                st = DeltaWinState(true, e.value, st.n, st.sum, st.fires)
-              } else if (math.abs(e.value - st.base) > threshold) {
-                out += DeltaWin(key, st.fires, st.n, st.sum, e.value)
-                st = DeltaWinState(true, e.value, 0L, 0.0, st.fires + 1)
-              }
-            }
-          state.update(st)
-          out.result().iterator
+    perUser[DeltaWinState, DeltaWin](events, None) { (key, rows, prior, _) =>
+      var st = prior.getOrElse(DeltaWinState(false, 0.0, 0L, 0.0, 0L))
+      val out = rows.flatMap { e =>
+        st = st.copy(n = st.n + 1, sum = st.sum + e.value)
+        if (!st.has_base) {
+          // first element establishes the baseline (the reference seeds
+          // the delta function with the first element, which cannot fire)
+          st = DeltaWinState(true, e.value, st.n, st.sum, st.fires)
+          None
+        } else if (math.abs(e.value - st.base) > threshold) {
+          val fired = DeltaWin(key, st.fires, st.n, st.sum, e.value)
+          st = DeltaWinState(true, e.value, 0L, 0.0, st.fires + 1)
+          Some(fired)
+        } else None
       }
+      Keyed(Some(st), out)
+    }
   }
 
   final case class TopNState(top: Seq[(Double, Long)])
@@ -287,22 +325,15 @@ object StreamingOps {
       n: Int
   ): Dataset[TopNOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append,
-        GroupStateTimeout.NoTimeout
-      ) { (user: Long, rows: Iterator[Event], state: GroupState[TopNState]) =>
-        val prev = state.getOption.map(_.top).getOrElse(Seq.empty)
-        val merged = (prev ++ rows.map(e => (e.value, e.event_id)))
-          .sortBy { case (v, id) => (-v, id) }
-          .take(n)
-        if (merged != prev) {
-          state.update(TopNState(merged))
-          merged.zipWithIndex.iterator.map { case ((v, id), i) =>
-            TopNOut(user, i + 1, id, v)
-          }
-        } else Iterator.empty
-      }
+    perUser[TopNState, TopNOut](events, None) { (user, rows, prior, _) =>
+      val prev = prior.map(_.top).getOrElse(Seq.empty)
+      val merged = (prev ++ rows.map(e => (e.value, e.event_id)))
+        .sortBy { case (v, id) => (-v, id) }
+        .take(n)
+      val out =
+        if (merged == prev) Nil
+        else merged.zipWithIndex.map { case ((v, id), i) => TopNOut(user, i + 1, id, v) }
+      Keyed(Some(TopNState(merged)), out)
+    }
   }
 }

@@ -1,23 +1,23 @@
 package graft.streaming
 
-import graft.streaming.StreamingOps.Event
+import graft.streaming.StreamingOps.{Event, Keyed, eventOrder, perUser}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming OVER aggregates and the remaining §2.9 stream utilities.
   *
   * Spark has no streaming WindowExec (reference
   * StreamExecOverAggregate.java:82, ProcTimeUnboundedPrecedingFunction
   * / RowTimeRowsBoundedPrecedingFunction), so per-key ordered
-  * aggregation state lives in flatMapGroupsWithState:
+  * aggregation state runs on the keyed-state driver
+  * [[StreamingOps.perUser]]:
   *  - [[runningAggregate]]: UNBOUNDED PRECEDING sum/count per key —
   *    state is O(1) per key (sum, count).
   *  - [[boundedPrecedingAggregate]]: ROWS BETWEEN n-1 PRECEDING AND
   *    CURRENT ROW — state is the last n values per key (bounded ring).
-  * Events are processed in event-time order within each batch;
-  * cross-batch order is arrival order (watermark-sort upstream for
-  * strict event-time).
+  * Events are processed in [[StreamingOps.eventOrder]] within each
+  * batch; cross-batch order is arrival order (watermark-sort upstream
+  * for strict event-time).
   */
 object StreamingOver {
 
@@ -26,20 +26,14 @@ object StreamingOver {
 
   def runningAggregate(events: Dataset[Event]): Dataset[RunOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[RunState]) =>
-          var st = state.getOption.getOrElse(RunState(0.0, 0L))
-          val out = rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-            .map { e =>
-              st = RunState(st.sum + e.value, st.n + 1)
-              RunOut(key, e.event_id, st.sum, st.n)
-            }
-          state.update(st)
-          out.iterator
+    perUser[RunState, RunOut](events, None) { (key, rows, prior, _) =>
+      var st = prior.getOrElse(RunState(0.0, 0L))
+      val out = rows.map { e =>
+        st = RunState(st.sum + e.value, st.n + 1)
+        RunOut(key, e.event_id, st.sum, st.n)
       }
+      Keyed(Some(st), out)
+    }
   }
 
   final case class RingState(values: Seq[Double])
@@ -47,20 +41,14 @@ object StreamingOver {
 
   def boundedPrecedingAggregate(events: Dataset[Event], n: Int): Dataset[BoundedOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[RingState]) =>
-          var ring = state.getOption.map(_.values).getOrElse(Seq.empty)
-          val out = rows.toSeq
-            .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-            .map { e =>
-              ring = (ring :+ e.value).takeRight(n)
-              BoundedOut(key, e.event_id, ring.sum, ring.size)
-            }
-          state.update(RingState(ring))
-          out.iterator
+    perUser[RingState, BoundedOut](events, None) { (key, rows, prior, _) =>
+      var ring = prior.map(_.values).getOrElse(Seq.empty)
+      val out = rows.map { e =>
+        ring = (ring :+ e.value).takeRight(n)
+        BoundedOut(key, e.event_id, ring.sum, ring.size)
       }
+      Keyed(Some(RingState(ring)), out)
+    }
   }
 
   final case class TimedVal(micros: Long, value: Double)
@@ -85,32 +73,28 @@ object StreamingOver {
   def rangePrecedingAggregate(events: Dataset[Event], rangeMs: Long): Dataset[RangeOut] = {
     import events.sparkSession.implicits._
     val rangeMicros = rangeMs * 1000L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Event], state: GroupState[RangeState]) =>
-          var buf = state.getOption.map(_.buf).getOrElse(Seq.empty)
-          val sorted = rows.toSeq
-            .map(e => (e.ts.getTime * 1000L + (e.ts.getNanos % 1000000) / 1000, e))
-            .sortBy { case (us, e) => (us, e.event_id) }
-          val out = Seq.newBuilder[RangeOut]
-          // consecutive runs of equal timestamps form one frame update
-          var i = 0
-          while (i < sorted.size) {
-            val ts = sorted(i)._1
-            var j = i
-            while (j < sorted.size && sorted(j)._1 == ts) j += 1
-            val tied = sorted.slice(i, j)
-            buf = buf.filter(_.micros >= ts - rangeMicros) ++
-              tied.map { case (us, e) => TimedVal(us, e.value) }
-            val s = buf.map(_.value).sum
-            val n = buf.size.toLong
-            tied.foreach { case (_, e) => out += RangeOut(key, e.event_id, s, n) }
-            i = j
-          }
-          if (buf.isEmpty) state.remove() else state.update(RangeState(buf))
-          out.result().iterator
+    perUser[RangeState, RangeOut](events, None) { (key, rows, prior, _) =>
+      var buf = prior.map(_.buf).getOrElse(Seq.empty)
+      // eventOrder sorts decoded (whole-microsecond) timestamps as
+      // their micros do, so ts-peers are adjacent
+      val timed = rows.map(e => (e.ts.getTime * 1000L + (e.ts.getNanos % 1000000) / 1000, e))
+      val out = Seq.newBuilder[RangeOut]
+      // consecutive runs of equal timestamps form one frame update
+      var i = 0
+      while (i < timed.size) {
+        val ts = timed(i)._1
+        var j = i
+        while (j < timed.size && timed(j)._1 == ts) j += 1
+        val tied = timed.slice(i, j)
+        buf = buf.filter(_.micros >= ts - rangeMicros) ++
+          tied.map { case (us, e) => TimedVal(us, e.value) }
+        val s = buf.map(_.value).sum
+        val n = buf.size.toLong
+        tied.foreach { case (_, e) => out += RangeOut(key, e.event_id, s, n) }
+        i = j
       }
+      Keyed(Some(RangeState(buf)).filter(_.buf.nonEmpty), out.result())
+    }
   }
 
   /** Late-data side output (reference WindowedStream.sideOutputLateData
@@ -142,26 +126,14 @@ object StreamingOver {
     */
   def temporalSort(events: Dataset[Event], watermarkDelay: String): Dataset[Event] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      // EventTimeTimeout: a key with no new data must still be revisited
-      // when the watermark passes its buffered events (NoTimeout would
-      // only fire on new input for the key and strand the buffer)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[Event], state: GroupState[SortBuffer]) =>
-          val buffered = state.getOption.map(_.events).getOrElse(Seq.empty) ++ rows
-          val sorted = buffered.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          val wm = state.getCurrentWatermarkMs()
-          val (ripe, young) = sorted.partition(_.ts.getTime <= wm)
-          if (young.isEmpty) state.remove()
-          else {
-            state.update(SortBuffer(young))
-            // wake when the watermark reaches the earliest buffered event
-            state.setTimeoutTimestamp(math.max(young.head.ts.getTime, wm + 1))
-          }
-          ripe.iterator
-      }
+    // a watermark delay gives EventTimeTimeout: a key with no new data
+    // is still revisited when the watermark passes its buffered events
+    perUser[SortBuffer, Event](events, Some(watermarkDelay)) { (_, rows, prior, wm) =>
+      val sorted = (prior.map(_.events).getOrElse(Seq.empty) ++ rows).sorted(eventOrder)
+      val (ripe, young) = sorted.partition(_.ts.getTime <= wm.get)
+      // wake when the watermark reaches the earliest buffered event
+      Keyed(Some(SortBuffer(young)).filter(_.events.nonEmpty), ripe, young.headOption.map(_.ts.getTime))
+    }
   }
 
   /** Async I/O analog (reference AsyncDataStream): per-partition
@@ -175,22 +147,19 @@ object StreamingOver {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     ds.mapPartitions { rows =>
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism,
+        new com.google.common.util.concurrent.ThreadFactoryBuilder()
+          .setNameFormat("graft-async-lookup-%d").setDaemon(true).build())
+      // the task's end, not the iterator's, ends the pool: a consumer
+      // that stops early (limit) or a lookup that throws never drains it
+      org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => pool.shutdownNow())
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val out = rows
+      rows
         .grouped(parallelism * 4)
         .flatMap { batch =>
           val futs = batch.map(t => Future(lookup(t)))
           futs.map(f => Await.result(f, Duration.Inf))
         }
-      new Iterator[U] {
-        def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h) pool.shutdown()
-          h
-        }
-        def next(): U = out.next()
-      }
     }
   }
 }

@@ -21,10 +21,12 @@ import java.sql.Timestamp
   *
   * Spark-first shape: the two sides are union-tagged into one keyed
   * stream; `flatMapGroupsWithState(Append, EventTimeTimeout)` holds
-  * the per-key buffers. State is O(in-flight rows within the
-  * watermark horizon) per key — the same bound the reference
-  * operator's MapState carries — so a 1000-executor run partitions
-  * cleanly by key with no global structure.
+  * the per-key buffers and stores them through the keyed-state
+  * driver's drop-or-wake rule, [[StreamingOps.Keyed]]. State is
+  * O(in-flight rows within the watermark horizon) per key — the same
+  * bound the reference operator's MapState carries — so a
+  * 1000-executor run partitions cleanly by key with no global
+  * structure.
   */
 object TemporalJoin {
 
@@ -112,17 +114,11 @@ object TemporalJoin {
           val cutIdx = vs.lastIndexWhere(_._1 <= wm)
           val keptVersions = if (cutIdx <= 0) vs else vs.drop(cutIdx)
 
-          if (pending.isEmpty && keptVersions.isEmpty) state.remove()
-          else {
-            state.update(Buf(pending, keptVersions))
-            // wake when the watermark reaches the earliest pending
-            // probe so it flushes even if the key goes quiet
-            if (pending.nonEmpty) {
-              val next = pending.map(_._1).min
-              state.setTimeoutTimestamp(math.max(next, wm + 1))
-            }
-          }
-          out.iterator
+          // wake when the watermark reaches the earliest pending probe
+          // so it flushes even if the key goes quiet
+          StreamingOps.Keyed(
+            Some(Buf(pending, keptVersions)).filter(_ => pending.nonEmpty || keptVersions.nonEmpty),
+            out, pending.map(_._1).minOption).store(state)
       }(Encoders.product[Buf], Encoders.product[Joined])
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.streaming._
   * (`transformWithState`, Spark 4) — the modern face of the reference's
   * KeyedProcessFunction (flink-streaming-java
   * .../functions/KeyedProcessFunction.java:38-70: open() state
-  * registration, processElement, onTimer) beside the
-  * flatMapGroupsWithState implementations in StreamingOps. The v2 API
+  * registration, processElement, onTimer) beside the v1 keyed-state
+  * driver, StreamingOps.perUser. The v2 API
   * maps the reference's state/timer model 1:1 — named ValueState /
   * ListState / MapState registered per processor (vs one opaque state
   * object in GroupState), per-key event-time timers with an explicit

@@ -3,7 +3,9 @@ package graft
 import graft.plans.LookupJoin
 import graft.streaming.{ChangelogOps, StreamingOps}
 import graft.streaming.StreamingOps.Event
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryException}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,6 +50,33 @@ class ChangelogLookupSpec extends AnyFunSuite {
         .map(r => (r.getAs[Long]("user_id"), r.getAs[Double]("value"))).toMap
       assert(s2 == Map(100L -> 9.0, 300L -> 3.0))
     } finally q.stop()
+  }
+
+  test("changelog sinks fail the batch on an unreadable target and keep its files") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val sinks = Seq[(String, (DataFrame, String) => DataStreamWriter[Row])](
+      "upsert" -> (ChangelogOps.upsertSink(_, _, Seq("user_id"), Seq("event_id"))),
+      "scd2" -> (ChangelogOps.scd2Sink(_, _, Seq("user_id"), "event_id")))
+    sinks.foreach { case (name, sink) =>
+      val path = TempPaths.dir(s"graft_${name}_garbage").toString + "/target"
+      val in = MemoryStream[Event]
+      val changelog = in.toDF().select(col("user_id"), col("event_id"), col("value"),
+        lit(ChangelogOps.UpdateAfter).as(ChangelogOps.ChangeCol))
+      val q = sink(changelog, path).start()
+      try {
+        in.addData(Event(1, ts(0), 100, "up", 1.0))
+        q.processAllAvailable()
+        val parts = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(parts.nonEmpty, name)
+        val garbage = "not a parquet file".getBytes("UTF-8")
+        parts.foreach(f => java.nio.file.Files.write(f.toPath, garbage))
+        in.addData(Event(2, ts(1), 200, "up", 2.0))
+        intercept[StreamingQueryException](q.processAllAvailable())
+        assert(parts.forall(f => f.exists && java.util.Arrays.equals(
+          java.nio.file.Files.readAllBytes(f.toPath), garbage)), name)
+      } finally q.stop()
+    }
   }
 
   test("dropUpdateBefore removes only -U rows") {

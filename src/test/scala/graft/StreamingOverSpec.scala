@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
 
+object StreamingOverSpec {
+  /** Names of the threads the async lookups ran on (local mode: the
+    * executor shares this JVM).
+    */
+  val lookupThreads: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+}
+
 class StreamingOverSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
@@ -207,5 +214,25 @@ class StreamingOverSpec extends AnyFunSuite {
       .asyncMapPartitions(ds, parallelism = 4)(x => x * 2)
       .collect()
     assert(out.sorted.toSeq == (0L until 100L).map(_ * 2))
+  }
+
+  test("async mapPartitions ends its lookup pool when the consumer stops early") {
+    import spark.implicits._
+    StreamingOverSpec.lookupThreads.clear()
+    val out = StreamingOver
+      .asyncMapPartitions(spark.range(1000).as[Long], parallelism = 4) { x =>
+        StreamingOverSpec.lookupThreads.add(Thread.currentThread().getName)
+        x * 2
+      }
+      .limit(1)
+      .collect()
+    assert(out.length == 1)
+    val names = StreamingOverSpec.lookupThreads.toArray(Array.empty[String]).toSet
+    assert(names.nonEmpty && names.forall(_.startsWith("graft-async-lookup-")), s"$names")
+    def alive = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && names(t.getName))
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (alive.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(alive.isEmpty, s"still alive: ${alive.map(_.getName).mkString(", ")}")
   }
 }
